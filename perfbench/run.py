@@ -8,14 +8,20 @@ workload's input from the seed, runs the harness (perfbench.Bench) at
 local[<cores>] as a closed loop of timed engine calls, checks every output,
 and prints as its last line one JSON object: correct, attempted, failed and
 the metrics BENCHMARK.json names (end-to-end with --trace 0, per-layer with
---trace 1). Exits 1 if any check failed, 2 if it could not run.
+--trace 1). Exits 1 if any check failed, 2 if it could not run. A harness
+that outlives its time limit is killed and reported as a failed run (exit 1,
+"correct": false), so a much slower engine shows as a failure, not as a run
+that could not start.
 
 --tiny shrinks every input (for selftest.py); --corrupt damages one output
-after each timed call, which the checks must catch.
+after each timed call, which the checks must catch. --tables DIR runs the
+queries over existing tables instead of generated ones, to compare the
+generator with them (tablecmp.py).
 """
 import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -29,7 +35,11 @@ sys.path.insert(0, HERE)
 import build  # noqa: E402
 
 WORKLOADS = ("dedup", "queries")
-JVM_TIMEOUT_S = 170
+# A run must end within 180 s of its start, build excluded. The harness gets
+# what is left after the build and the table generator, less the time the
+# output checks need.
+RUN_LIMIT_S = 175
+CHECK_RESERVE_S = {"dedup": 5, "queries": 25}
 ADD_OPENS = [
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
     "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
@@ -71,6 +81,18 @@ def oracle_check(tables, pass_dir, qout):
     return r.returncode == 0, bad
 
 
+def timed_out(bench, a, limit, progress):
+    """The harness outlived its limit: every unit it started counts as
+    failed, and no metric was measured."""
+    attempted = 1 + sum(1 for line in progress if re.match(r"\[perfbench\] unit \d+ wall=", line))
+    print(f"[perfbench] harness killed after {limit:.0f} s; {attempted} unit(s) counted as failed")
+    layer = "per_layer" if a.trace else "end_to_end"
+    print(json.dumps({"correct": False, "attempted": attempted, "failed": attempted,
+                      "metrics": {m["name"]: {"value": 0.0, "unit": m["unit"]}
+                                  for m in bench[layer]}}))
+    sys.exit(1)
+
+
 def main():
     p = argparse.ArgumentParser()
     p.add_argument("--workload", required=True, choices=WORKLOADS)
@@ -78,6 +100,7 @@ def main():
     p.add_argument("--seconds", type=float, default=10)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--tiny", action="store_true")
+    p.add_argument("--tables")
     p.add_argument("--corrupt", action="store_true")
     a = p.parse_args()
     bench = spec()
@@ -86,6 +109,7 @@ def main():
         classes = build.build()
     except build.BuildError as e:
         fail(str(e))
+    t_start = time.perf_counter()
     jars = build.spark_jars()
     work = os.path.join(build.build_dir(), "work", a.workload)
     shutil.rmtree(work, ignore_errors=True)
@@ -105,29 +129,32 @@ def main():
            + (["--tiny"] if a.tiny else []) + (["--corrupt"] if a.corrupt else []))
     tables = None
     if a.workload == "queries":
-        tables, gen_s = gen_tables(work, a.tiny, a.seed)
+        tables, gen_s = (os.path.abspath(a.tables), 0.0) if a.tables else \
+            gen_tables(work, a.tiny, a.seed)
         cmd += ["--tables", tables, "--pre-setup-cpu-s", str(gen_s)]
 
     t_jvm = time.perf_counter()
+    limit = RUN_LIMIT_S - CHECK_RESERVE_S[a.workload] - (t_jvm - t_start)
     log_path = os.path.join(work, "jvm.log")
     with open(log_path, "w") as log:
         proc = subprocess.Popen(cmd, stdout=log, stderr=subprocess.STDOUT, cwd=work)
         try:
-            rc = proc.wait(timeout=JVM_TIMEOUT_S)
+            rc = proc.wait(timeout=limit)
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
             rc = "timeout"
+    with open(log_path, errors="replace") as f:
+        log_text = f.read()
+    progress = [line for line in log_text.splitlines() if line.startswith("[perfbench]")]
+    for line in progress:
+        print(line)
+    if rc == "timeout":
+        timed_out(bench, a, limit, progress)
     if rc != 0 or not os.path.exists(out):
-        with open(log_path, errors="replace") as f:
-            tail = f.read()[-3000:]
-        fail(f"harness exit {rc}\n{tail}")
+        fail(f"harness exit {rc}\n{log_text[-3000:]}")
     with open(out) as f:
         res = json.load(f)
-    with open(log_path, errors="replace") as f:
-        for line in f:
-            if line.startswith("[perfbench]"):
-                print(line.rstrip())
 
     units = res["units"]
     t_check = time.perf_counter()
@@ -148,18 +175,18 @@ def main():
     def med(key):
         return statistics.median(u[key] for u in good) if good else 0.0
 
-    wall, cpu = med("wall_s"), med("cpu_s")
+    wall, net, cpu = med("wall_s"), med("net_wall_s"), med("cpu_s")
     e2e = {
         "setup_s": res["setup_s"],
+        "wall_s": net,
+        "docs_per_s": res["input_docs"] / net if net > 0 else 0.0,
         "cpu_s": cpu,
-        "docs_per_cpu_s": res["input_docs"] / cpu if cpu > 0 else 0.0,
         "dup_pair_recall": med("recall"),
         "store_bytes_per_input_byte": med("store_ratio"),
         "ok_frac": len(good) / attempted,
     }
     print(f"[perfbench] {a.workload} seed={a.seed} units={attempted} failed={failed} "
-          f"n={len(good)} median wall_s={wall:.4f} cpu_s={cpu:.4f} "
-          f"docs_per_s={res['input_docs'] / wall if wall > 0 else 0.0:.4f} "
+          f"n={len(good)} median wall_s={wall:.4f} net_wall_s={net:.4f} cpu_s={cpu:.4f} "
           f"setup_s={res['setup_s']:.3f} jvm_wall_s={t_check - t_jvm:.1f} "
           f"checks_wall_s={time.perf_counter() - t_check:.1f}")
     if a.trace:

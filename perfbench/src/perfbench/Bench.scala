@@ -46,7 +46,9 @@ object Bench {
     val work = opt("--work").getOrElse(sys.error("--work is required"))
     val out = opt("--out").getOrElse(sys.error("--out is required"))
     val preSetupCpu = opt("--pre-setup-cpu-s").map(_.toDouble).getOrElse(0.0)
-    val golden = opt("--golden").filter(p => Files.exists(Paths.get(p)))
+    val tiny = flags.contains("--tiny")
+    // the golden values are for the full-size inputs
+    val golden = opt("--golden").filter(p => !tiny && Files.exists(Paths.get(p)))
       .map(p => goldenFor(Files.readString(Paths.get(p)), workload, seed)).getOrElse(Map.empty)
     val cores = Runtime.getRuntime.availableProcessors()
 
@@ -58,8 +60,8 @@ object Bench {
     val tracer = new Tracer(trace, s"$workload-$seed")
     val probe = if (trace) Some(new EngineProbe(spark, cores)) else None
     probe.foreach(_.attach())
-    val ctx = Ctx(spark, seed, work, cores, flags.contains("--tiny"), flags.contains("--corrupt"),
-      tracer, probe, golden)
+    val ctx = Ctx(spark, seed, work, cores, tiny, flags.contains("--corrupt"), tracer, probe,
+      golden)
     val w: Workload = workload match {
       case "dedup" => new Dedup(ctx)
       case "queries" => new Queries(ctx, opt("--tables").getOrElse(sys.error("--tables is required")))
@@ -70,19 +72,23 @@ object Bench {
     // Set-up time is CPU seconds of this JVM (plus the table generator's):
     // wall time on a shared host also counts the CPU time other tenants take.
     val sessionCpu = Store.cpuS - c0
+    val t1 = System.nanoTime()
     val prep = (1 to 3).map { _ =>
       val c = Store.cpuS
       w.prepareInput()
       Store.cpuS - c
     }.sorted
+    val t2 = System.nanoTime()
     val c1 = Store.cpuS
     w.warmUp()
     val docs = w.inputDocs
     val warmCpu = Store.cpuS - c1
     val setupS = preSetupCpu + sessionCpu + prep(1) + warmCpu
+    val t3 = System.nanoTime()
     System.err.println(f"[perfbench] setup_s=$setupS%.3f (cpu) pre=$preSetupCpu%.3f " +
       f"session=$sessionCpu%.3f prep=${prep.map(p => f"$p%.3f").mkString("/")} " +
-      f"warm-up=$warmCpu%.3f setup_wall_s=${(System.nanoTime() - t0) / 1e9}%.3f")
+      f"warm-up=$warmCpu%.3f setup_wall_s=${(t3 - t0) / 1e9}%.3f (session/prep/warm-up " +
+      f"${(t1 - t0) / 1e9}%.1f/${(t2 - t1) / 1e9}%.1f/${(t3 - t2) / 1e9}%.1f)")
 
     val outcomes = scala.collection.mutable.ArrayBuffer.empty[Outcome]
     val tm = System.nanoTime()
@@ -95,7 +101,8 @@ object Bench {
         Outcome.failed(s"threw: $e")
       })
       val o = outcomes.last
-      System.err.println(s"[perfbench] unit $i wall=${o.wallS} cpu=${o.cpuS} ok=${o.ok} ${o.note}")
+      System.err.println(s"[perfbench] unit $i wall=${o.wallS} net_wall=${o.netWallS} cpu=${o.cpuS} " +
+        s"ok=${o.ok} ${o.note}")
     }
     if (trace) {
       Files.createDirectories(Paths.get(s"$work/trace"))
@@ -111,7 +118,8 @@ object Bench {
       "trace.wall_s" -> median(good.map(_.wallS).toSeq),
       "trace.cpu_s" -> median(good.map(_.cpuS).toSeq)))
     val units = outcomes.map { o =>
-      s"""{"wall_s": ${Json.num(o.wallS)}, "cpu_s": ${Json.num(o.cpuS)}, "ok": ${o.ok}, """ +
+      s"""{"wall_s": ${Json.num(o.wallS)}, "net_wall_s": ${Json.num(o.netWallS)}, """ +
+        s""""cpu_s": ${Json.num(o.cpuS)}, "ok": ${o.ok}, """ +
         s""""recall": ${Json.num(o.recall)}, """ +
         s""""store_ratio": ${Json.num(o.storeRatio)}, "note": ${Json.str(o.note)}}"""
     }

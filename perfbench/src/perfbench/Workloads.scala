@@ -19,13 +19,15 @@ final case class Ctx(
     corrupt: Boolean, tracer: Tracer, probe: Option[EngineProbe], golden: Map[String, String])
 
 /** One timed call and what its checks found. A unit that threw or failed a
-  * check is kept for `attempted`/`failed` but its wall is never used. */
+  * check is kept for `attempted`/`failed` but its wall is never used.
+  * `netWallS` is the wall with the host's stolen share taken out (`Steal`). */
 final case class Outcome(
-    wallS: Double, cpuS: Double, ok: Boolean, recall: Double, storeRatio: Double,
-    layer: Map[String, Double], note: String)
+    wallS: Double, netWallS: Double, cpuS: Double, ok: Boolean, recall: Double,
+    storeRatio: Double, layer: Map[String, Double], note: String)
 
 object Outcome {
-  def failed(note: String): Outcome = Outcome(0.0, 0.0, ok = false, 0.0, 0.0, Map.empty, note)
+  def failed(note: String): Outcome =
+    Outcome(0.0, 0.0, 0.0, ok = false, 0.0, 0.0, Map.empty, note)
 }
 
 abstract class Workload(val ctx: Ctx) {
@@ -185,17 +187,44 @@ object Store {
   /** CPU seconds used by this JVM, all threads. */
   def cpuS: Double = os.getProcessCpuTime / 1e9
 
-  final case class Timed[T](result: T, wallS: Double, cpuS: Double, startMs: Long, startNs: Long,
-      span: Int)
+  final case class Timed[T](result: T, wallS: Double, cpuS: Double, stolen: Double,
+      startMs: Long, startNs: Long, span: Int) {
+    def netWallS: Double = wallS * (1.0 - stolen)
+  }
 
-  /** Time one engine call: wall, process CPU, and its span. */
+  /** Time one engine call: wall, process CPU, stolen share, and its span. */
   def timed[T](ctx: Ctx, name: String)(f: => T): Timed[T] = {
     val startMs = System.currentTimeMillis()
+    val s0 = Steal.ticks()
     val c0 = cpuS
     val t0 = System.nanoTime()
     var spanId = -1
     val r = ctx.tracer.span(name) { spanId = ctx.tracer.current; f }
-    Timed(r, (System.nanoTime() - t0) / 1e9, cpuS - c0, startMs, t0, spanId)
+    Timed(r, (System.nanoTime() - t0) / 1e9, cpuS - c0, Steal.share(s0, Steal.ticks()),
+      startMs, t0, spanId)
+  }
+}
+
+/** The host's stolen time, from the machine-wide "cpu" line of /proc/stat:
+  * ticks a vCPU wanted to run but the hypervisor gave to another tenant.
+  * `share` is stolen ÷ (busy + stolen) over an interval, so wall × (1 − share)
+  * is the interval as it would have run with all the CPU it asked for. Both
+  * a latency-bound call (one busy core) and a CPU-bound one (all cores) lose
+  * that share of their running time. Reads 0 where /proc/stat is missing. */
+object Steal {
+  /** (busy, stolen) ticks: user + nice + system + irq + softirq, and steal. */
+  def ticks(): (Long, Long) =
+    try {
+      val f = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+")
+      require(f(0) == "cpu" && f.length > 8)
+      val t = f.drop(1).map(_.toLong)
+      (t(0) + t(1) + t(2) + t(5) + t(6), t(7))
+    } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
+
+  def share(from: (Long, Long), to: (Long, Long)): Double = {
+    val busy = to._1 - from._1
+    val stolen = to._2 - from._2
+    if (busy + stolen <= 0) 0.0 else stolen.toDouble / (busy + stolen)
   }
 }
 
@@ -303,8 +332,9 @@ final class Dedup(c: Ctx) extends Workload(c) {
     val ratio = written.toDouble / (Files2.bytes(in("base")) + 2 * Files2.bytes(in("inc")))
     val ok = recall >= 0.99 && oneBoilerCluster && stable && same && incRecall >= 0.99 &&
       rep.newDocs == nInc
-    Outcome(buildWall + incWall, build.cpuS + incCall.cpuS, ok, math.min(recall, incRecall),
-      ratio, layer,
+    Outcome(buildWall + incWall, build.netWallS + incCall.netWallS, build.cpuS + incCall.cpuS, ok,
+      math.min(recall, incRecall), ratio, layer + ("trace.steal_share" ->
+        (1.0 - (build.netWallS + incCall.netWallS) / (buildWall + incWall))),
       f"build_s=$buildWall%.3f inc_s=$incWall%.3f recall=$recall inc_recall=$incRecall " +
         s"boilerplate_clusters=${boilerClusters.size} inc_equals_build=$same fingerprint=$fp stable=$stable")
   }
@@ -362,6 +392,7 @@ final class Queries(c: Ctx, tables: String) extends Workload(c) {
     val recall = if (exact.isEmpty) 1.0 else exact.count(lsh).toDouble / exact.size
     val layer = engine ++ walls.map { case (n, w) => s"q.$n.wall_s" -> w }
     val ratio = Files2.bytes(out).toDouble / Files2.bytes(tables)
-    Outcome(wall, timed.cpuS, ok = true, recall, ratio, layer, s"recall=$recall pass_dir=$out")
+    Outcome(wall, wall * (1.0 - timed.stolen), timed.cpuS, ok = true, recall, ratio,
+      layer + ("trace.steal_share" -> timed.stolen), s"recall=$recall pass_dir=$out")
   }
 }
