@@ -292,139 +292,67 @@ object GraftExpressions {
   private def lit2Long(e: Expression): Long = e.eval().asInstanceOf[Number].longValue()
   private def lit2Str(e: Expression): String = e.eval().toString
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    // Register-once guard (VERDICT r6 #5): register() is called defensively
-    // at every entry point, and the ~20 createOrReplaceTempFunction calls
-    // each log a "function replaced" warning — thousands of lines per
-    // bench/test run drowning real output. The sentinel is the LAST name
-    // this method registers, so a registry that has it has the full set
-    // (registration is driver-side and never partial); new functions must
-    // keep the sentinel last or update it.
-    if (registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_rep_stats"))) return
-    registry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      exprs => MinHashSignatureExpr(exprs(0), lit2Int(exprs(1)), lit2Long(exprs(2))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_band_hashes",
-      exprs => BandHashesExpr(exprs(0), lit2Int(exprs(1)), lit2Int(exprs(2)), lit2Long(exprs(3))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      exprs => ShingleHashesExpr(exprs(0), lit2Int(exprs(1)), lit2Long(exprs(2)),
-        charMode = false),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_char_shingle_hashes",
-      exprs => ShingleHashesExpr(exprs(0), lit2Int(exprs(1)), lit2Long(exprs(2)),
-        charMode = true),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_url_id",
-      exprs => UrlIdExpr(exprs(0), lit2Long(exprs(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_rehash_id",
-      exprs => RehashIdExpr(exprs(0), exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_jaccard_sorted",
-      exprs => JaccardSortedExpr(exprs(0), exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_lcs_len",
-      exprs => LcsLenExpr(exprs(0), exprs(1)),
-      "built-in")
+  /** Every graft_* function: (name, builder). */
+  private[graft] val Builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_minhash_sig" ->
+      (e => MinHashSignatureExpr(e(0), lit2Int(e(1)), lit2Long(e(2)))),
+    "graft_band_hashes" ->
+      (e => BandHashesExpr(e(0), lit2Int(e(1)), lit2Int(e(2)), lit2Long(e(3)))),
+    "graft_shingle_hashes" ->
+      (e => ShingleHashesExpr(e(0), lit2Int(e(1)), lit2Long(e(2)), charMode = false)),
+    "graft_char_shingle_hashes" ->
+      (e => ShingleHashesExpr(e(0), lit2Int(e(1)), lit2Long(e(2)), charMode = true)),
+    "graft_url_id" -> (e => UrlIdExpr(e(0), lit2Long(e(1)))),
+    "graft_rehash_id" -> (e => RehashIdExpr(e(0), e(1))),
+    "graft_jaccard_sorted" -> (e => JaccardSortedExpr(e(0), e(1))),
+    "graft_lcs_len" -> (e => LcsLenExpr(e(0), e(1))),
     // 3-arg form = offset 0; 4-arg form = (v, tag, off, n) for multi-table
     // plane layouts (table t reads global planes [t·b, (t+1)·b))
-    registry.createOrReplaceTempFunction(
-      "graft_plane_bits",
-      exprs =>
-        if (exprs.length == 4)
-          PlaneBitsExpr(exprs(0), lit2Str(exprs(1)), lit2Int(exprs(2)), lit2Int(exprs(3)))
-        else PlaneBitsExpr(exprs(0), lit2Str(exprs(1)), 0, lit2Int(exprs(2))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_plane_dots",
-      exprs =>
-        if (exprs.length == 4)
-          PlaneDotsExpr(exprs(0), lit2Str(exprs(1)), lit2Int(exprs(2)), lit2Int(exprs(3)))
-        else PlaneDotsExpr(exprs(0), lit2Str(exprs(1)), 0, lit2Int(exprs(2))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_cosq",
-      exprs => CosineQuantizedExpr(exprs(0), exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_md5_minhash",
-      exprs => Md5MinHashExpr(exprs(0), lit2Int(exprs(1))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_md5_minhash_text",
-      exprs => Md5MinHashTextExpr(exprs(0), lit2Int(exprs(1)), lit2Int(exprs(2))),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_simhash56",
-      exprs => SimHash56Expr(exprs(0)),
-      "built-in")
+    "graft_plane_bits" -> (e =>
+      if (e.length == 4) PlaneBitsExpr(e(0), lit2Str(e(1)), lit2Int(e(2)), lit2Int(e(3)))
+      else PlaneBitsExpr(e(0), lit2Str(e(1)), 0, lit2Int(e(2)))),
+    "graft_plane_dots" -> (e =>
+      if (e.length == 4) PlaneDotsExpr(e(0), lit2Str(e(1)), lit2Int(e(2)), lit2Int(e(3)))
+      else PlaneDotsExpr(e(0), lit2Str(e(1)), 0, lit2Int(e(2)))),
+    "graft_cosq" -> (e => CosineQuantizedExpr(e(0), e(1))),
+    "graft_md5_minhash" -> (e => Md5MinHashExpr(e(0), lit2Int(e(1)))),
+    "graft_md5_minhash_text" ->
+      (e => Md5MinHashTextExpr(e(0), lit2Int(e(1)), lit2Int(e(2)))),
+    "graft_simhash56" -> (e => SimHash56Expr(e(0))),
     // 1-arg form = the engine-wide 1e3 embedding quantum
-    registry.createOrReplaceTempFunction(
-      "graft_quantize",
-      exprs =>
-        if (exprs.length == 2) QuantizeExpr(exprs(0), lit2Long(exprs(1)))
-        else QuantizeExpr(exprs(0), 1000L),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotLongExpr(exprs(0), exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_hamming_sum",
-      exprs => HammingSumExpr(exprs(0), exprs(1)),
-      "built-in")
+    "graft_quantize" -> (e =>
+      if (e.length == 2) QuantizeExpr(e(0), lit2Long(e(1))) else QuantizeExpr(e(0), 1000L)),
+    "graft_dot" -> (e => DotLongExpr(e(0), e(1))),
+    "graft_hamming_sum" -> (e => HammingSumExpr(e(0), e(1))),
     // centroids + norms are plan-time literal arrays (foldability checked by
     // the expression's own type check, like graft_lex_count)
-    registry.createOrReplaceTempFunction(
-      "graft_ivf_argmax",
-      exprs => IvfArgmaxExpr(exprs(0), exprs(1), exprs(2)),
-      "built-in")
+    "graft_ivf_argmax" -> (e => IvfArgmaxExpr(e(0), e(1), e(2))),
     // lexicon = plan-time literal array of words (foldability is checked by
     // the expression's own type check — an analysis error, not a builder
     // crash, when a column is passed; ADVICE r4)
-    registry.createOrReplaceTempFunction(
-      "graft_lex_count",
-      exprs => LexCountExpr(exprs(0), exprs(1)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_len_sum",
-      exprs => LenSumExpr(exprs(0)),
-      "built-in")
+    "graft_lex_count" -> (e => LexCountExpr(e(0), e(1))),
+    "graft_len_sum" -> (e => LenSumExpr(e(0))),
     // winnowing fingerprints: md5 gate form (3-arg) and seeded rolling-hash
     // production form (4-arg)
-    registry.createOrReplaceTempFunction(
-      "graft_winnow_md5",
-      exprs => WinnowExpr(exprs(0), lit2Int(exprs(1)), lit2Int(exprs(2)), 0L, md5Mode = true),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_winnow",
-      exprs => WinnowExpr(exprs(0), lit2Int(exprs(1)), lit2Int(exprs(2)), lit2Long(exprs(3)),
-        md5Mode = false),
-      "built-in")
+    "graft_winnow_md5" ->
+      (e => WinnowExpr(e(0), lit2Int(e(1)), lit2Int(e(2)), 0L, md5Mode = true)),
+    "graft_winnow" ->
+      (e => WinnowExpr(e(0), lit2Int(e(1)), lit2Int(e(2)), lit2Long(e(3)), md5Mode = false)),
     // word-gram string arrays + the fused per-row repetition statistics
     // (sub-document dedup / Gopher repetition signals — round 6)
-    registry.createOrReplaceTempFunction(
-      "graft_word_ngrams",
-      exprs => WordGramsExpr(exprs(0), lit2Int(exprs(1)), blockMode = false),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_word_blocks",
-      exprs => WordGramsExpr(exprs(0), lit2Int(exprs(1)), blockMode = true),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_rep_stats",
-      exprs => RepStatsExpr(exprs(0), lit2Int(exprs(1)), lit2Int(exprs(2))),
-      "built-in")
+    "graft_word_ngrams" -> (e => WordGramsExpr(e(0), lit2Int(e(1)), blockMode = false)),
+    "graft_word_blocks" -> (e => WordGramsExpr(e(0), lit2Int(e(1)), blockMode = true)),
+    "graft_rep_stats" -> (e => RepStatsExpr(e(0), lit2Int(e(1)), lit2Int(e(2)))))
+
+  /** Registers each name the session does not already resolve. register()
+    * is called defensively at every entry point, and re-registering an
+    * existing name logs a "function replaced" warning — thousands of lines
+    * per bench/test run (VERDICT r6 #5). Checking every name, not one
+    * sentinel, also restores a set that lost any single member. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    for ((name, build) <- Builders
+        if !registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, build, "built-in")
   }
 }

@@ -5,13 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.TableIO
 
-/** Append-only inc-k snapshot directories for the RETRIEVAL stores
-  * ([[IvfIndex]]/[[MipsIndex]]) — the [[IncrementalDedup]] increment layout
-  * (strict `inc-<k>` naming, gap-free 1..k, manifest-complete = committed,
-  * tmp-dir + atomic rename commit, loud lost-race) generalized over the
-  * store's stage list. IncrementalDedup keeps its own copy because its
-  * commit is interleaved with pair/cluster union writes; the semantics are
-  * deliberately identical. */
+/** Append-only inc-k snapshot directories — the ONE implementation of the
+  * increment layout shared by all three stores ([[IncrementalDedup]],
+  * [[IvfIndex]], [[MipsIndex]]): strict `inc-<k>` naming, gap-free 1..k,
+  * manifest-complete = committed, tmp-dir + atomic rename commit, loud
+  * lost-race. Each store supplies its own stage list. */
 private[pipeline] object IncDirs {
 
   /** Committed inc dirs in order, with THREE fail-fast gates:
@@ -63,29 +61,43 @@ private[pipeline] object IncDirs {
 
   /** Stage the writes into a unique tmp dir, then publish by atomic rename
     * to `inc-<k>` — concurrent readers can never observe an in-progress
-    * append. A lost commit race (someone else published inc-k first) is a
-    * LOUD error: the staged work is left in place for inspection and the
-    * caller must re-run (its anti-join will then see the winner's rows). */
-  def commit(baseDir: String, k: Int, what: String)(write: String => Unit): String = {
+    * append. The nonce makes the staging dir private to this call: with a
+    * fixed name, two appenders computing the same k would write into one
+    * directory and the winner could publish stages from both (ADVICE r4).
+    * A lost commit race (another appender published inc-k first, before
+    * the exists() check or between it and the rename) is a LOUD error. The
+    * staged work must be recomputed against the winner's rows anyway, so
+    * the staging dir is deleted (a kept one would only make [[warnStray]]
+    * warn forever); a failed cleanup rides along as suppressed rather than
+    * masking the race diagnosis (review r5). Returns the published dir and
+    * the value of `write`. */
+  def commit[A](baseDir: String, k: Int, what: String)(write: String => A): (String, A) = {
     val finalDir = s"$baseDir/inc-$k"
     val tmp = s"$finalDir.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
     Files.createDirectories(Paths.get(tmp))
-    write(tmp)
-    def lostRace(): Nothing =
-      throw new IllegalStateException(
-        s"$what append lost a commit race: $finalDir already exists (a " +
-          s"concurrent appender published first); staged work left at $tmp — " +
-          s"inspect/delete it and re-run (the re-run will see the winner's rows)")
+    val out = write(tmp)
+    def lostRace(): Nothing = {
+      val err = new IllegalStateException(
+        s"$what append lost a commit race: $finalDir was published by a " +
+          s"concurrent appender first; the staged work was discarded — re-run " +
+          s"(it must be recomputed against the newly committed state, not " +
+          s"renamed to inc-${k + 1})")
+      try {
+        val walk = Files.walk(Paths.get(tmp))
+        try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.delete(p))
+        finally walk.close()
+      } catch { case cleanup: Exception => err.addSuppressed(cleanup) }
+      throw err
+    }
     if (Files.exists(Paths.get(finalDir))) lostRace()
     try Files.move(Paths.get(tmp), Paths.get(finalDir))
     catch { case _: java.nio.file.FileAlreadyExistsException => lostRace() }
-    finalDir
+    (finalDir, out)
   }
 
   /** Shared append orchestration for the two-stage retrieval stores
     * ([[IvfIndex.append]]/[[MipsIndex.append]] both delegate here — the
-    * round-6 review found the scaffold copy-pasted, a third drift-prone
-    * shape next to IncrementalDedup's):
+    * round-6 review found the scaffold copy-pasted):
     *
     *  - quantize + cache the input ONCE; its count gives `dropped` without
     *    a second scan of the raw input relation;
@@ -142,8 +154,7 @@ private[pipeline] object IncDirs {
         val hv = CheckpointedDedup.chainHash(baseChain, s"${saltPrefix}_vectors",
           s"$k:v1:${StageRunner.fingerprintString(nNew, r.getLong(2))}")
         val h2 = CheckpointedDedup.chainHash(hv, s"${saltPrefix}_$secondStage", secondSalt)
-        var stages: Seq[CheckpointedDedup.StageResult] = Seq.empty
-        val incDir = commit(baseDir, k, what) { tmp =>
+        val (incDir, stages) = commit(baseDir, k, what) { tmp =>
           // The two stage writes are INDEPENDENT given the cached newVecs
           // (the second stage used to recompute from the first stage's
           // freshly WRITTEN parquet — a read-back of data already pinned in
@@ -164,13 +175,13 @@ private[pipeline] object IncDirs {
           // rename the tmp dir while a stage write is still in flight.
           // When both fail, the second failure rides along as suppressed —
           // throwing only e1 would hide e2's (possibly root-cause) error
-          // (the IncrementalDedup commit-cleanup convention).
+          // (the lost-race cleanup convention in commit).
           val e1 = scala.util.Try(Await.result(f1, Duration.Inf))
           val e2 = scala.util.Try(Await.result(f2, Duration.Inf))
           (e1, e2) match {
             case (scala.util.Failure(t1), scala.util.Failure(t2)) =>
               t1.addSuppressed(t2); throw t1
-            case _ => stages = Seq(e1.get, e2.get)
+            case _ => Seq(e1.get, e2.get)
           }
         }
         (incDir, nNew, dropped, stages)

@@ -1,9 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Rng
@@ -76,81 +72,27 @@ object IncrementalDedup {
   private def incHash(stage: String, salt: String): String =
     java.lang.Long.toHexString(Rng.hashString(0x494E4352L /* "INCR" */, s"$stage|$salt"))
 
-  private[pipeline] val Stages =
+  private[graft] val Stages =
     Seq("docs", "shingles", "signatures", "bands", "census",
       "candidates", "verified_pairs", "clusters")
-
-  /** Committed increment directories with their numbers, in order. STRICT
-    * `inc-<int>` name match — a stray `inc-1.bak` backup must be ignored, not
-    * brick every subsequent read with a NumberFormatException (ADVICE r3).
-    * The numbering must be GAP-FREE 1..k: a deleted middle increment would
-    * silently drop its docs from readAll while the latest pair/cluster
-    * tables still reference those ids (ADVICE r4) — fail fast naming the
-    * missing increment instead. */
-  private def numberedIncDirs(baseDir: String): Seq[(Int, String)] = {
-    val strict = "^inc-(\\d+)$".r
-    val base = Paths.get(baseDir)
-    val found =
-      if (!Files.exists(base)) Seq.empty
-      else {
-        val it = Files.list(base)
-        // ≤ 9 digits: a 10+-digit suffix (timestamp-suffixed stray) is
-        // never engine-written and .toInt on it would throw, bricking
-        // every store read (round-6 review; same guard in IncDirs).
-        // k ≥ 1: the engine numbers increments from 1, so a stray `inc-0`
-        // is ignored like any other non-engine name instead of tripping
-        // the gap check with a misleading "inc-1 missing" (ADVICE r7).
-        // Canonical-form check rejects leading-zero strays (`inc-01`)
-        // that parse to a valid number and would shadow/duplicate a real
-        // inc-k in the gap check (r7 review; same guard in IncDirs).
-        try it.iterator().asScala.toSeq
-          .map(_.getFileName.toString)
-          .collect { case n @ strict(k)
-              if k.length <= 9 && k.toInt >= 1 && k == k.toInt.toString =>
-            (k.toInt, s"$baseDir/$n") }
-          .sortBy(_._1)
-        finally it.close()
-      }
-    found.map(_._1).zipWithIndex.foreach { case (num, idx) =>
-      require(num == idx + 1,
-        s"increment sequence at $baseDir has a GAP: inc-${idx + 1} is missing " +
-          s"but inc-$num exists — its docs would silently vanish from readAll " +
-          s"while pair/cluster tables still reference their ids; restore " +
-          s"inc-${idx + 1} or rebuild from the base run")
-    }
-    found
-  }
-
-  private def incDirs(baseDir: String): Seq[String] = numberedIncDirs(baseDir).map(_._2)
-
-  /** An increment is COMMITTED only if every stage has a manifest (the
-    * manifest is each stage's atomic last write). A crash mid-increment
-    * leaves a partial inc-* dir; silently reading its `data` files would
-    * anti-join the partially-written docs away as "already crawled" without
-    * ever banding them — permanently excluding them from dedup (ADVICE r3).
-    * Callers must quarantine (rename/delete) the named directory to
-    * proceed. */
-  private def requireCommitted(incDir: String): Unit =
-    for (stage <- Stages)
-      require(
-        TableIO.readManifest(s"$incDir/$stage").isDefined,
-        s"increment at $incDir is PARTIAL (stage '$stage' has no manifest — " +
-          s"a crash mid-write?); quarantine or delete that directory to proceed")
-
-  /** incDirs, each verified committed — every read path goes through this,
-    * so a partial increment can never be silently consumed. */
-  private def committedIncDirs(baseDir: String): Seq[String] = {
-    val dirs = incDirs(baseDir)
-    dirs.foreach(requireCommitted)
-    dirs
-  }
 
   /** A full relation as of the latest increment: the base stage unioned
     * with every increment's stage table (for the text-width stages, which
     * are stored incrementally). */
   def readAll(spark: SparkSession, baseDir: String, stage: String): DataFrame =
-    committedIncDirs(baseDir).foldLeft(TableIO.read(spark, s"$baseDir/$stage"))(
+    unionOf(spark, baseDir, committedDirs(baseDir), stage)
+
+  private def committedDirs(baseDir: String): Seq[String] =
+    IncDirs.committed(baseDir, Stages, "increment").map(_._2)
+
+  private def unionOf(
+      spark: SparkSession, baseDir: String, incs: Seq[String], stage: String): DataFrame =
+    incs.foldLeft(TableIO.read(spark, s"$baseDir/$stage"))(
       (df, inc) => df.unionByName(TableIO.read(spark, s"$inc/$stage")))
+
+  private def latestOf(
+      spark: SparkSession, baseDir: String, incs: Seq[String], stage: String): DataFrame =
+    TableIO.read(spark, s"${incs.lastOption.getOrElse(baseDir)}/$stage")
 
   /** The per-increment telemetry table, read across schema GENERATIONS: the
     * round-5 rename (verified_pairs → pairs_adjudicated +
@@ -165,11 +107,8 @@ object IncrementalDedup {
 
   /** The authoritative pair/cluster tables: the LATEST increment's (each
     * increment writes the full union of these O(pairs)-sized relations). */
-  def latest(spark: SparkSession, baseDir: String, stage: String): DataFrame = {
-    val dirs = committedIncDirs(baseDir)
-    val dir = if (dirs.isEmpty) s"$baseDir/$stage" else s"${dirs.last}/$stage"
-    TableIO.read(spark, dir)
-  }
+  def latest(spark: SparkSession, baseDir: String, stage: String): DataFrame =
+    latestOf(spark, baseDir, committedDirs(baseDir), stage)
 
   /** The store-consistency gate, shared by [[run]] and by cross-operator
     * readers of the store ([[Decontaminate.pairsFromCheckpoints]]):
@@ -186,8 +125,11 @@ object IncrementalDedup {
     *    pass the chain check while old increments still hold the old hash
     *    family (review r4).
     *
-    * Returns the family tag. */
-  private[pipeline] def validateStore(baseDir: String, cfg: DedupConfig): String = {
+    * Returns the family tag and the committed increments (number, dir), in
+    * order — [[IncDirs.committed]] has already failed fast on a gap or a
+    * partial increment. */
+  private[pipeline] def validateStore(
+      baseDir: String, cfg: DedupConfig): (String, Seq[(Int, String)]) = {
     val baseDocs = TableIO.readManifest(s"$baseDir/docs").getOrElse(
       throw new IllegalArgumentException(
         s"base run at $baseDir is missing stage 'docs' — run CheckpointedDedup first"))
@@ -198,14 +140,15 @@ object IncrementalDedup {
           s"DIFFERENT config than the supplied cfg ($cfg) — a store consumer must " +
           s"use the base run's exact shingle/signature/banding config")
     val family = chain.toMap.apply("verified_pairs")
-    for (inc <- committedIncDirs(baseDir)) {
+    val incs = IncDirs.committed(baseDir, Stages, "increment")
+    for ((_, inc) <- incs) {
       val fam = TableIO.readManifest(s"$inc/signatures").flatMap(_.extra.get("family"))
       require(fam.contains(family),
         s"increment at $inc was written under a DIFFERENT config family " +
           s"(${fam.getOrElse("<none recorded>")} vs expected $family) — its " +
           s"signatures cannot be unioned with this run's hash family")
     }
-    family
+    (family, incs)
   }
 
   def run(
@@ -213,32 +156,18 @@ object IncrementalDedup {
       newPages: DataFrame,
       cfg: DedupConfig,
       baseDir: String): IncReport = {
-    val family = validateStore(baseDir, cfg)
-    // every prior increment is committed (validateStore failed fast on a
-    // partial or family-mixed one)
-    val priorInc = committedIncDirs(baseDir)
-    // k = max existing number + 1, NOT count + 1: the gap check above makes
-    // them equal today, but max+1 stays correct the moment the sequence rule
+    // ONE listing of the store: every prior increment is committed
+    // (validateStore failed fast on a partial, gapped or family-mixed one)
+    val (family, priorIncs) = validateStore(baseDir, cfg)
+    val priorInc = priorIncs.map(_._2)
+    // k = max existing number + 1, NOT count + 1: the gap check makes them
+    // equal today, but max+1 stays correct the moment the sequence rule
     // ever changes, and never collides with a surviving higher-numbered dir
     // (ADVICE r4)
-    val k = numberedIncDirs(baseDir).map(_._1).maxOption.getOrElse(0) + 1
-    val finalDir = s"$baseDir/inc-$k"
-    // WRITE-THEN-RENAME commit: all stages land in a UNIQUELY-NAMED tmp dir
-    // (invisible to the strict inc-\d+ reader regex), renamed to inc-<k>
-    // only after the last stage — so a concurrent readAll/latest can never
-    // observe an IN-PROGRESS increment and mistake it for a crashed one.
-    // The nonce makes the staging dir private to THIS run: with a fixed
-    // inc-<k>.tmp, two concurrent writers computing the same k would each
-    // delete-then-write the same directory and the winner could publish a
-    // dir containing stages from both runs (ADVICE r4). Losing the final
-    // rename race now fails loudly instead of corrupting.
-    val dir = s"$finalDir.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
+    val k = priorIncs.map(_._1).maxOption.getOrElse(0) + 1
 
     // abandoned staging dirs from crashed runs (each retry gets a fresh
-    // nonce, so they accumulate — the documented disk-exhaustion mode).
-    // One shared implementation with the retrieval stores (round-6 review:
-    // this block was a verbatim copy; only the COMMIT stays store-local
-    // because it interleaves with the pair/cluster union writes).
+    // nonce, so they accumulate — the documented disk-exhaustion mode)
     IncDirs.warnStray(baseDir)
 
     // the store was fully validated above (validateStore walked every
@@ -246,12 +175,8 @@ object IncrementalDedup {
     // per-call re-listing + re-validation that the PUBLIC readAll/latest
     // perform for external callers (review r5: run() triggered the full
     // O(increments × stages) manifest walk at ~8 separate call sites)
-    def readAllPre(stage: String): DataFrame =
-      priorInc.foldLeft(TableIO.read(spark, s"$baseDir/$stage"))(
-        (df, inc) => df.unionByName(TableIO.read(spark, s"$inc/$stage")))
-    def latestPre(stage: String): DataFrame =
-      TableIO.read(spark,
-        if (priorInc.isEmpty) s"$baseDir/$stage" else s"${priorInc.last}/$stage")
+    def readAllPre(stage: String): DataFrame = unionOf(spark, baseDir, priorInc, stage)
+    def latestPre(stage: String): DataFrame = latestOf(spark, baseDir, priorInc, stage)
     // explicit probe-shape cutover shared by every small-keyed join below:
     // a provably small key set broadcasts, anything else shuffle-probes
     // (NEVER an implicit broadcast of an unbounded side)
@@ -266,17 +191,6 @@ object IncrementalDedup {
     // wallMillis is the same full wall: TableIO.write's by-name wallMillis
     // parameter is evaluated AFTER the materializing data write.
     val verbose = java.lang.Boolean.getBoolean("graft.inc.verbose")
-    def stage(name: String, salt: String, extra: Map[String, String] = Map.empty)(
-        compute: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val df = compute
-      TableIO.write(df, s"$dir/$name", name, incHash(name, salt),
-        (System.nanoTime() - t0) / 1000000L,
-        extra = extra + ("family" -> family))
-      if (verbose)
-        println(f"[inc] $name%-15s ${(System.nanoTime() - t0) / 1e9}%7.2f s (incl. write)")
-      TableIO.read(spark, s"$dir/$name")
-    }
 
     // The increment input is scanned twice (fingerprint + docs stage).
     // An increment is SMALL by definition (a daily batch, not the corpus),
@@ -290,256 +204,247 @@ object IncrementalDedup {
     // invalidation-critical formula could silently fork the salts)
     val salt = s"inc$k:${StageRunner.inputFingerprint(newPagesC, "url", "text")}"
 
-    // 1. fresh docs only (byte-identical-text-per-url contract: a re-crawled
-    // url is the SAME document — dropped here, like dropDuplicates within a
-    // batch), with ids unique AND disjoint from every existing id
-    val newDocsDf = stage("docs", salt) {
-      val fresh = newPagesC.dropDuplicates("url")
-        .join(oldDocs.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
-      DocIds.assignDisjoint(fresh, oldDocs.select("id"))
-        .select(col("id"), col("url"), col("text"))
-    }
-    newPagesC.unpersist(blocking = false) // docs stage write materialized it
-
-    // 2-3. text-width stages for NEW rows only — the whole point. Codegen
-    // kernels, not UDFs: a daily increment barely notices, but a large
-    // BACKFILL increment is corpus-shaped and would pay interpreted-UDF
-    // boxing for every row (VERDICT r4 What's wrong #1).
-    graft.functions.GraftExpressions.register(spark)
-    val sh = Dedup.shingleHashes(cfg) _
-    val newShingles = stage("shingles", salt) {
-      newDocsDf.select(col("id"), sh(col("text")).as("shingles"))
-    }
-    val newSigs = stage("signatures", salt) {
-      newShingles.select(col("id"),
-        call_function("graft_minhash_sig",
-          col("shingles"), lit(cfg.numHashes), lit(cfg.seed)).as("sig"))
-    }
-
-    // 4. ADDITIVE band/census extension (VERDICT r4 #3). Bands are
-    // stateless per doc and census counts are additive, so the increment
-    // writes ONLY its own band rows + its delta census; the union census is
-    // needed ONLY for buckets the increment TOUCHES (old-old pairs are
-    // invariant: a bucket with no new member contributes nothing new, its
-    // in-cap pairs are already in the base candidates checkpoint, and an
-    // over-cap bucket can never come back under the cap). Touched-bucket
-    // census = Σ over snapshots (prev census ⋉ touched keys) + delta —
-    // O(new·bands) work against a columnar scan of the narrow census
-    // checkpoints, instead of the r4 form's O(union) re-banding of every
-    // signature + O(union·bands) census shuffle.
-    val nNewDocs = TableIO.readManifest(s"$dir/docs").map(_.rows).getOrElse(0L)
-    val newBands = stage("bands", salt)(Dedup.bands(newSigs, cfg))
-    val deltaCensusDf = Dedup.bucketCensus(newBands)
-
-    val prevCensusManifest = TableIO.readManifest(
-      if (priorInc.isEmpty) s"$baseDir/census" else s"${priorInc.last}/census")
-    val prevCapped = prevCensusManifest
-      .flatMap(_.extra.get("cappedBuckets")).map(_.toLong).getOrElse(0L)
-    val prevMaxBucket = prevCensusManifest
-      .flatMap(_.extra.get("maxBucketSize")).map(_.toLong).getOrElse(0L)
-
-    val bcKeyLimit = java.lang.Long.getLong("graft.inc.broadcastKeyLimit", 2000000L)
-    // an EMPTY increment (all re-crawls) writes empty bands/census stages
-    // and touches nothing — guarding here also keeps the explicit key
-    // broadcast below provably non-empty (the phantom-broadcast trap)
-    var touchedCaches: Seq[DataFrame] = Seq.empty
-    val (touchedCensus, cappedCum, maxBucketCum, touchedHot) =
-      if (nNewDocs == 0) (null: DataFrame, prevCapped, prevMaxBucket, 0L)
-      else {
-        // nNewDocs·bands bounds the touched-key count exactly, with no
-        // extra count() action; a daily increment broadcasts, a
-        // backfill-sized one falls back to a shuffle probe
-        val keys = probeSide(deltaCensusDf.select("band_hash"),
-          nNewDocs * cfg.bands <= bcKeyLimit)
-        val prevTouched = readAllPre("census").join(keys, "band_hash")
-          .groupBy("band_hash").agg(sum("bucket_size").as("bucket_size"))
-          .cache()
-        val touched = prevTouched.unionByName(deltaCensusDf)
-          .groupBy("band_hash").agg(sum("bucket_size").as("bucket_size"))
-          .cache()
-        touchedCaches = Seq(prevTouched, touched)
-        val prevHot = prevTouched.where(col("bucket_size") > cfg.maxBucket).count()
-        val nowStats = touched.agg(
-          count(when(col("bucket_size") > cfg.maxBucket, 1)).as("hot"),
-          max(col("bucket_size")).as("maxB")).first()
-        // buckets only grow: cumulative capped count = previous snapshot's
-        // + touched buckets that crossed the cap THIS increment
-        (touched,
-          prevCapped + (nowStats.getLong(0) - prevHot),
-          math.max(prevMaxBucket, nowStats.getLong(1)),
-          nowStats.getLong(0))
-      }
-    val deltaCensusOut = stage("census", salt, Map(
-      "cappedBuckets" -> cappedCum.toString,
-      "maxBucketSize" -> maxBucketCum.toString,
-      "saltWindow" -> cfg.saltWindow.toString))(deltaCensusDf)
-
-    val unionCand = {
-      // raw (undeduped) pair additions from this increment; ONE dedupPairs
-      // over oldCand ∪ additions at the end (the r4-#1 exchange-cut
-      // reasoning: the previous shape deduped the in-cap pairs and then
-      // re-exchanged + re-aggregated the whole relation again after the
-      // salted union)
-      val inCapNew: Option[DataFrame] =
-        if (nNewDocs == 0) None
-        else {
-          val gateCount =
-            touchedCensus.where(col("bucket_size").between(2, cfg.maxBucket)).count()
+    // All eight stages are written into IncDirs.commit's private staging
+    // dir and published by one rename: readers see the complete inc-<k> or
+    // nothing. A lost race must be re-run against the winner's docs —
+    // blindly retrying with k+1 would re-add them.
+    val (finalDir, (nNewDocs, nToVerify, nVerifiedTotal)) =
+      IncDirs.commit(baseDir, k, "increment") { dir =>
+        def stage(name: String, salt: String, extra: Map[String, String] = Map.empty)(
+            compute: => DataFrame): DataFrame = {
+          val t0 = System.nanoTime()
+          val df = compute
+          TableIO.write(df, s"$dir/$name", name, incHash(name, salt),
+            (System.nanoTime() - t0) / 1000000L,
+            extra = extra + ("family" -> family))
           if (verbose)
-            println(s"[inc] touched buckets in-cap (pair-eligible): $gateCount")
-          if (gateCount == 0) None
+            println(f"[inc] $name%-15s ${(System.nanoTime() - t0) / 1e9}%7.2f s (incl. write)")
+          TableIO.read(spark, s"$dir/$name")
+        }
+
+        // 1. fresh docs only (byte-identical-text-per-url contract: a re-crawled
+        // url is the SAME document — dropped here, like dropDuplicates within a
+        // batch), with ids unique AND disjoint from every existing id
+        val newDocsDf = stage("docs", salt) {
+          val fresh = newPagesC.dropDuplicates("url")
+            .join(oldDocs.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
+          DocIds.assignDisjoint(fresh, oldDocs.select("id"))
+            .select(col("id"), col("url"), col("text"))
+        }
+        newPagesC.unpersist(blocking = false) // docs stage write materialized it
+
+        // 2-3. text-width stages for NEW rows only — the whole point. Codegen
+        // kernels, not UDFs: a daily increment barely notices, but a large
+        // BACKFILL increment is corpus-shaped and would pay interpreted-UDF
+        // boxing for every row (VERDICT r4 What's wrong #1).
+        graft.functions.GraftExpressions.register(spark)
+        val sh = Dedup.shingleHashes(cfg) _
+        val newShingles = stage("shingles", salt) {
+          newDocsDf.select(col("id"), sh(col("text")).as("shingles"))
+        }
+        val newSigs = stage("signatures", salt) {
+          newShingles.select(col("id"),
+            call_function("graft_minhash_sig",
+              col("shingles"), lit(cfg.numHashes), lit(cfg.seed)).as("sig"))
+        }
+
+        // 4. ADDITIVE band/census extension (VERDICT r4 #3). Bands are
+        // stateless per doc and census counts are additive, so the increment
+        // writes ONLY its own band rows + its delta census; the union census is
+        // needed ONLY for buckets the increment TOUCHES (old-old pairs are
+        // invariant: a bucket with no new member contributes nothing new, its
+        // in-cap pairs are already in the base candidates checkpoint, and an
+        // over-cap bucket can never come back under the cap). Touched-bucket
+        // census = Σ over snapshots (prev census ⋉ touched keys) + delta —
+        // O(new·bands) work against a columnar scan of the narrow census
+        // checkpoints, instead of the r4 form's O(union) re-banding of every
+        // signature + O(union·bands) census shuffle.
+        val nNewDocs = TableIO.readManifest(s"$dir/docs").map(_.rows).getOrElse(0L)
+        val newBands = stage("bands", salt)(Dedup.bands(newSigs, cfg))
+        val deltaCensusDf = Dedup.bucketCensus(newBands)
+
+        val prevCensusManifest =
+          TableIO.readManifest(s"${priorInc.lastOption.getOrElse(baseDir)}/census")
+        val prevCapped = prevCensusManifest
+          .flatMap(_.extra.get("cappedBuckets")).map(_.toLong).getOrElse(0L)
+        val prevMaxBucket = prevCensusManifest
+          .flatMap(_.extra.get("maxBucketSize")).map(_.toLong).getOrElse(0L)
+
+        val bcKeyLimit = java.lang.Long.getLong("graft.inc.broadcastKeyLimit", 2000000L)
+        // an EMPTY increment (all re-crawls) writes empty bands/census stages
+        // and touches nothing — guarding here also keeps the explicit key
+        // broadcast below provably non-empty (the phantom-broadcast trap)
+        var touchedCaches: Seq[DataFrame] = Seq.empty
+        val (touchedCensus, cappedCum, maxBucketCum, touchedHot) =
+          if (nNewDocs == 0) (null: DataFrame, prevCapped, prevMaxBucket, 0L)
           else {
-            val gate = probeSide(
-              touchedCensus
-                .where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"),
+            // nNewDocs·bands bounds the touched-key count exactly, with no
+            // extra count() action; a daily increment broadcasts, a
+            // backfill-sized one falls back to a shuffle probe
+            val keys = probeSide(deltaCensusDf.select("band_hash"),
               nNewDocs * cfg.bands <= bcKeyLimit)
-            // old band rows are consulted ONLY for gated touched buckets —
-            // a broadcast probe applied at the columnar checkpoint scan,
-            // never a shuffle of the untouched corpus
-            val unionBands = readAllPre("bands").unionByName(newBands)
-            Some(unionBands.join(gate, "band_hash")
-              .select(col("band_hash"), col("id").as("id_o"))
-              .join(
-                newBands.join(gate, "band_hash")
-                  .select(col("band_hash"), col("id").as("id_n"))
-                  .hint("shuffle_hash"),
-                "band_hash")
-              .where(col("id_o") =!= col("id_n"))
-              .select(
-                least(col("id_o"), col("id_n")).as("id_a"),
-                greatest(col("id_o"), col("id_n")).as("id_b")))
+            val prevTouched = readAllPre("census").join(keys, "band_hash")
+              .groupBy("band_hash").agg(sum("bucket_size").as("bucket_size"))
+              .cache()
+            val touched = prevTouched.unionByName(deltaCensusDf)
+              .groupBy("band_hash").agg(sum("bucket_size").as("bucket_size"))
+              .cache()
+            touchedCaches = Seq(prevTouched, touched)
+            val prevHot = prevTouched.where(col("bucket_size") > cfg.maxBucket).count()
+            val nowStats = touched.agg(
+              count(when(col("bucket_size") > cfg.maxBucket, 1)).as("hot"),
+              max(col("bucket_size")).as("maxB")).first()
+            // buckets only grow: cumulative capped count = previous snapshot's
+            // + touched buckets that crossed the cap THIS increment
+            (touched,
+              prevCapped + (nowStats.getLong(0) - prevHot),
+              math.max(prevMaxBucket, nowStats.getLong(1)),
+              nowStats.getLong(0))
+          }
+        val deltaCensusOut = stage("census", salt, Map(
+          "cappedBuckets" -> cappedCum.toString,
+          "maxBucketSize" -> maxBucketCum.toString,
+          "saltWindow" -> cfg.saltWindow.toString))(deltaCensusDf)
+
+        val unionCand = {
+          // raw (undeduped) pair additions from this increment; ONE dedupPairs
+          // over oldCand ∪ additions at the end (the r4-#1 exchange-cut
+          // reasoning: the previous shape deduped the in-cap pairs and then
+          // re-exchanged + re-aggregated the whole relation again after the
+          // salted union)
+          val inCapNew: Option[DataFrame] =
+            if (nNewDocs == 0) None
+            else {
+              val gateCount =
+                touchedCensus.where(col("bucket_size").between(2, cfg.maxBucket)).count()
+              if (verbose)
+                println(s"[inc] touched buckets in-cap (pair-eligible): $gateCount")
+              if (gateCount == 0) None
+              else {
+                val gate = probeSide(
+                  touchedCensus
+                    .where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"),
+                  nNewDocs * cfg.bands <= bcKeyLimit)
+                // old band rows are consulted ONLY for gated touched buckets —
+                // a broadcast probe applied at the columnar checkpoint scan,
+                // never a shuffle of the untouched corpus
+                val unionBands = readAllPre("bands").unionByName(newBands)
+                Some(unionBands.join(gate, "band_hash")
+                  .select(col("band_hash"), col("id").as("id_o"))
+                  .join(
+                    newBands.join(gate, "band_hash")
+                      .select(col("band_hash"), col("id").as("id_n"))
+                      .hint("shuffle_hash"),
+                    "band_hash")
+                  .where(col("id_o") =!= col("id_n"))
+                  .select(
+                    least(col("id_o"), col("id_n")).as("id_a"),
+                    greatest(col("id_o"), col("id_n")).as("id_b")))
+              }
+            }
+          // salted recompute ONLY when the delta touched a hot bucket: an
+          // untouched hot bucket's membership is unchanged, so its
+          // (deterministic) salted window pairs are already in the previous
+          // candidates checkpoint — the old cappedCum>0 gate re-ran the whole
+          // salted sub-plan over the union on EVERY increment over a hot store,
+          // including zero-new-docs re-crawls (review r5). The window pairing
+          // is still not decomposable per increment, so the touched hot
+          // buckets' FULL union membership is consulted — but only theirs:
+          // touchedCensus (cumulative counts for touched keys only) is the
+          // census the salted sub-plan sees, so untouched buckets are never hot
+          // keys in it. Bands/signatures come from the narrow checkpoints —
+          // old TEXT is still never re-hashed.
+          val saltedNew: Option[DataFrame] =
+            if (cfg.saltWindow > 0 && touchedHot > 0) {
+              val bandsFull = readAllPre("bands").unionByName(newBands)
+              val sigsFull = readAllPre("signatures").unionByName(newSigs)
+              // raw form: the final dedupPairs over oldCand ∪ additions below
+              // already dedups, so the salted sub-plan's own pair exchange is
+              // pure waste here
+              Some(Dedup.rawSaltedHotPairs(bandsFull, touchedCensus, sigsFull, cfg))
+            } else None
+          (inCapNew ++ saltedNew).reduceOption(_ unionByName _) match {
+            case None => oldCand
+            case Some(add) => Dedup.dedupPairs(oldCand.unionByName(add))
           }
         }
-      // salted recompute ONLY when the delta touched a hot bucket: an
-      // untouched hot bucket's membership is unchanged, so its
-      // (deterministic) salted window pairs are already in the previous
-      // candidates checkpoint — the old cappedCum>0 gate re-ran the whole
-      // salted sub-plan over the union on EVERY increment over a hot store,
-      // including zero-new-docs re-crawls (review r5). The window pairing
-      // is still not decomposable per increment, so the touched hot
-      // buckets' FULL union membership is consulted — but only theirs:
-      // touchedCensus (cumulative counts for touched keys only) is the
-      // census the salted sub-plan sees, so untouched buckets are never hot
-      // keys in it. Bands/signatures come from the narrow checkpoints —
-      // old TEXT is still never re-hashed.
-      val saltedNew: Option[DataFrame] =
-        if (cfg.saltWindow > 0 && touchedHot > 0) {
-          val bandsFull = readAllPre("bands").unionByName(newBands)
-          val sigsFull = readAllPre("signatures").unionByName(newSigs)
-          // raw form: the final dedupPairs over oldCand ∪ additions below
-          // already dedups, so the salted sub-plan's own pair exchange is
-          // pure waste here
-          Some(Dedup.rawSaltedHotPairs(bandsFull, touchedCensus, sigsFull, cfg))
-        } else None
-      (inCapNew ++ saltedNew).reduceOption(_ unionByName _) match {
-        case None => oldCand
-        case Some(add) => Dedup.dedupPairs(oldCand.unionByName(add))
+        val candOut = stage("candidates", salt)(unionCand)
+        touchedCaches.foreach(_.unpersist(blocking = false))
+
+        // 5. verify ONLY unadjudicated pairs, with shingles drawn from the
+        // union (one side of a new pair may be an old doc — its shingles come
+        // from the base checkpoint, not from re-hashed text). The shingle and
+        // text relations are PRUNED to ids that actually appear in those pairs
+        // before the verify joins: without the prune the sort-merge join sorts
+        // the ENTIRE union shingle relation (O(corpus·shingle-width) — measured
+        // 37 s of a 50 s increment on the text-heavy probe) for a pair set that
+        // is O(new dups). The id prune keeps verify proportional to the work,
+        // which is the whole point of the incremental path.
+        // toVerify is CACHED: the driver-side count below materializes it
+        // anyway, and it is otherwise re-evaluated (candidates anti-join and
+        // all) by the id-prune union and the verify join.
+        val toVerify = candOut.join(oldCand.hint("shuffle_hash"), Seq("id_a", "id_b"), "left_anti")
+          .cache()
+        val nToVerify = toVerify.count()
+        if (verbose) println(s"[inc] unadjudicated pairs to verify: $nToVerify")
+        val unionDocsAll = oldDocs.unionByName(newDocsDf)
+        var verifyCaches: Seq[DataFrame] = Seq(toVerify)
+        // ZERO unadjudicated pairs — the common daily case — skips the entire
+        // verify sub-plan: building it anyway would explicitly broadcast an
+        // EMPTY long-keyed id relation, the exact phantom-broadcast shape this
+        // runtime accounts ~513 MiB for (evicting CC's localCheckpoint blocks
+        // in the clusters stage right after) — the repo's own documented trap.
+        val unionVerified =
+          if (nToVerify == 0) oldVerified
+          else {
+            // A shuffle-side prune still SHUFFLES the whole corpus-sized
+            // relation (Spark probes the build side during the big side's
+            // shuffle read) — on this VM's 3.2 ms-syscall path that shuffle IS
+            // the cost. The pair set is known small (counted above; pairs are
+            // O(new dups), not O(corpus)), so the id set broadcasts EXPLICITLY
+            // and the docs relation is probed at scan time with no shuffle of
+            // the wide payloads. The shuffle_hash fallback covers the
+            // unbounded worst case (a degenerate increment that candidates
+            // half the corpus); the cutover is overridable so tests can force
+            // the fallback (-Dgraft.inc.broadcastIdLimit=0).
+            val broadcastIdLimit =
+              java.lang.Long.getLong("graft.inc.broadcastIdLimit", 2000000L)
+            val vIds0 = toVerify.select(col("id_a").as("id"))
+              .union(toVerify.select(col("id_b").as("id")))
+              .distinct()
+            val vIds =
+              if (nToVerify <= broadcastIdLimit) broadcast(vIds0)
+              else vIds0.hint("shuffle_hash")
+            // docs of the unadjudicated pairs, CACHED: O(pairs) rows,
+            // referenced three times (shingle re-derivation + both LCS text
+            // joins). Shingles for these docs are RE-DERIVED from their text
+            // instead of re-read from the base shingle checkpoint: shingling
+            // is a pure function of text, the LCS pass scans these texts
+            // anyway, and the checkpoint read was an O(corpus) scan+decode of
+            // the widest relation in the store for an O(new-dups) pair set
+            // (measured ~8 s of the text-heavy probe's verify stage).
+            // Re-hashing here is O(pairs) work — NOT a violation of the
+            // never-re-hash-old-text contract, which is about
+            // corpus-proportional cost.
+            val prunedDocs = unionDocsAll.join(vIds, "id").cache()
+            verifyCaches :+= prunedDocs
+            val prunedShingles = prunedDocs.select(col("id"), sh(col("text")).as("shingles"))
+            val newVerified = Dedup.withLcsColumn(
+              Dedup.verify(toVerify, prunedShingles, cfg), prunedDocs)
+            oldVerified.unionByName(newVerified).dropDuplicates("id_a", "id_b")
+          }
+        val verifiedOut = stage("verified_pairs", salt)(unionVerified)
+        verifyCaches.foreach(_.unpersist(blocking = false)) // stage write materialized them
+
+        // 6. clusters over every id + the union verified pairs
+        stage("clusters", salt) {
+          ConnectedComponents.run(
+            unionDocsAll.select("id"), verifiedOut.select("id_a", "id_b"))
+        }
+
+        (nNewDocs, nToVerify,
+          TableIO.readManifest(s"$dir/verified_pairs").map(_.rows).getOrElse(0L))
       }
-    }
-    val candOut = stage("candidates", salt)(unionCand)
-    touchedCaches.foreach(_.unpersist(blocking = false))
-
-    // 5. verify ONLY unadjudicated pairs, with shingles drawn from the
-    // union (one side of a new pair may be an old doc — its shingles come
-    // from the base checkpoint, not from re-hashed text). The shingle and
-    // text relations are PRUNED to ids that actually appear in those pairs
-    // before the verify joins: without the prune the sort-merge join sorts
-    // the ENTIRE union shingle relation (O(corpus·shingle-width) — measured
-    // 37 s of a 50 s increment on the text-heavy probe) for a pair set that
-    // is O(new dups). The id prune keeps verify proportional to the work,
-    // which is the whole point of the incremental path.
-    // toVerify is CACHED: the driver-side count below materializes it
-    // anyway, and it is otherwise re-evaluated (candidates anti-join and
-    // all) by the id-prune union and the verify join.
-    val toVerify = candOut.join(oldCand.hint("shuffle_hash"), Seq("id_a", "id_b"), "left_anti")
-      .cache()
-    val nToVerify = toVerify.count()
-    if (verbose) println(s"[inc] unadjudicated pairs to verify: $nToVerify")
-    val unionDocsAll = oldDocs.unionByName(newDocsDf)
-    var verifyCaches: Seq[DataFrame] = Seq(toVerify)
-    // ZERO unadjudicated pairs — the common daily case — skips the entire
-    // verify sub-plan: building it anyway would explicitly broadcast an
-    // EMPTY long-keyed id relation, the exact phantom-broadcast shape this
-    // runtime accounts ~513 MiB for (evicting CC's localCheckpoint blocks
-    // in the clusters stage right after) — the repo's own documented trap.
-    val unionVerified =
-      if (nToVerify == 0) oldVerified
-      else {
-        // A shuffle-side prune still SHUFFLES the whole corpus-sized
-        // relation (Spark probes the build side during the big side's
-        // shuffle read) — on this VM's 3.2 ms-syscall path that shuffle IS
-        // the cost. The pair set is known small (counted above; pairs are
-        // O(new dups), not O(corpus)), so the id set broadcasts EXPLICITLY
-        // and the docs relation is probed at scan time with no shuffle of
-        // the wide payloads. The shuffle_hash fallback covers the
-        // unbounded worst case (a degenerate increment that candidates
-        // half the corpus); the cutover is overridable so tests can force
-        // the fallback (-Dgraft.inc.broadcastIdLimit=0).
-        val broadcastIdLimit =
-          java.lang.Long.getLong("graft.inc.broadcastIdLimit", 2000000L)
-        val vIds0 = toVerify.select(col("id_a").as("id"))
-          .union(toVerify.select(col("id_b").as("id")))
-          .distinct()
-        val vIds =
-          if (nToVerify <= broadcastIdLimit) broadcast(vIds0)
-          else vIds0.hint("shuffle_hash")
-        // docs of the unadjudicated pairs, CACHED: O(pairs) rows,
-        // referenced three times (shingle re-derivation + both LCS text
-        // joins). Shingles for these docs are RE-DERIVED from their text
-        // instead of re-read from the base shingle checkpoint: shingling
-        // is a pure function of text, the LCS pass scans these texts
-        // anyway, and the checkpoint read was an O(corpus) scan+decode of
-        // the widest relation in the store for an O(new-dups) pair set
-        // (measured ~8 s of the text-heavy probe's verify stage).
-        // Re-hashing here is O(pairs) work — NOT a violation of the
-        // never-re-hash-old-text contract, which is about
-        // corpus-proportional cost.
-        val prunedDocs = unionDocsAll.join(vIds, "id").cache()
-        verifyCaches :+= prunedDocs
-        val prunedShingles = prunedDocs.select(col("id"), sh(col("text")).as("shingles"))
-        val newVerified = Dedup.withLcsColumn(
-          Dedup.verify(toVerify, prunedShingles, cfg), prunedDocs)
-        oldVerified.unionByName(newVerified).dropDuplicates("id_a", "id_b")
-      }
-    val verifiedOut = stage("verified_pairs", salt)(unionVerified)
-    verifyCaches.foreach(_.unpersist(blocking = false)) // stage write materialized them
-
-    // 6. clusters over every id + the union verified pairs
-    stage("clusters", salt) {
-      ConnectedComponents.run(
-        unionDocsAll.select("id"), verifiedOut.select("id_a", "id_b"))
-    }
-
-    val nVerifiedTotal = TableIO.readManifest(s"$dir/verified_pairs").map(_.rows).getOrElse(0L)
-
-    // COMMIT: every stage is now materialized under the private tmp dir —
-    // one directory rename publishes the whole increment. Readers either
-    // see the complete inc-<k> or nothing. The report's DataFrames are
-    // re-opened from the FINAL path (the tmp-path readers above die with
-    // the rename). A rename target that already exists means another
-    // writer committed inc-<k> first — a LOST RACE, reported as such (the
-    // increment must be re-run so it deduplicates against the winner's
-    // docs; blindly retrying with k+1 would re-add them). The move itself
-    // can ALSO lose the race (the winner publishes between the exists()
-    // check and the rename) — both orderings route through the same
-    // cleanup-and-explain path, and a cleanup failure is attached as
-    // suppressed rather than masking the race diagnosis (review r5).
-    def lostRace(): Nothing = {
-      val err = new IllegalStateException(
-        s"lost increment commit race: $finalDir was published by a concurrent " +
-          s"run while this one was computing; re-run this increment (it must " +
-          s"be recomputed against the newly committed state, not renamed to " +
-          s"inc-${k + 1})")
-      try {
-        val walk = Files.walk(Paths.get(dir))
-        try walk.iterator().asScala.toSeq.reverse.foreach(p => Files.delete(p))
-        finally walk.close()
-      } catch { case cleanup: Exception => err.addSuppressed(cleanup) }
-      throw err
-    }
-    if (Files.exists(Paths.get(finalDir))) lostRace()
-    try Files.move(Paths.get(dir), Paths.get(finalDir))
-    catch { case _: java.nio.file.FileAlreadyExistsException => lostRace() }
 
     // per-increment telemetry row (the BASE run's history is the separate
     // $baseDir/metrics table): both the pairs adjudicated THIS increment
@@ -555,6 +460,8 @@ object IncrementalDedup {
         "verified_pairs", "salt")
       .withColumn("recomputed", lit(true))
       .write.mode("append").parquet(s"$baseDir/metrics_inc")
+    // re-opened from the PUBLISHED path: the staging-path readers died with
+    // the rename
     IncReport(
       TableIO.read(spark, s"$finalDir/clusters"),
       TableIO.read(spark, s"$finalDir/verified_pairs"),

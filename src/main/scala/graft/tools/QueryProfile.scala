@@ -6,8 +6,8 @@ import graft.SparkEntry
   * warm session (this VM's first-run JIT costs 5-20×, see BENCH/BASELINE.md)
   * and prints each wall time — separates steady-state cost from cold-start.
   * Usage: runMain graft.tools.QueryProfile <queryName> [sfDir] [reps] [cores] [plain]
-  * (5th arg "plain" = Bench's minimal session instead of GraftSession — for
-  * A/B-ing the tuned config itself)
+  * (5th arg "plain" = GraftSession.plain, the Bench/Verify session, instead
+  * of the tuned GraftSession.get — for A/B-ing the tuned config itself)
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
@@ -16,18 +16,8 @@ object QueryProfile {
     val reps = if (args.length > 2) args(2).toInt else 3
     val cores = if (args.length > 3) args(3).toInt else 32
     val spark =
-      if (args.length > 4 && args(4) == "plain") {
-        val s = org.apache.spark.sql.SparkSession.builder()
-          .master(s"local[$cores]")
-          .config("spark.sql.shuffle.partitions", cores.toString)
-          .config("spark.shuffle.file.buffer", "1m")
-          .config("spark.shuffle.unsafe.file.output.buffer", "4m")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        s
-      } else graft.GraftSession.get(cores, s"profile-$name")
+      if (args.length > 4 && args(4) == "plain") graft.GraftSession.plain(cores, s"profile-$name")
+      else graft.GraftSession.get(cores, s"profile-$name")
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()
