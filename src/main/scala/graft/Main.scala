@@ -30,8 +30,10 @@ import graft.pipeline.{CheckpointedDedup, Decontaminate, DedupConfig, DocIds, In
   * silently mixing hash families.
   *
   * Under spark-submit the cluster's master/executor settings apply
-  * untouched (`SparkSession.builder().getOrCreate()`); without a master
-  * (local development, `sbt runMain`) it falls back to the
+  * untouched (`SparkSession.builder().getOrCreate()`), the codegen cache
+  * size included: pass `--conf spark.sql.codegen.cache.maxEntries=1000`
+  * (GraftSession.CodegenCacheEntries) to get the local session's. Without a
+  * master (local development, `sbt runMain`) it falls back to the
   * environment-tuned local session. Tables are plain parquet directories:
   * `pages` needs at least (url STRING, text STRING) — extra columns like
   * warc_ts/html/lang pass through the docs checkpoint's input fingerprint

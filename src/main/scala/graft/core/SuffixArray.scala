@@ -1,112 +1,17 @@
 package graft.core
 
-/** Suffix array + Kasai LCP for the verify stage's longest-common-substring
-  * pass over long exact overlaps (north rule; no counterpart in the reference
-  * — its verify oracle is exact Jaccard only, similarities.jl:230-238).
+/** Longest-common-substring length for the verify stage's pass over long
+  * exact overlaps (north rule; no counterpart in the reference — its verify
+  * oracle is exact Jaccard only, similarities.jl:230-238).
   *
-  * O(n log n) prefix-doubling construction, O(n) LCP. Built per candidate
-  * pair inside a typed map on executors — never on the driver — and only for
-  * pairs that already passed the cheap Jaccard prefilter (SURVEY.md §7
-  * "what's hard"). Callers should cap text length.
+  * A suffix automaton over one side, walked by the other: O(|a| + |b|) per
+  * pair. It runs inside the graft_lcs_len expression on executors, never on
+  * the driver, and only for pairs that already passed the cheap Jaccard
+  * prefilter (SURVEY.md §7 "what's hard"). Each side is truncated to maxLen
+  * UTF-16 code units here, so callers need no cap of their own.
   */
 object SuffixArray {
 
-  /** Suffix array of s (indices sorted by suffix). Manber–Myers prefix
-    * doubling with a COUNTING (radix) sort per round — O(n) per doubling
-    * instead of the comparison sort the first version paid (the per-pair
-    * LCS kernel dominates the incremental verify stage on web-page-length
-    * texts: measured 34 ms/pair at ~23k chars with Arrays.sort rounds,
-    * ~4× less with radix). All-primitive, no boxing, no comparator
-    * closures — this runs per candidate pair on executors.
-    * Requires n < 2^21 and s values ≥ 0 (callers remap chars to +2). */
-  def build(s: Array[Int]): Array[Int] = {
-    val n = s.length
-    require(n < (1 << 21), s"suffix array input too long: $n")
-    if (n == 0) return new Array[Int](0)
-    val IdxBits = 21
-    val IdxMask = (1L << IdxBits) - 1
-    var sa = new Array[Int](n)
-    var rank = new Array[Int](n)
-    var next = new Array[Int](n)
-    val tmp = new Array[Int](n)
-
-    // initial order + ranks from character codes (one packed sort; chars
-    // ≤ 2^17 < 2^21 fit the pack)
-    val keys = new Array[Long](n)
-    var i = 0
-    while (i < n) { keys(i) = (s(i).toLong << IdxBits) | i; i += 1 }
-    java.util.Arrays.sort(keys)
-    var r = 0
-    i = 0
-    while (i < n) {
-      val idx = (keys(i) & IdxMask).toInt
-      if (i > 0 && (keys(i) >>> IdxBits) != (keys(i - 1) >>> IdxBits)) r += 1
-      rank(idx) = r
-      sa(i) = idx
-      i += 1
-    }
-
-    var k = 1
-    while (k < n && r < n - 1) {
-      // order by the SECOND key (rank[i+k], with i+k ≥ n ordered first as
-      // -inf): suffixes starting in the last k positions lead, the rest
-      // follow the current sa order shifted left by k — no sort needed
-      var p = 0
-      i = n - k
-      while (i < n) { tmp(p) = i; p += 1; i += 1 }
-      i = 0
-      while (i < n) { val j = sa(i) - k; if (j >= 0) { tmp(p) = j; p += 1 }; i += 1 }
-      // stable counting sort by the FIRST key (current rank)
-      val cnt = new Array[Int](r + 2)
-      i = 0
-      while (i < n) { cnt(rank(i) + 1) += 1; i += 1 }
-      i = 1
-      while (i < cnt.length) { cnt(i) += cnt(i - 1); i += 1 }
-      i = 0
-      while (i < n) { val idx = tmp(i); val c = rank(idx); sa(cnt(c)) = idx; cnt(c) += 1; i += 1 }
-      // recompute ranks from adjacent (rank, rank+k) pairs
-      var rr = 0
-      next(sa(0)) = 0
-      i = 1
-      while (i < n) {
-        val a = sa(i); val b = sa(i - 1)
-        val a2 = if (a + k < n) rank(a + k) else -1
-        val b2 = if (b + k < n) rank(b + k) else -1
-        if (rank(a) != rank(b) || a2 != b2) rr += 1
-        next(a) = rr
-        i += 1
-      }
-      val t = rank; rank = next; next = t
-      r = rr
-      k <<= 1
-    }
-    sa
-  }
-
-  /** Kasai LCP: lcp(i) = longest common prefix of sa(i) and sa(i-1). */
-  def lcp(s: Array[Int], sa: Array[Int]): Array[Int] = {
-    val n = s.length
-    val rank = new Array[Int](n)
-    var i = 0
-    while (i < n) { rank(sa(i)) = i; i += 1 }
-    val out = new Array[Int](n)
-    var h = 0
-    i = 0
-    while (i < n) {
-      if (rank(i) > 0) {
-        val j = sa(rank(i) - 1)
-        while (i + h < n && j + h < n && s(i + h) == s(j + h)) h += 1
-        out(rank(i)) = h
-        if (h > 0) h -= 1
-      } else h = 0
-      i += 1
-    }
-    out
-  }
-
-  /** Length of the longest common substring of a and b.
-    * Classic SA trick: build over a + SEP + b (SEP below any codepoint),
-    * answer = max LCP between adjacent suffixes from different halves. */
   /** Java-callable arity-2 form — Scala default arguments generate NO 2-arg
     * overload, so generated (Janino) code calling lcsLength(a, b) failed to
     * compile and silently de-codegened every stage containing graft_lcs_len
@@ -114,35 +19,111 @@ object SuffixArray {
     * against the local-relation fold that hid it). */
   def lcsLength(a: String, b: String): Int = lcsLength(a, b, 20000)
 
+  /** Longest common substring of the first maxLen code units of a and b;
+    * 0 when either side is empty. */
   def lcsLength(a: String, b: String, maxLen: Int): Int = {
-    // reject a cap that would breach build()'s n < 2^21 input limit HERE,
-    // once, at the call site — not per-row on executors mid-stage with
-    // build's less actionable "input too long" (round-6 review)
-    require(2L * maxLen + 1 < (1 << 21),
-      s"maxLen $maxLen would exceed the suffix-array input cap " +
-        s"(2·maxLen+1 must be < 2^21 = ${1 << 21})")
+    // a transition key packs state + 1 (at most 2·maxLen) into 16 bits; a
+    // larger cap would collide keys and return wrong lengths
+    require(maxLen < (1 << 15), s"maxLen $maxLen must be < ${1 << 15}")
     if (a.isEmpty || b.isEmpty) return 0
-    val ta = if (a.length > maxLen) a.substring(0, maxLen) else a
-    val tb = if (b.length > maxLen) b.substring(0, maxLen) else b
-    val n = ta.length + tb.length + 1
-    val s = new Array[Int](n)
-    var i = 0
-    while (i < ta.length) { s(i) = ta.charAt(i).toInt + 2; i += 1 }
-    s(ta.length) = 1 // separator, smaller than any char code
-    i = 0
-    while (i < tb.length) { s(ta.length + 1 + i) = tb.charAt(i).toInt + 2; i += 1 }
-    val sa = build(s)
-    val lcps = lcp(s, sa)
-    val boundary = ta.length
-    var best = 0
-    i = 1
-    while (i < n) {
-      val x = sa(i - 1); val y = sa(i)
-      if ((x < boundary) != (y < boundary)) { // suffixes from different halves
-        if (lcps(i) > best) best = lcps(i)
-      }
-      i += 1
+    val na = math.min(a.length, maxLen)
+    val nb = math.min(b.length, maxLen)
+    // build over the shorter side: a built char costs more time and memory
+    // than a walked one
+    if (na <= nb) new SuffixAutomaton(a, na).longestRun(b, nb)
+    else new SuffixAutomaton(b, nb).longestRun(a, na)
+  }
+
+  /** Suffix automaton of s[0, n): at most 2n states and 3n transitions.
+    * Transitions live in one open-addressed table keyed by (state + 1,
+    * char) packed into an Int, 0 marking an empty slot; each state also
+    * chains its own slots, which a clone copies. */
+  private final class SuffixAutomaton(s: String, n: Int) {
+    private val len = new Array[Int](2 * n + 1)
+    private val link = new Array[Int](2 * n + 1)
+    private val firstSlot = Array.fill(2 * n + 1)(-1)
+    private val bits = 32 - Integer.numberOfLeadingZeros(4 * n) // table > 4n
+    private val mask = (1 << bits) - 1
+    private val key = new Array[Int](1 << bits) // 0 = empty slot
+    private val target = new Array[Int](1 << bits)
+    private val nextSlot = new Array[Int](1 << bits)
+    private var states = 1
+    private var last = 0
+
+    link(0) = -1
+    locally { var i = 0; while (i < n) { extend(s.charAt(i)); i += 1 } }
+
+    private def keyOf(v: Int, c: Char): Int = ((v + 1) << 16) | c
+
+    /** The slot holding transition (v, c), or the empty slot it would take. */
+    private def slot(v: Int, c: Char): Int = {
+      val k = keyOf(v, c)
+      var j = (k * 0x9E3779B9) >>> (32 - bits)
+      while (key(j) != 0 && key(j) != k) j = (j + 1) & mask
+      j
     }
-    best
+
+    private def put(j: Int, v: Int, c: Char, to: Int): Unit = {
+      key(j) = keyOf(v, c); target(j) = to
+      nextSlot(j) = firstSlot(v); firstSlot(v) = j
+    }
+
+    private def extend(c: Char): Unit = {
+      val cur = states; states += 1
+      len(cur) = len(last) + 1
+      var p = last
+      var j = slot(p, c)
+      while (p >= 0 && key(j) == 0) {
+        put(j, p, c, cur)
+        p = link(p)
+        if (p >= 0) j = slot(p, c)
+      }
+      if (p < 0) link(cur) = 0
+      else {
+        val q = target(j)
+        if (len(p) + 1 == len(q)) link(cur) = q
+        else {
+          val clone = states; states += 1
+          len(clone) = len(p) + 1
+          link(clone) = link(q)
+          var f = firstSlot(q)
+          while (f >= 0) {
+            val fc = (key(f) & 0xFFFF).toChar
+            put(slot(clone, fc), clone, fc, target(f))
+            f = nextSlot(f)
+          }
+          // every suffix-link ancestor of p has a c-transition; redirect
+          // the ones that led to q
+          while (p >= 0 && target(j) == q) {
+            target(j) = clone
+            p = link(p)
+            if (p >= 0) j = slot(p, c)
+          }
+          link(q) = clone
+          link(cur) = clone
+        }
+      }
+      last = cur
+    }
+
+    /** Longest substring of t[0, m) that occurs in s[0, n). */
+    def longestRun(t: String, m: Int): Int = {
+      var v = 0
+      var run = 0
+      var best = 0
+      var k = 0
+      while (k < m) {
+        val c = t.charAt(k)
+        var j = slot(v, c)
+        while (v > 0 && key(j) == 0) {
+          v = link(v); run = len(v)
+          j = slot(v, c)
+        }
+        if (key(j) != 0) { v = target(j); run += 1 }
+        if (run > best) best = run
+        k += 1
+      }
+      best
+    }
   }
 }

@@ -259,8 +259,9 @@ case class JaccardSortedExpr(left: Expression, right: Expression)
   override def prettyName: String = "graft_jaccard_sorted"
 }
 
-/** graft_lcs_len(a, b): longest-common-substring length via the radix
-  * suffix array (core.SuffixArray) — per verified PAIR, not per corpus row,
+/** graft_lcs_len(a, b): longest-common-substring length of the first
+  * 20,000 UTF-16 code units of each side, via the linear-time suffix
+  * automaton (core.SuffixArray) — per verified PAIR, not per corpus row,
   * so the win is uniformity (a UDF-free pipeline), not CPU. Null-propagating
   * (unreachable in the pipeline: null-text docs have empty shingle sets and
   * never pass the Jaccard threshold). */

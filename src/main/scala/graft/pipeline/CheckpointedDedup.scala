@@ -187,8 +187,8 @@ object CheckpointedDedup {
           Dedup.verify(candidatesStage.df, prunedShingles, cfg), prunedDocsCache)
       } else {
         verifyStats = Map("verifyPruned" -> "false", "verifyPairCount" -> nCand.toString)
-        // exact Jaccard + suffix-array LCS pass for long exact overlaps
-        // (north rule): per-pair SA on executors, only for pairs already
+        // exact Jaccard + LCS pass for long exact overlaps
+        // (north rule): per-pair kernel on executors, only for pairs already
         // past the exact-Jaccard threshold
         Dedup.withLcsColumn(
           Dedup.verify(candidatesStage.df, shinglesStage.df, cfg), docsStage.df)

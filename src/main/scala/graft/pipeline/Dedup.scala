@@ -347,7 +347,7 @@ object Dedup {
         call_function("graft_lcs_len", col("text_a"), col("text_b")).as("lcs_len"))
   }
 
-  /** Verified pairs with the suffix-array longest-common-substring column
+  /** Verified pairs with the longest-common-substring column
     * (north rule's "substring pass for long exact overlaps"). */
   def verifiedPairsWithLcs(docs: DataFrame, cfg: DedupConfig): DataFrame =
     withLcsColumn(nearDupPairs(docs, cfg), docs)

@@ -143,8 +143,8 @@ object Probe {
   }
 
   /** The in-memory near-dup pipeline (shingle → minhash → band → census/cap
-    * → candidates → Jaccard + suffix-array LCS verify → connected
-    * components), corpus generation inside the timed unit. */
+    * → candidates → Jaccard + LCS verify → connected components), corpus
+    * generation inside the timed unit. */
   private def dedup(spark: SparkSession, n: Long, cores: Int): Result =
     leg(spark)(Seq("rows" -> Dedup.clustersWithLcs(corpus(spark, n, cores), cfg).count()))
 
