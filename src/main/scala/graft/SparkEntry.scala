@@ -709,7 +709,7 @@ object SparkEntry {
       val census = buckets.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bucket_size"))
       // census gate FORCED to shuffle: unbounded key set (one row per
       // non-singleton bucket — grows with the corpus), and this runtime's
-      // measured phantom-broadcast OOM (Dedup.candidatesFromCensus) applies
+      // measured phantom-broadcast OOM (Dedup.rawCandidatesFromCensus) applies
       // to any AQE broadcast flip of it — same trap, same fix
       val ok = buckets.join(
         census.where(col("bucket_size").between(2, Planes.AnnCap)).select(keys.map(col): _*)

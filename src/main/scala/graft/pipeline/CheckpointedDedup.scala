@@ -100,9 +100,7 @@ object CheckpointedDedup {
 
     val h2 = chain("signatures")
     val signaturesStage = stage("signatures", h2) {
-      shinglesStage.df.select(col("id"),
-        call_function("graft_minhash_sig",
-          col("shingles"), lit(cfg.numHashes), lit(cfg.seed)).as("sig"))
+      shinglesStage.df.select(col("id"), Dedup.minhashSig(cfg)(col("shingles")).as("sig"))
     }
 
     // BANDS + CENSUS as real checkpoint stages (16 B/row narrow tables):
@@ -143,56 +141,28 @@ object CheckpointedDedup {
 
     val h3 = chain("candidates")
     val candidatesStage = stage("candidates", h3, skewStats) {
-      // hot path unions the RAW in-cap and salted pairs before the single
-      // dedupPairs (the dedup-then-union-then-dedup shape exchanged the
-      // biggest intermediate twice — same restructure as IncrementalDedup r5)
-      if (cfg.saltWindow > 0 && capped > 0)
-        Dedup.dedupPairs(
-          Dedup.rawCandidatesFromCensus(bandsStage.df, censusStage.df, cfg)
-            .union(
-              Dedup.rawSaltedHotPairs(bandsStage.df, censusStage.df, signaturesStage.df, cfg)))
-      else Dedup.candidatesFromCensus(bandsStage.df, censusStage.df, cfg)
+      Dedup.candidatePairs(bandsStage.df, censusStage.df, signaturesStage.df, cfg, capped > 0)
     }
 
     val h4 = chain("verified_pairs")
     // VERIFY ID-PRUNE (VERDICT r4 #5, the incremental path's trick applied
-    // to the base run): when the candidates manifest proves the pair set
-    // sparse relative to the corpus, the verify joins take docs pruned to
-    // the pair ids (broadcast id probe at scan time — no shuffle of the
-    // wide text/shingle payloads) and shingles RE-DERIVED from those docs'
-    // text (O(pairs) hashing beats an O(corpus) scan+decode of the widest
-    // checkpoint). Above the limit the classic merge-join path runs — a
-    // dense pair set means the corpus-wide sort is real work, and a
-    // multi-million-id broadcast would be its own memory hazard.
+    // to the base run): the verify joins take docs pruned to the candidate
+    // ids, counted from the candidates manifest (Dedup.prunedVerify). The
+    // manifest discloses the pair count and the pruned doc count, which
+    // must stay O(pairs), not O(corpus).
     var verifyStats: Map[String, String] = Map.empty
     var prunedDocsCache: DataFrame = null
     val verifiedStage = stage("verified_pairs", h4, verifyStats) {
       val nCand = TableIO.readManifest(s"$baseDir/candidates").map(_.rows).getOrElse(-1L)
-      val pruneLimit = java.lang.Long.getLong("graft.verify.pruneIdLimit", 2000000L)
-      if (nCand > 0 && nCand <= pruneLimit) {
-        // nCand > 0 also guards the phantom-broadcast trap: an explicit
-        // broadcast of an EMPTY long-keyed relation costs ~513 MiB of
-        // storage accounting in this runtime
-        val vIds = candidatesStage.df.select(col("id_a").as("id"))
-          .union(candidatesStage.df.select(col("id_b").as("id")))
-          .distinct()
-        prunedDocsCache = docsStage.df.join(broadcast(vIds), "id").cache()
-        val prunedShingles = prunedDocsCache
-          .select(col("id"), Dedup.shingleHashes(cfg)(col("text")).as("shingles"))
-        verifyStats = Map(
-          "verifyPruned" -> "true",
-          "verifyPairCount" -> nCand.toString,
-          "verifyPrunedDocs" -> prunedDocsCache.count().toString)
-        Dedup.withLcsColumn(
-          Dedup.verify(candidatesStage.df, prunedShingles, cfg), prunedDocsCache)
-      } else {
-        verifyStats = Map("verifyPruned" -> "false", "verifyPairCount" -> nCand.toString)
-        // exact Jaccard + LCS pass for long exact overlaps
-        // (north rule): per-pair kernel on executors, only for pairs already
-        // past the exact-Jaccard threshold
-        Dedup.withLcsColumn(
-          Dedup.verify(candidatesStage.df, shinglesStage.df, cfg), docsStage.df)
-      }
+      val (verified, prunedDocs) = Dedup.prunedVerify(candidatesStage.df, nCand, docsStage.df, cfg)
+      prunedDocsCache = prunedDocs
+      // verifyPruned is always true now (the verify always prunes); the key
+      // stays so the manifest layout and its readers are unchanged
+      verifyStats = Map(
+        "verifyPruned" -> "true",
+        "verifyPairCount" -> nCand.toString,
+        "verifyPrunedDocs" -> prunedDocs.count().toString)
+      verified
     }
     if (prunedDocsCache != null) prunedDocsCache.unpersist(blocking = false)
 

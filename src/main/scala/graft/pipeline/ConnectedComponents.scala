@@ -34,16 +34,6 @@ object ConnectedComponents {
     */
   def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val sc = vertices.sparkSession.sparkContext
-    // -Dgraft.cc.verbose=true → per-phase wall times on stdout (diagnostics)
-    val verbose = java.lang.Boolean.getBoolean("graft.cc.verbose")
-    def timed[T](name: String)(f: => T): T =
-      if (!verbose) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[cc] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
 
     // localCheckpoint persists an internal RDD that outlives the returned
     // DataFrame; without explicit release every CC run leaks blocks into the
@@ -79,18 +69,18 @@ object ConnectedComponents {
     // first propagation stage.
     // (Under AQE even a lazy localCheckpoint's `.rdd` access executes the
     // plan's intermediate shuffle stages to finalize the adaptive plan, so
-    // the edge-plan cost lands HERE, not in round 0 — keep it timed.)
-    val (sym, symIds) = timed("symmetrize (stages run at lazy checkpoint)")(checkpointTracked(
+    // the edge-plan cost lands HERE, not in round 0.)
+    val (sym, symIds) = checkpointTracked(
       edges
         .select(explode(array(
           struct(col("id_a").as("src"), col("id_b").as("dst")),
           struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      eager = false))
+      eager = false)
 
-    var (labels, labelIds) = timed("init labels (lazy)")(checkpointTracked(
+    var (labels, labelIds) = checkpointTracked(
       vertices.select(col("id"), col("id").as("cluster_id")),
-      eager = false))
+      eager = false)
     // Pointer jumping is engaged only after the plain rounds stop being
     // enough: near-dup components are almost always shallow (diameter ≤ 2-3
     // via the min-id hub), where the jump join is pure overhead — measured
@@ -142,9 +132,9 @@ object ConnectedComponents {
       // would checkpoint only the partitions it touched and silently
       // recompute the rest later.
       val (next, nextIds) = checkpointTracked(jumped, eager = false)
-      val changed = timed(s"round $iter (jump=${iter >= jumpFromRound})")(next
+      val changed = next
         .agg(count(when(col("cluster_id") =!= col("old"), 1)).as("c"))
-        .first().getLong(0))
+        .first().getLong(0)
       converged = changed == 0
       iter += 1
       release(labelIds)

@@ -68,7 +68,7 @@ object Decontaminate {
   /** Above this many candidate pairs the verify stage's broadcast id probe
     * falls back to a corpus-wide sort-merge shingle join (the unbounded
     * worst case: an eval set near-duplicating half the corpus).
-    * -Dgraft.decon.pruneIdLimit, mirroring graft.verify.pruneIdLimit. */
+    * -Dgraft.decon.pruneIdLimit. */
   def pruneIdLimit: Long =
     java.lang.Long.getLong("graft.decon.pruneIdLimit", 2000000L)
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -47,8 +47,13 @@ final case class DedupConfig(
   * Input contract: a DataFrame with (id: LONG unique, text: STRING).
   * Scale design (100 TB / 10^12 docs):
   *  - signatures are computed per-row in one narrow pass (no k-fold explode);
-  *  - the only shuffles are: bucket groupBy (by band key), pair dropDuplicates
-  *    (by pair), verify join (by doc id), and the CC iterations;
+  *  - the shuffles are: the census groupBy and the census-gated bucket
+  *    self-join (by band key), the pair dropDuplicates (by id_a, reused by
+  *    the verify join on id_a), the verify joins (by doc id), the salted
+  *    cells' windows (only when over-cap buckets exist), and the CC
+  *    iterations; the stores' verify prunes the docs by an id probe
+  *    (broadcast up to [[BroadcastKeyLimit]] pairs) instead of shuffling
+  *    the wide text/shingle payloads ([[prunedVerify]]);
   *  - candidate pairs come from a codegen'd bucket self-join gated by a
   *    census (no executor ever materializes a bucket member list; over-cap
   *    buckets are capped + disclosed, their members salted via window
@@ -66,6 +71,11 @@ object Dedup {
       call_function("graft_char_shingle_hashes", text, lit(cfg.charShingles), lit(cfg.seed))
     else call_function("graft_shingle_hashes", text, lit(cfg.shingleWords), lit(cfg.seed))
 
+  /** The shingle-hash-set → MinHash signature projection as a codegen
+    * Column — the one definition every signature stage uses. */
+  def minhashSig(cfg: DedupConfig)(shingles: Column): Column =
+    call_function("graft_minhash_sig", shingles, lit(cfg.numHashes), lit(cfg.seed))
+
   /** Stage SHINGLE+SIGNATURE: id, shingles (sorted distinct hashes), sig.
     * Both projections run as native codegen Expressions (no UDF boxing);
     * within one whole-stage-codegen Project the shingle array is computed
@@ -74,8 +84,7 @@ object Dedup {
     graft.functions.GraftExpressions.register(docs.sparkSession)
     docs
       .select(col("id"), shingleHashes(cfg)(col("text")).as("shingles"))
-      .withColumn("sig",
-        call_function("graft_minhash_sig", col("shingles"), lit(cfg.numHashes), lit(cfg.seed)))
+      .withColumn("sig", minhashSig(cfg)(col("shingles")))
   }
 
   /** Stage BAND: one row per (doc, band), keyed by the band's combined hash
@@ -108,10 +117,28 @@ object Dedup {
     * bucket to disk (measured 2-3× slower here, and an executor-memory risk
     * for hot buckets at web scale). Buckets above cfg.maxBucket are excluded
     * (skew cap, disclosed via [[bucketCensus]]) and handled separately by
-    * [[saltedHotPairs]]; the shuffled `bands` exchange is reused by Catalyst
-    * for both join sides. */
-  def candidates(bands: DataFrame, cfg: DedupConfig): DataFrame =
-    candidatesFromCensus(bands, bucketCensus(bands), cfg)
+    * [[rawSaltedHotPairs]]; the shuffled `bands` exchange is reused by
+    * Catalyst for both join sides.
+    *
+    * The one candidate step of the in-memory and the checkpointed pipeline.
+    * `hot` says the census holds an over-cap bucket (the caller knows it
+    * from a census probe or from the census stage's manifest); with
+    * salting on, the RAW in-cap and salted pairs are unioned before ONE
+    * [[dedupPairs]] — the dedup-then-union-then-dedup shape exchanged and
+    * re-aggregated the biggest intermediate (the in-cap pair relation)
+    * twice. With no hot bucket the salted sub-plan is not built at all: it
+    * would be all-empty relations, pure plan weight. */
+  private[pipeline] def candidatePairs(
+      bands: DataFrame,
+      census: DataFrame,
+      signatures: DataFrame,
+      cfg: DedupConfig,
+      hot: Boolean): DataFrame = {
+    val raw = rawCandidatesFromCensus(bands, census, cfg)
+    dedupPairs(
+      if (cfg.saltWindow > 0 && hot) raw.union(rawSaltedHotPairs(bands, census, signatures, cfg))
+      else raw)
+  }
 
   /** Pair dedup partitioned by id_a ONLY: hashpartitioning(id_a) clusters
     * every (id_a, *) group, so the dropDuplicates aggregate is legal on it —
@@ -122,14 +149,10 @@ object Dedup {
   private[pipeline] def dedupPairs(pairs: DataFrame): DataFrame =
     pairs.repartition(col("id_a")).dropDuplicates("id_a", "id_b")
 
-  /** Pair generation with a (possibly cached) census supplied by the caller. */
-  def candidatesFromCensus(bands: DataFrame, census: DataFrame, cfg: DedupConfig): DataFrame =
-    dedupPairs(rawCandidatesFromCensus(bands, census, cfg))
-
   /** Un-deduped within-bucket pairs — the raw form exists so the salted hot
     * path can union its additions BEFORE the single pair-relation dedup
-    * (dedup-then-union-then-dedup exchanged the biggest intermediate twice;
-    * the same restructure IncrementalDedup applied in round 5).
+    * ([[candidatePairs]]; the same restructure IncrementalDedup applied in
+    * round 5).
     *
     * The census gate is forced to a SHUFFLE join: its key set is unbounded
     * (one row per non-singleton bucket — at 200k docs already ~2M keys, at
@@ -208,17 +231,11 @@ object Dedup {
     *     connect through intra-cell adjacency, as in the unsalted design.
     *
     * Every emitted pair still passes exact verification, so salting can only
-    * lose recall (disclosed via the census metrics), never precision. */
-  def saltedHotPairs(
-      bands: DataFrame,
-      census: DataFrame,
-      signatures: DataFrame,
-      cfg: DedupConfig): DataFrame =
-    dedupPairs(rawSaltedHotPairs(bands, census, signatures, cfg))
-
-  /** Un-deduped salted pairs (see [[rawCandidatesFromCensus]] for why the
-    * raw form exists; callers that union it with other raw pair sources run
-    * ONE dedupPairs over the union). */
+    * lose recall (disclosed via the census metrics), never precision.
+    *
+    * The pairs are NOT deduped: every caller unions them with other raw
+    * pair sources and runs ONE dedupPairs over the union (see
+    * [[rawCandidatesFromCensus]] for why the raw form exists). */
   private[pipeline] def rawSaltedHotPairs(
       bands: DataFrame,
       census: DataFrame,
@@ -276,14 +293,69 @@ object Dedup {
       .where(col("jaccard") >= cfg.threshold)
   }
 
-  /** End-to-end: docs(id, text) → verified near-dup pairs. The signature
-    * relation is cached (reused by banding AND the verify join); callers that
-    * fully materialize the result should release it via the returned handle
-    * — [[clusters]]/[[clustersWithLcs]] do. */
-  /** Internal pipeline assembly; returns the verified pairs plus every
-    * DataFrame it pinned (signatures AND the bucket census — the census is
-    * materialized once by the hot-bucket probe and reused by the candidate
-    * join and, when needed, the salted path). */
+  /** The probe-side cutover of every small-keyed join on the store paths:
+    * a key set of at most this many rows (bounded from a count the caller
+    * already holds) is broadcast; anything larger, or an empty set, is
+    * shuffle-probed. 2M keys is ~16 MB of longs. */
+  private[pipeline] val BroadcastKeyLimit = 2000000L
+
+  /** A provably small key set broadcasts, anything else shuffle-probes
+    * (NEVER an implicit broadcast of an unbounded side). */
+  private[pipeline] def probeSide(keys: DataFrame, provablySmall: Boolean): DataFrame =
+    if (provablySmall) broadcast(keys) else keys.hint("shuffle_hash")
+
+  /** Stage VERIFY as the stores run it, shared by [[CheckpointedDedup]]
+    * (all candidates) and [[IncrementalDedup]] (the unadjudicated ones):
+    * exact Jaccard, then the LCS pass for long exact overlaps (north rule),
+    * over docs PRUNED to the ids that appear in `pairs`.
+    *
+    * A shuffle-side prune still SHUFFLES the whole corpus-sized docs
+    * relation (Spark probes the build side during the big side's shuffle
+    * read) — on a host with 3.2 ms shuffle syscalls that shuffle IS the
+    * cost (measured on the incremental probe). The pair set is counted by
+    * the caller (`nPairs`), so a small id set broadcasts EXPLICITLY and the
+    * docs are probed at scan time with no shuffle of the wide text
+    * payloads. The shuffle_hash fallback covers
+    * the unbounded worst case (a pair set that covers half the corpus);
+    * nPairs > 0 also guards the phantom-broadcast trap: an explicit
+    * broadcast of an EMPTY long-keyed relation costs ~513 MiB of storage
+    * accounting in this runtime. `idLimit` exists so specs can force the
+    * fallback.
+    *
+    * The pruned docs are CACHED — O(pairs) rows, referenced three times
+    * (shingle re-derivation + both LCS text joins) — and returned so the
+    * caller unpersists them after its stage write. Shingles for these docs
+    * are RE-DERIVED from their text instead of re-read from a shingle
+    * checkpoint: shingling is a pure function of text, the LCS pass scans
+    * these texts anyway, and the checkpoint read was an O(corpus)
+    * scan+decode of the widest relation in the store for an O(pairs) pair
+    * set (measured ~8 s of the text-heavy probe's verify stage).
+    *
+    * @param pairs (id_a, id_b) candidate pairs, counted
+    * @param docs  (id, text, …) the docs every pair id resolves in
+    * @return (verified pairs (id_a, id_b, jaccard, lcs_len), pruned docs)
+    */
+  private[pipeline] def prunedVerify(
+      pairs: DataFrame,
+      nPairs: Long,
+      docs: DataFrame,
+      cfg: DedupConfig,
+      idLimit: Long = BroadcastKeyLimit): (DataFrame, DataFrame) = {
+    val ids = pairs.select(col("id_a").as("id"))
+      .union(pairs.select(col("id_b").as("id")))
+      .distinct()
+    val prunedDocs = docs.join(probeSide(ids, nPairs > 0 && nPairs <= idLimit), "id").cache()
+    val prunedShingles = prunedDocs.select(col("id"), shingleHashes(cfg)(col("text")).as("shingles"))
+    (withLcsColumn(verify(pairs, prunedShingles, cfg), prunedDocs), prunedDocs)
+  }
+
+  /** Internal pipeline assembly, end-to-end: docs(id, text) → verified
+    * near-dup pairs. Returns the verified pairs plus every DataFrame it
+    * pinned: the signatures (reused by banding AND the verify join) and the
+    * bucket census (materialized once by the hot-bucket probe and reused by
+    * the candidate join and, when needed, the salted path). Callers that
+    * fully materialize the result should release them — [[clusters]]
+    * does. */
   private def verifiedWithCaches(docs: DataFrame, cfg: DedupConfig): (DataFrame, Seq[DataFrame]) = {
     val sigs = signatures(docs, cfg).cache()
     val bandsDf = bands(sigs, cfg)
@@ -301,14 +373,7 @@ object Dedup {
     val hasHot = cfg.saltWindow > 0 &&
       census.agg(count(when(col("bucket_size") > cfg.maxBucket, 1)).as("c"))
         .first().getLong(0) > 0
-    // hot path: union the RAW in-cap and salted pairs, then ONE dedupPairs —
-    // the dedup-then-union-then-dedup shape exchanged + re-aggregated the
-    // biggest intermediate (the in-cap pair relation) twice
-    val pairs =
-      if (hasHot)
-        dedupPairs(rawCandidatesFromCensus(bandsDf, census, cfg)
-          .union(rawSaltedHotPairs(bandsDf, census, sigs, cfg)))
-      else candidatesFromCensus(bandsDf, census, cfg)
+    val pairs = candidatePairs(bandsDf, census, sigs, cfg, hasHot)
     (verify(pairs, sigs.select("id", "shingles"), cfg), Seq(sigs, census))
   }
 
@@ -345,22 +410,5 @@ object Dedup {
       .join(texts.select(col("id").as("id_b"), col("text").as("text_b")), "id_b")
       .select(col("id_a"), col("id_b"), col("jaccard"),
         call_function("graft_lcs_len", col("text_a"), col("text_b")).as("lcs_len"))
-  }
-
-  /** Verified pairs with the longest-common-substring column
-    * (north rule's "substring pass for long exact overlaps"). */
-  def verifiedPairsWithLcs(docs: DataFrame, cfg: DedupConfig): DataFrame =
-    withLcsColumn(nearDupPairs(docs, cfg), docs)
-
-  /** Full in-memory pipeline (shingle → sig → band → candidates → exact
-    * Jaccard + LCS verify → clusters) without per-stage checkpoint IO — the
-    * unit of work for throughput/scaling benchmarks. */
-  def clustersWithLcs(docs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val (verified, caches) = verifiedWithCaches(docs, cfg)
-    val out = ConnectedComponents.run(
-      docs.select("id"),
-      withLcsColumn(verified, docs).select("id_a", "id_b"))
-    caches.foreach(_.unpersist(blocking = false))
-    out
   }
 }

@@ -177,20 +177,10 @@ object IncrementalDedup {
     // O(increments × stages) manifest walk at ~8 separate call sites)
     def readAllPre(stage: String): DataFrame = unionOf(spark, baseDir, priorInc, stage)
     def latestPre(stage: String): DataFrame = latestOf(spark, baseDir, priorInc, stage)
-    // explicit probe-shape cutover shared by every small-keyed join below:
-    // a provably small key set broadcasts, anything else shuffle-probes
-    // (NEVER an implicit broadcast of an unbounded side)
-    def probeSide(df: DataFrame, provablySmall: Boolean): DataFrame =
-      if (provablySmall) broadcast(df) else df.hint("shuffle_hash")
 
     val oldDocs = readAllPre("docs") // (id, url, text)
     val oldCand = latestPre("candidates")
     val oldVerified = latestPre("verified_pairs")
-
-    // -Dgraft.inc.verbose=true → per-stage wall on stdout. The manifest's
-    // wallMillis is the same full wall: TableIO.write's by-name wallMillis
-    // parameter is evaluated AFTER the materializing data write.
-    val verbose = java.lang.Boolean.getBoolean("graft.inc.verbose")
 
     // The increment input is scanned twice (fingerprint + docs stage).
     // An increment is SMALL by definition (a daily batch, not the corpus),
@@ -207,30 +197,24 @@ object IncrementalDedup {
     // All eight stages are written into IncDirs.commit's private staging
     // dir and published by one rename: readers see the complete inc-<k> or
     // nothing. A lost race must be re-run against the winner's docs —
-    // blindly retrying with k+1 would re-add them.
+    // blindly retrying with k+1 would re-add them. Every stage goes through
+    // StageRunner (as IncDirs.appendStages does); inside a fresh staging dir
+    // each one recomputes, and its manifest records the full wall and the
+    // family tag.
+    val famTag = Map("family" -> family)
     val (finalDir, (nNewDocs, nToVerify, nVerifiedTotal)) =
       IncDirs.commit(baseDir, k, "increment") { dir =>
-        def stage(name: String, salt: String, extra: Map[String, String] = Map.empty)(
-            compute: => DataFrame): DataFrame = {
-          val t0 = System.nanoTime()
-          val df = compute
-          TableIO.write(df, s"$dir/$name", name, incHash(name, salt),
-            (System.nanoTime() - t0) / 1000000L,
-            extra = extra + ("family" -> family))
-          if (verbose)
-            println(f"[inc] $name%-15s ${(System.nanoTime() - t0) / 1e9}%7.2f s (incl. write)")
-          TableIO.read(spark, s"$dir/$name")
-        }
+        val runner = new StageRunner(spark, dir)
 
         // 1. fresh docs only (byte-identical-text-per-url contract: a re-crawled
         // url is the SAME document — dropped here, like dropDuplicates within a
         // batch), with ids unique AND disjoint from every existing id
-        val newDocsDf = stage("docs", salt) {
+        val newDocsDf = runner.stage("docs", incHash("docs", salt), famTag) {
           val fresh = newPagesC.dropDuplicates("url")
             .join(oldDocs.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
           DocIds.assignDisjoint(fresh, oldDocs.select("id"))
             .select(col("id"), col("url"), col("text"))
-        }
+        }.df
         newPagesC.unpersist(blocking = false) // docs stage write materialized it
 
         // 2-3. text-width stages for NEW rows only — the whole point. Codegen
@@ -238,15 +222,12 @@ object IncrementalDedup {
         // BACKFILL increment is corpus-shaped and would pay interpreted-UDF
         // boxing for every row (VERDICT r4 What's wrong #1).
         graft.functions.GraftExpressions.register(spark)
-        val sh = Dedup.shingleHashes(cfg) _
-        val newShingles = stage("shingles", salt) {
-          newDocsDf.select(col("id"), sh(col("text")).as("shingles"))
-        }
-        val newSigs = stage("signatures", salt) {
-          newShingles.select(col("id"),
-            call_function("graft_minhash_sig",
-              col("shingles"), lit(cfg.numHashes), lit(cfg.seed)).as("sig"))
-        }
+        val newShingles = runner.stage("shingles", incHash("shingles", salt), famTag) {
+          newDocsDf.select(col("id"), Dedup.shingleHashes(cfg)(col("text")).as("shingles"))
+        }.df
+        val newSigs = runner.stage("signatures", incHash("signatures", salt), famTag) {
+          newShingles.select(col("id"), Dedup.minhashSig(cfg)(col("shingles")).as("sig"))
+        }.df
 
         // 4. ADDITIVE band/census extension (VERDICT r4 #3). Bands are
         // stateless per doc and census counts are additive, so the increment
@@ -260,7 +241,8 @@ object IncrementalDedup {
         // checkpoints, instead of the r4 form's O(union) re-banding of every
         // signature + O(union·bands) census shuffle.
         val nNewDocs = TableIO.readManifest(s"$dir/docs").map(_.rows).getOrElse(0L)
-        val newBands = stage("bands", salt)(Dedup.bands(newSigs, cfg))
+        val newBands =
+          runner.stage("bands", incHash("bands", salt), famTag)(Dedup.bands(newSigs, cfg)).df
         val deltaCensusDf = Dedup.bucketCensus(newBands)
 
         val prevCensusManifest =
@@ -270,7 +252,6 @@ object IncrementalDedup {
         val prevMaxBucket = prevCensusManifest
           .flatMap(_.extra.get("maxBucketSize")).map(_.toLong).getOrElse(0L)
 
-        val bcKeyLimit = java.lang.Long.getLong("graft.inc.broadcastKeyLimit", 2000000L)
         // an EMPTY increment (all re-crawls) writes empty bands/census stages
         // and touches nothing — guarding here also keeps the explicit key
         // broadcast below provably non-empty (the phantom-broadcast trap)
@@ -281,8 +262,8 @@ object IncrementalDedup {
             // nNewDocs·bands bounds the touched-key count exactly, with no
             // extra count() action; a daily increment broadcasts, a
             // backfill-sized one falls back to a shuffle probe
-            val keys = probeSide(deltaCensusDf.select("band_hash"),
-              nNewDocs * cfg.bands <= bcKeyLimit)
+            val keys = Dedup.probeSide(deltaCensusDf.select("band_hash"),
+              nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
             val prevTouched = readAllPre("census").join(keys, "band_hash")
               .groupBy("band_hash").agg(sum("bucket_size").as("bucket_size"))
               .cache()
@@ -301,10 +282,10 @@ object IncrementalDedup {
               math.max(prevMaxBucket, nowStats.getLong(1)),
               nowStats.getLong(0))
           }
-        val deltaCensusOut = stage("census", salt, Map(
+        runner.stage("census", incHash("census", salt), Map(
           "cappedBuckets" -> cappedCum.toString,
           "maxBucketSize" -> maxBucketCum.toString,
-          "saltWindow" -> cfg.saltWindow.toString))(deltaCensusDf)
+          "saltWindow" -> cfg.saltWindow.toString) ++ famTag)(deltaCensusDf)
 
         val unionCand = {
           // raw (undeduped) pair additions from this increment; ONE dedupPairs
@@ -317,14 +298,12 @@ object IncrementalDedup {
             else {
               val gateCount =
                 touchedCensus.where(col("bucket_size").between(2, cfg.maxBucket)).count()
-              if (verbose)
-                println(s"[inc] touched buckets in-cap (pair-eligible): $gateCount")
               if (gateCount == 0) None
               else {
-                val gate = probeSide(
+                val gate = Dedup.probeSide(
                   touchedCensus
                     .where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"),
-                  nNewDocs * cfg.bands <= bcKeyLimit)
+                  nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
                 // old band rows are consulted ONLY for gated touched buckets —
                 // a broadcast probe applied at the columnar checkpoint scan,
                 // never a shuffle of the untouched corpus
@@ -368,76 +347,46 @@ object IncrementalDedup {
             case Some(add) => Dedup.dedupPairs(oldCand.unionByName(add))
           }
         }
-        val candOut = stage("candidates", salt)(unionCand)
+        val candOut = runner.stage("candidates", incHash("candidates", salt), famTag)(unionCand).df
         touchedCaches.foreach(_.unpersist(blocking = false))
 
-        // 5. verify ONLY unadjudicated pairs, with shingles drawn from the
-        // union (one side of a new pair may be an old doc — its shingles come
-        // from the base checkpoint, not from re-hashed text). The shingle and
-        // text relations are PRUNED to ids that actually appear in those pairs
-        // before the verify joins: without the prune the sort-merge join sorts
+        // 5. verify ONLY unadjudicated pairs, with docs drawn from the union
+        // (one side of a new pair may be an old doc). The docs are PRUNED to
+        // ids that actually appear in those pairs before the verify joins
+        // (Dedup.prunedVerify): without the prune the sort-merge join sorts
         // the ENTIRE union shingle relation (O(corpus·shingle-width) — measured
         // 37 s of a 50 s increment on the text-heavy probe) for a pair set that
         // is O(new dups). The id prune keeps verify proportional to the work,
-        // which is the whole point of the incremental path.
+        // which is the whole point of the incremental path. Its shingles are
+        // re-derived from the pruned docs' text: O(pairs) work — NOT a
+        // violation of the never-re-hash-old-text contract, which is about
+        // corpus-proportional cost.
         // toVerify is CACHED: the driver-side count below materializes it
         // anyway, and it is otherwise re-evaluated (candidates anti-join and
         // all) by the id-prune union and the verify join.
         val toVerify = candOut.join(oldCand.hint("shuffle_hash"), Seq("id_a", "id_b"), "left_anti")
           .cache()
         val nToVerify = toVerify.count()
-        if (verbose) println(s"[inc] unadjudicated pairs to verify: $nToVerify")
         val unionDocsAll = oldDocs.unionByName(newDocsDf)
         var verifyCaches: Seq[DataFrame] = Seq(toVerify)
         // ZERO unadjudicated pairs — the common daily case — skips the entire
-        // verify sub-plan: building it anyway would explicitly broadcast an
-        // EMPTY long-keyed id relation, the exact phantom-broadcast shape this
-        // runtime accounts ~513 MiB for (evicting CC's localCheckpoint blocks
-        // in the clusters stage right after) — the repo's own documented trap.
+        // verify sub-plan: building it anyway would run the prune, Jaccard
+        // and LCS joins over an empty pair set (prunedVerify keeps an empty
+        // id set off the broadcast path, the phantom-broadcast shape this
+        // runtime accounts ~513 MiB for).
         val unionVerified =
           if (nToVerify == 0) oldVerified
           else {
-            // A shuffle-side prune still SHUFFLES the whole corpus-sized
-            // relation (Spark probes the build side during the big side's
-            // shuffle read) — on this VM's 3.2 ms-syscall path that shuffle IS
-            // the cost. The pair set is known small (counted above; pairs are
-            // O(new dups), not O(corpus)), so the id set broadcasts EXPLICITLY
-            // and the docs relation is probed at scan time with no shuffle of
-            // the wide payloads. The shuffle_hash fallback covers the
-            // unbounded worst case (a degenerate increment that candidates
-            // half the corpus); the cutover is overridable so tests can force
-            // the fallback (-Dgraft.inc.broadcastIdLimit=0).
-            val broadcastIdLimit =
-              java.lang.Long.getLong("graft.inc.broadcastIdLimit", 2000000L)
-            val vIds0 = toVerify.select(col("id_a").as("id"))
-              .union(toVerify.select(col("id_b").as("id")))
-              .distinct()
-            val vIds =
-              if (nToVerify <= broadcastIdLimit) broadcast(vIds0)
-              else vIds0.hint("shuffle_hash")
-            // docs of the unadjudicated pairs, CACHED: O(pairs) rows,
-            // referenced three times (shingle re-derivation + both LCS text
-            // joins). Shingles for these docs are RE-DERIVED from their text
-            // instead of re-read from the base shingle checkpoint: shingling
-            // is a pure function of text, the LCS pass scans these texts
-            // anyway, and the checkpoint read was an O(corpus) scan+decode of
-            // the widest relation in the store for an O(new-dups) pair set
-            // (measured ~8 s of the text-heavy probe's verify stage).
-            // Re-hashing here is O(pairs) work — NOT a violation of the
-            // never-re-hash-old-text contract, which is about
-            // corpus-proportional cost.
-            val prunedDocs = unionDocsAll.join(vIds, "id").cache()
+            val (newVerified, prunedDocs) = Dedup.prunedVerify(toVerify, nToVerify, unionDocsAll, cfg)
             verifyCaches :+= prunedDocs
-            val prunedShingles = prunedDocs.select(col("id"), sh(col("text")).as("shingles"))
-            val newVerified = Dedup.withLcsColumn(
-              Dedup.verify(toVerify, prunedShingles, cfg), prunedDocs)
             oldVerified.unionByName(newVerified).dropDuplicates("id_a", "id_b")
           }
-        val verifiedOut = stage("verified_pairs", salt)(unionVerified)
+        val verifiedOut =
+          runner.stage("verified_pairs", incHash("verified_pairs", salt), famTag)(unionVerified).df
         verifyCaches.foreach(_.unpersist(blocking = false)) // stage write materialized them
 
         // 6. clusters over every id + the union verified pairs
-        stage("clusters", salt) {
+        runner.stage("clusters", incHash("clusters", salt), famTag) {
           ConnectedComponents.run(
             unionDocsAll.select("id"), verifiedOut.select("id_a", "id_b"))
         }

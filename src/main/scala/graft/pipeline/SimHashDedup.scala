@@ -60,7 +60,7 @@ object SimHashDedup {
     * (one row per non-singleton chunk bucket), and this runtime's measured
     * phantom-broadcast pathology (~513 MiB accounted per long-keyed
     * HashedRelation) makes an AQE broadcast flip an OOM risk — same trap,
-    * same fix as Dedup.candidatesFromCensus. */
+    * same fix as Dedup.rawCandidatesFromCensus. */
   def pairs(docs: DataFrame, maxHamming: Int, maxBucket: Long): DataFrame = {
     val ch = chunks(fingerprints(docs)).cache()
     val keys = Seq("chunk_idx", "chunk")

@@ -346,30 +346,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("inc-1"))
   }
 
-  test("shuffle fallback of the verify id-prune matches the broadcast path") {
-    // -Dgraft.inc.broadcastIdLimit=0 forces the unbounded-id-set fallback
-    // (shuffle_hash prune); output must be identical to the broadcast path
-    val n = 120L
-    val all = PagesGen.pages(spark, n, seed = 23L, partitions = 4)
-    def runWith(limit: String, dirPrefix: String): Map[Long, Long] = {
-      val prev = System.getProperty("graft.inc.broadcastIdLimit")
-      System.setProperty("graft.inc.broadcastIdLimit", limit)
-      try {
-        val dir = tmp(dirPrefix)
-        CheckpointedDedup.run(spark, all.where(col("id") % 2 === 0).drop("id"), cfg, dir)
-        IncrementalDedup.run(spark, all.where(col("id") % 2 === 1).drop("id"), cfg, dir)
-          .clusters.select("id", "cluster_id")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      } finally {
-        if (prev == null) System.clearProperty("graft.inc.broadcastIdLimit")
-        else System.setProperty("graft.inc.broadcastIdLimit", prev)
-      }
-    }
-    val viaShuffle = runWith("0", "graft-inc-shuf")
-    val viaBroadcast = runWith("2000000", "graft-inc-bcast")
-    assert(viaShuffle.nonEmpty && viaShuffle == viaBroadcast)
-  }
-
   test("a crashed stage REWRITE cannot leave a stale valid-looking manifest") {
     import spark.implicits._
     val dir = tmp("graft-rewrite-crash")
