@@ -358,7 +358,7 @@ object SparkEntry {
     * TakeOrdered (per-partition top-C + merge, no global sort); assignment
     * is a FUSED narrow map — graft_ivf_argmax over plan-time literal
     * centroids, no join and no exchange at all (above
-    * graft.ivf.fusedCellLimit cells it falls back to the relational
+    * IvfIndex.FusedCellLimit cells it falls back to the relational
     * crossJoin + map-side-partial `max(struct(score, -cid))` groupBy,
     * whose shuffle carries n skinny rows — never the n×C scored cross
     * product); candidates probe the assignment relation with a broadcast

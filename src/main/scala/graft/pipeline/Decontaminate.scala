@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
   *    needed: a boilerplate bucket shared with an eval doc is genuine
   *    contamination output, linear in its size, not an O(n²) self-join;
   *  - verification is O(pairs): the candidate ids are counted (they are
-  *    already materialized by the pair-dedup exchange) and, when sparse,
-  *    the corpus text is re-read through a broadcast id probe — the same
-  *    id-prune posture as [[IncrementalDedup]]'s verify and
-  *    [[CheckpointedDedup]]'s base verify — so corpus-wide shingle
-  *    relations are never shuffled for a handful of contaminated docs.
+  *    already materialized by the pair-dedup exchange) and the corpus text
+  *    is re-read through an id probe — broadcast when the count proves it
+  *    small, shuffle_hash above [[Dedup.BroadcastKeyLimit]]; the posture of
+  *    [[Dedup.prunedVerify]], the stores' one verify — so corpus-wide
+  *    shingle relations are never shuffled for a handful of contaminated
+  *    docs.
   *
   * Two entry shapes:
   *  - [[pairsWithHandle]] over an in-memory (id, text) corpus;
@@ -59,26 +60,24 @@ import org.apache.spark.sql.functions._
 object Decontaminate {
 
   /** Above this many eval-side band rows (nEval·bands) the explicit
-    * broadcast falls back to a shuffle probe — ~16 B/row, so the default
-    * caps the broadcast at ~80 MB. Overridable for tests and big-memory
-    * clusters via -Dgraft.decon.broadcastBandLimit. */
-  def broadcastBandLimit: Long =
-    java.lang.Long.getLong("graft.decon.broadcastBandLimit", 5000000L)
-
-  /** Above this many candidate pairs the verify stage's broadcast id probe
-    * falls back to a corpus-wide sort-merge shingle join (the unbounded
-    * worst case: an eval set near-duplicating half the corpus).
-    * -Dgraft.decon.pruneIdLimit. */
-  def pruneIdLimit: Long =
-    java.lang.Long.getLong("graft.decon.pruneIdLimit", 2000000L)
+    * broadcast falls back to a shuffle probe — ~16 B/row, so this caps the
+    * broadcast at ~80 MB. */
+  private[pipeline] val EvalBandLimit = 5000000L
 
   /** Byte budget for broadcasting the eval SHINGLE relation in the verify
     * join. Unlike band rows (16 B flat), shingle arrays are ~8 B per
     * SHINGLE — a web page is KBs of hashes — so this decision is made on
     * the measured total (one agg over the already-cached tiny side), not
-    * on the doc count. -Dgraft.decon.broadcastShingleBytes. */
-  def broadcastShingleBytes: Long =
-    java.lang.Long.getLong("graft.decon.broadcastShingleBytes", 64L << 20)
+    * on the doc count. */
+  private[pipeline] val EvalShingleBytes = 64L << 20
+
+  /** The three counted broadcast-or-shuffle cutovers of one run: eval band
+    * rows, eval shingle bytes and candidate pairs; specs lower them to
+    * reach every fallback. */
+  private[graft] final case class Limits(
+      bandRows: Long = EvalBandLimit,
+      shingleBytes: Long = EvalShingleBytes,
+      pairs: Long = Dedup.BroadcastKeyLimit)
 
   private def emptyResult(spark: SparkSession): (DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
@@ -89,27 +88,21 @@ object Decontaminate {
     * side comes from (in-memory text vs checkpoint tables).
     *
     * @param corpusBands (id, band_hash) — one narrow pass or a checkpoint scan
-    * @param prunedShingles candidate-ids relation → (doc_id, sh_a) via a
-    *                       broadcast id probe (O(pairs) rows out)
-    * @param denseShingles corpus-wide (doc_id, sh_a), merge-hinted — the
-    *                      fallback when the pair set is NOT sparse
+    * @param corpusDocs  (id, text) — read only at the candidate ids
     */
   private def flagAgainstEval(
       evalSigs: DataFrame,
       nEval: Long,
       evalShingleBytes: Long,
       corpusBands: DataFrame,
-      prunedShingles: DataFrame => DataFrame,
-      denseShingles: () => DataFrame,
-      cfg: DedupConfig): (DataFrame, Seq[DataFrame]) = {
+      corpusDocs: DataFrame,
+      cfg: DedupConfig,
+      limits: Limits): (DataFrame, Seq[DataFrame]) = {
     val spark = evalSigs.sparkSession
     val evalBands = Dedup.bands(evalSigs, cfg)
       .select(col("id").as("eval_id"), col("band_hash"))
-    val evalSide =
-      if (nEval * cfg.bands <= broadcastBandLimit) broadcast(evalBands)
-      else evalBands.hint("shuffle_hash")
     val cand = corpusBands
-      .join(evalSide, "band_hash")
+      .join(Dedup.probeSide(evalBands, nEval * cfg.bands <= limits.bandRows), "band_hash")
       .select(col("id").as("doc_id"), col("eval_id"))
     // Partitioned by doc_id ONLY (dedupPairs rationale): the verify join on
     // doc_id reuses this exchange instead of re-shuffling the pair relation.
@@ -123,19 +116,16 @@ object Decontaminate {
       return emptyResult(spark)
     }
 
-    // Verify: exact Jaccard on the candidate pairs — O(pairs) via the
-    // broadcast id probe when sparse, corpus-wide merge join when dense.
-    val corpusSh =
-      if (nPairs <= pruneIdLimit)
-        prunedShingles(pairs.select(col("doc_id").as("id")).distinct())
-      else denseShingles()
+    // Verify: exact Jaccard over the docs pruned to the candidate ids
+    // (nPairs > 0: never an empty broadcast), shingles RE-DERIVED from text
+    val corpusSh = corpusDocs
+      .join(Dedup.probeSide(pairs.select(col("doc_id").as("id")).distinct(),
+        nPairs <= limits.pairs), "id")
+      .select(col("id").as("doc_id"), Dedup.shingleHashes(cfg)(col("text")).as("sh_a"))
     val evalSh = evalSigs.select(col("id").as("eval_id"), col("shingles").as("sh_b"))
-    val evalShSide =
-      if (evalShingleBytes <= broadcastShingleBytes) broadcast(evalSh)
-      else evalSh.hint("shuffle_hash")
     val out = pairs
       .join(corpusSh, "doc_id")
-      .join(evalShSide, "eval_id")
+      .join(Dedup.probeSide(evalSh, evalShingleBytes <= limits.shingleBytes), "eval_id")
       .select(col("doc_id"), col("eval_id"),
         call_function("graft_jaccard_sorted", col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= cfg.threshold)
@@ -170,7 +160,14 @@ object Decontaminate {
   def pairsWithHandle(
       corpus: DataFrame,
       evalSet: DataFrame,
-      cfg: DedupConfig): (DataFrame, Seq[DataFrame]) = {
+      cfg: DedupConfig): (DataFrame, Seq[DataFrame]) =
+    pairsWithHandle(corpus, evalSet, cfg, Limits())
+
+  private[graft] def pairsWithHandle(
+      corpus: DataFrame,
+      evalSet: DataFrame,
+      cfg: DedupConfig,
+      limits: Limits): (DataFrame, Seq[DataFrame]) = {
     val spark = corpus.sparkSession
     graft.functions.GraftExpressions.register(spark)
     val (evalSigs, nEval, evalShBytes) = evalSide(evalSet, cfg)
@@ -183,29 +180,31 @@ object Decontaminate {
       // operator is the O(candidates) pair-dedup repartition
       corpusBands = Dedup.bands(
         Dedup.signatures(corpus, cfg).where(size(col("shingles")) > 0), cfg),
-      // shingles RE-DERIVED from the pruned docs' text (O(pairs) hashing —
-      // shingling is a pure function of text) behind a broadcast id probe
-      prunedShingles = ids => corpus.join(broadcast(ids), "id")
-        .select(col("id").as("doc_id"), Dedup.shingleHashes(cfg)(col("text")).as("sh_a")),
-      denseShingles = () => Dedup.signatures(corpus, cfg)
-        .select(col("id").as("doc_id"), col("shingles").as("sh_a"))
-        .hint("merge"),
-      cfg)
+      corpusDocs = corpus,
+      cfg, limits)
   }
 
   /** Decontamination over a COMPLETED (possibly incremented)
     * [[CheckpointedDedup]] store: the corpus side comes entirely from the
     * store's checkpoints — `bands` (16 B/row, probed by the eval
-    * broadcast), `docs` only for the O(pairs) pruned verify, `shingles`
-    * only on the dense fallback — so NO corpus text is re-hashed. The
-    * store is validated first ([[IncrementalDedup.validateStore]]): every
-    * stage must exist under exactly this cfg's hash family, and every
-    * committed increment must carry the same family tag. */
+    * broadcast) and `docs` only for the O(pairs) pruned verify — so NO
+    * corpus text is re-hashed. The store is validated first
+    * ([[IncrementalDedup.validateStore]]): every stage must exist under
+    * exactly this cfg's hash family, and every committed increment must
+    * carry the same family tag. */
   def pairsFromCheckpoints(
       spark: SparkSession,
       baseDir: String,
       evalSet: DataFrame,
-      cfg: DedupConfig): (DataFrame, Seq[DataFrame]) = {
+      cfg: DedupConfig): (DataFrame, Seq[DataFrame]) =
+    pairsFromCheckpoints(spark, baseDir, evalSet, cfg, Limits())
+
+  private[graft] def pairsFromCheckpoints(
+      spark: SparkSession,
+      baseDir: String,
+      evalSet: DataFrame,
+      cfg: DedupConfig,
+      limits: Limits): (DataFrame, Seq[DataFrame]) = {
     graft.functions.GraftExpressions.register(spark)
     IncrementalDedup.validateStore(baseDir, cfg)
     val (evalSigs, nEval, evalShBytes) = evalSide(evalSet, cfg)
@@ -217,15 +216,8 @@ object Decontaminate {
       // dropped, the constant empty-signature band hash matches nothing
       // (up to a 64-bit collision, which exact verify then rejects)
       corpusBands = IncrementalDedup.readAll(spark, baseDir, "bands"),
-      prunedShingles = ids => IncrementalDedup.readAll(spark, baseDir, "docs")
-        .join(broadcast(ids), "id")
-        .select(col("id").as("doc_id"), Dedup.shingleHashes(cfg)(col("text")).as("sh_a")),
-      // the dense fallback reads the shingle CHECKPOINT (still no re-hash;
-      // the O(corpus) scan+sort is the honest cost of a dense pair set)
-      denseShingles = () => IncrementalDedup.readAll(spark, baseDir, "shingles")
-        .select(col("id").as("doc_id"), col("shingles").as("sh_a"))
-        .hint("merge"),
-      cfg)
+      corpusDocs = IncrementalDedup.readAll(spark, baseDir, "docs"),
+      cfg, limits)
   }
 
   /** Convenience form; leaves the pinned relations cached until the caller
@@ -240,8 +232,9 @@ object Decontaminate {
     * when sparse — a static Catalyst size estimate of the candidate+verify
     * subtree routinely exceeds the auto-broadcast threshold, and the
     * resulting sort-merge anti-join would shuffle-WRITE the whole corpus
-    * text payload even when AQE later localizes the read — merge-hinted
-    * (AQE skew-splittable, never a corpus broadcast) in the dense case.
+    * text payload even when AQE later localizes the read — shuffle_hash
+    * above [[Dedup.BroadcastKeyLimit]] (never a corpus broadcast), the
+    * verify's own [[Dedup.probeSide]] choice.
     * Zero flags short-circuit to the corpus unchanged (broadcasting an
     * EMPTY long-keyed relation is the phantom-broadcast trap). Pinned
     * relations are O(eval)+O(pairs); released at the caller's next
@@ -254,7 +247,6 @@ object Decontaminate {
       ids.unpersist(blocking = false)
       return corpus
     }
-    val side = if (nFlagged <= pruneIdLimit) broadcast(ids) else ids.hint("merge")
-    corpus.join(side, Seq("id"), "left_anti")
+    corpus.join(Dedup.probeSide(ids, nFlagged <= Dedup.BroadcastKeyLimit), Seq("id"), "left_anti")
   }
 }

@@ -52,6 +52,9 @@ object IvfIndex {
   private def cellScore(vec: Column): Column =
     call_function("graft_dot", vec, col("cv")).cast("double") / col("cnorm")
 
+  /** Cell count above which [[assignment]] runs the relational form. */
+  private[pipeline] val FusedCellLimit = 100000
+
   /** (vec_id, cid): every vector's max-score cell — the index's dominant
     * cost (n·C·d multiply-adds).
     *
@@ -60,48 +63,44 @@ object IvfIndex {
     * via graft_ivf_argmax: a narrow map, no join, no exchange. The
     * relational crossJoin + max(struct(score, −cid)) groupBy — which pays a
     * joined-row copy and an aggregate update per (vector, cell) pair plus a
-    * shuffle of n rows — remains the fallback above
-    * -Dgraft.ivf.fusedCellLimit cells, where a driver collect of the
-    * centroid matrix would be its own hazard. Both paths pick the
-    * bitwise-identical winner (exact integer dots, same IEEE division,
-    * nan-safe comparison with ties at the smallest cid), which the oracle's
-    * row_number replicates; IvfFusedSpec pins their equality. */
+    * shuffle of n rows — remains the fallback above [[FusedCellLimit]]
+    * cells, where a driver collect of the centroid matrix would be its own
+    * hazard. Both paths pick the bitwise-identical winner (exact integer
+    * dots, same IEEE division, nan-safe comparison with ties at the
+    * smallest cid), which the oracle's row_number replicates; IvfFusedSpec
+    * pins their equality. */
   def assignment(e: DataFrame, cent: DataFrame, nCells: Int): DataFrame = {
     graft.functions.GraftExpressions.register(e.sparkSession)
-    val fusedLimit = sys.props.getOrElse("graft.ivf.fusedCellLimit", "100000").toInt
-    if (nCells <= fusedLimit) {
+    if (nCells <= FusedCellLimit) {
       val centRows = cent.orderBy("cid").collect()
       val flat = centRows.flatMap(_.getSeq[Long](1))
       val norms = centRows.map(_.getDouble(2))
       e.select(col("vec_id"),
         call_function("graft_ivf_argmax", col("v"), lit(flat), lit(norms)).as("cid"))
-    } else {
-      val scored = e.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("cid"), cellScore(col("v")).as("cs"))
-      // argmax by (score DESC, cid ASC) == max of struct(score, -cid):
-      // struct ordering is lexicographic and the scores are the same
-      // bitwise doubles the oracle computes
-      scored.groupBy("vec_id")
-        .agg(max(struct(col("cs"), (-col("cid")).as("ncid"))).as("m"))
-        .select(col("vec_id"), (-col("m.ncid")).as("cid"))
-    }
+    } else relationalAssignment(e, cent)
+  }
+
+  /** [[assignment]]'s relational form (IvfFusedSpec's reference). */
+  private[graft] def relationalAssignment(e: DataFrame, cent: DataFrame): DataFrame = {
+    val scored = e.crossJoin(broadcast(cent))
+      .select(col("vec_id"), col("cid"), cellScore(col("v")).as("cs"))
+    // argmax by (score DESC, cid ASC) == max of struct(score, -cid):
+    // struct ordering is lexicographic and the scores are the same
+    // bitwise doubles the oracle computes
+    scored.groupBy("vec_id")
+      .agg(max(struct(col("cs"), (-col("cid")).as("ncid"))).as("m"))
+      .select(col("vec_id"), (-col("m.ncid")).as("cid"))
   }
 
   /** Probe + exact top-k rerank over already-built index relations.
     *
     * Probed-cell membership: the ≤ probes·nprobe cell keys are broadcast so
     * the corpus-sized assignment relation is probed in place, never
-    * exchanged. The candidate set is cached (skinny 16 B rows) and COUNTED:
-    * when the count proves it small (≤ -Dgraft.ivf.broadcastCandLimit, the
-    * pruned-verify posture — probes·nprobe·E[cell] ≈ 10·√n rows), the
-    * rerank probes the corpus with a broadcast of the candidates at the
-    * scan — NO corpus-wide shuffle of the wide vector payload (measured at
-    * 800k vecs: the merge form shuffle-wrote the whole 400 MB corpus to
-    * look up ~6k candidate vectors). A skewed hot cell above the limit
-    * falls back to the merge join, which AQE can skew-split; a ZERO-row
-    * candidate set rides the merge branch too (the phantom-broadcast
-    * guard). The probe vectors re-join by explicit broadcast AFTER, so no
-    * wide probe array rides through the big join either way.
+    * exchanged. The candidate set is cached (skinny 16 B rows) and joined
+    * to the corpus through [[rerankJoin]] (probes·nprobe·E[cell] ≈ 10·√n
+    * rows: broadcast at the scan). The probe vectors re-join by explicit
+    * broadcast AFTER, so no wide probe array rides through the big join
+    * either way.
     *
     * @return (result, pinned caches) — callers unpersist the handles when
     *         done. */
@@ -174,13 +173,8 @@ object IvfIndex {
       .where(col("vec_id") =!= col("probe_id"))
       .select("probe_id", "vec_id")
       .cache()
-    val candLimit = sys.props.getOrElse("graft.ivf.broadcastCandLimit", "4000000").toLong
-    val nCands = cand.count()
-    val joined =
-      if (nCands > 0 && nCands <= candLimit) e.join(broadcast(cand), "vec_id")
-      else cand.join(e.hint("merge"), "vec_id")
     val wTop = Window.partitionBy("probe_id").orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val out = joined
+    val out = rerankJoin(cand, e)
       .join(broadcast(probeVecs), "probe_id")
       .select(col("probe_id"), col("vec_id"),
         call_function("graft_cosq", col("pv"), col("v")).as("cos_sim"))
@@ -189,6 +183,23 @@ object IvfIndex {
       .select("probe_id", "vec_id", "rnk", "cos_sim")
       .orderBy("probe_id", "rnk")
     (out, Seq(probeVecs, cand))
+  }
+
+  private[pipeline] val RerankBroadcastLimit = 4000000L
+
+  /** The counted rerank join of IVF and MIPS, candidates (cached by the
+    * caller) to corpus on vec_id. A counted-small set is broadcast at the
+    * corpus scan — NO corpus-wide shuffle of the wide payload (at 800k
+    * vecs the merge form shuffle-wrote the whole 400 MB corpus to look up
+    * ~6k candidates). Dense sets or a hot cell above `candLimit` (which
+    * specs lower to force it) run the merge join AQE can skew-split; so
+    * does an EMPTY set, dodging the ~513 MiB phantom-broadcast trap. */
+  private[pipeline] def rerankJoin(
+      cands: DataFrame, corpus: DataFrame,
+      candLimit: Long = RerankBroadcastLimit): DataFrame = {
+    val nCands = cands.count()
+    if (nCands > 0 && nCands <= candLimit) corpus.join(broadcast(cands), "vec_id")
+    else cands.join(corpus.hint("merge"), "vec_id")
   }
 
   // ---------------------------------------------------------------- store --

@@ -164,7 +164,13 @@ object SignAlshRetrieval {
     * the [[MipsIndex]] store query).
     * @return (result, pinned candidate cache) */
   def bucketRank(
-      corpus: DataFrame, probes0: DataFrame, plan: MipsPlan, k: Int): (DataFrame, Seq[DataFrame]) = {
+      corpus: DataFrame, probes0: DataFrame, plan: MipsPlan, k: Int): (DataFrame, Seq[DataFrame]) =
+    bucketRank(corpus, probes0, plan, k, IvfIndex.RerankBroadcastLimit)
+
+  /** With the rerank join's candidate limit, which specs lower to force it. */
+  private[graft] def bucketRank(
+      corpus: DataFrame, probes0: DataFrame, plan: MipsPlan, k: Int,
+      candLimit: Long): (DataFrame, Seq[DataFrame]) = {
     // the probe relation is tiny by contract — cache it (bucket join +
     // final hamming re-join) and COUNT it first: an empty probe set must
     // short-circuit BEFORE the probeBuckets broadcast below is built (an
@@ -196,26 +202,11 @@ object SignAlshRetrieval {
     val cands = (
       if (plan.tables == 1) matched
       else matched.dropDuplicates("probe_id", "vec_id")).cache()
-    // rank by total hamming over EVERY table's planes: candidates-only
-    // re-join to the cached bits. Same counted posture as SparkEntry.ivfTopK:
-    // the skinny (16 B/row) candidate set is counted, and when small it is
-    // BROADCAST against the cached corpus bits — the merge form shuffle-writes
-    // the whole O(n·T)-long bits relation to look up ~probes·bucket rows
-    // (measured on the IVF twin: 400 MB shuffled for ~6k candidates at 800k
-    // vecs). Above the limit — dense candidates, where the corpus-wide sort
-    // is real work and a huge id broadcast its own hazard — the merge join
-    // runs, which AQE can skew-split. The probe bits re-join by broadcast
-    // AFTER, so no qbits array rides through the big join either way.
-    val candLimit = sys.props.getOrElse("graft.mips.broadcastCandLimit", "4000000").toLong
-    val nCands = cands.count()
-    // nCands > 0 also guards the phantom-broadcast trap (an explicit
-    // broadcast of an EMPTY long-keyed relation costs ~513 MiB of storage
-    // accounting in this runtime); the empty set rides the merge branch,
-    // which is inert over zero rows
-    val joined =
-      if (nCands > 0 && nCands <= candLimit) corpus.join(broadcast(cands), "vec_id")
-      else cands.join(corpus.hint("merge"), "vec_id")
-    val scored = joined
+    // rank by total hamming over EVERY table's planes: a candidates-only
+    // counted re-join to the cached O(n·T)-long bits (IvfIndex.rerankJoin).
+    // The probe bits re-join by broadcast AFTER, so no qbits array rides
+    // through the big join either way.
+    val scored = IvfIndex.rerankJoin(cands, corpus, candLimit)
       .join(broadcast(probes), "probe_id")
       .select(col("probe_id"), col("vec_id"),
         call_function("graft_hamming_sum", col("qbits"), col("bits")).as("hamming"))

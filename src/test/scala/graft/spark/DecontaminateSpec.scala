@@ -9,7 +9,9 @@ import graft.testkit.PagesGen
 
 /** Eval-set decontamination: exact ground truth equivalence on the planted
   * corpus, the empty/zero short-circuits (the phantom-broadcast guard), the
-  * broadcast→shuffle fallbacks, and the no-corpus-shuffle plan shape. */
+  * broadcast→shuffle fallbacks (reached through the non-public
+  * [[Decontaminate.Limits]] parameter), and the no-corpus-shuffle plan
+  * shape. */
 class DecontaminateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -53,19 +55,19 @@ class DecontaminateSpec extends AnyFunSuite {
     found.foreach { case (k, j) => assert(j == truth(k), s"jaccard mismatch at $k") }
   }
 
-  test("broadcast fallbacks (band shuffle + dense merge verify) agree") {
-    val props = Seq("graft.decon.broadcastBandLimit", "graft.decon.pruneIdLimit",
-      "graft.decon.broadcastShingleBytes")
-    val saved = props.map(p => p -> Option(System.getProperty(p)))
-    props.foreach(p => System.setProperty(p, "0"))
-    try {
-      val fb = Decontaminate.pairs(trainPart, evalPart, cfg)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(fb == found)
-    } finally saved.foreach {
-      case (p, Some(v)) => System.setProperty(p, v)
-      case (p, None)    => System.clearProperty(p)
-    }
+  test("shuffle fallbacks (bands, eval shingles, id prune) agree") {
+    // every counted cutover forced to its shuffle side: the eval band join,
+    // the eval shingle join and the verify's id probe (the pruned docs
+    // behind a shuffle_hash probe — there is no second, dense verify)
+    spark.catalog.clearCache() // no cached relation of a default run reused
+    val (out, pinned) =
+      Decontaminate.pairsWithHandle(trainPart, evalPart, cfg, Decontaminate.Limits(0L, 0L, 0L))
+    val plan = out.queryExecution.optimizedPlan.toString
+    val fb = out.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    pinned.foreach(_.unpersist(blocking = false))
+    assert(plan.contains("strategy=shuffle_hash"), s"no shuffle_hash join:\n$plan")
+    assert(!plan.contains("strategy=broadcast"), s"a fallback still broadcasts:\n$plan")
+    assert(fb == found)
   }
 
   test("empty eval set short-circuits to an empty, correctly-typed result") {
@@ -170,6 +172,50 @@ class DecontaminateSpec extends AnyFunSuite {
         .pairsFromCheckpoints(spark, dir, ev2, cfg.copy(seed = 43L))._1.count()
     }
     assert(e.getMessage.contains("DIFFERENT config"))
+  }
+
+  test("checkpoint shuffle fallbacks = default = in-memory pairs") {
+    // the store path with every cutover forced: its verify reads the
+    // store's docs behind a shuffle_hash id probe, and neither path may
+    // read the shingles checkpoint; eval docs copy store docs from the
+    // base AND the increment, so both halves of the union are probed
+    import graft.pipeline.{CheckpointedDedup, IncrementalDedup}
+    import graft.sources.TableIO
+    val dir = java.nio.file.Files.createTempDirectory("graft-decon-ckpt-fb").toString
+    val all = PagesGen.pages(spark, 160, seed = 11L, partitions = 4)
+    CheckpointedDedup.run(spark, all.where(col("id") < 120).drop("id"), cfg, dir)
+    val baseIds = TableIO.read(spark, s"$dir/docs").select("id")
+    IncrementalDedup.run(spark, all.where(col("id") >= 120).drop("id"), cfg, dir)
+    val docs = IncrementalDedup.readAll(spark, dir, "docs").select(col("id"), col("text"))
+    val incDocs = docs.join(baseIds, Seq("id"), "left_anti")
+    val ev = docs.join(baseIds, "id").orderBy("id").limit(10)
+      .union(incDocs.orderBy("id").limit(10))
+      .select((col("id") + lit(1000000007L)).as("id"), col("text"))
+
+    def run(limits: Decontaminate.Limits): (Set[(Long, Long, Double)], String) = {
+      spark.catalog.clearCache()
+      val (out, pinned) = Decontaminate.pairsFromCheckpoints(spark, dir, ev, cfg, limits)
+      val plan = out.queryExecution.optimizedPlan.toString
+      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      pinned.foreach(_.unpersist(blocking = false))
+      val scans = out.queryExecution.executedPlan.toString
+      assert(scans.contains("/bands") && scans.contains("/docs"), s"store scans not shown:\n$scans")
+      assert(!scans.contains("/shingles"), s"the shingles checkpoint was read:\n$scans")
+      rows -> plan
+    }
+    val (dflt, dfltPlan) = run(Decontaminate.Limits())
+    val (fb, fbPlan) = run(Decontaminate.Limits(0L, 0L, 0L))
+    assert(dfltPlan.contains("strategy=broadcast"), s"default took no broadcast:\n$dfltPlan")
+    assert(fbPlan.contains("strategy=shuffle_hash") && !fbPlan.contains("strategy=broadcast"),
+      s"fallbacks not all taken:\n$fbPlan")
+    val inMem = Decontaminate.pairs(docs, ev, cfg)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val incIds = incDocs.select("id").collect().map(_.getLong(0)).toSet
+    assert(fb.exists { case (d, _, _) => incIds.contains(d) }, "no increment doc flagged")
+    assert(fb.exists { case (d, _, _) => !incIds.contains(d) }, "no base doc flagged")
+    assert(fb == dflt)
+    assert(dflt == inMem)
+    spark.catalog.clearCache()
   }
 
   test("plan: eval bands broadcast — no corpus-wide shuffle before the candidate join") {

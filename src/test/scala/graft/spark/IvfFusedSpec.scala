@@ -2,21 +2,32 @@ package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.pipeline.IvfIndex
 
 /** The IVF assignment has two physically different forms that must pick the
   * bitwise-identical winner per vector: the FUSED narrow map
   * (graft_ivf_argmax over plan-time literal centroids — no join, no
   * exchange) and the relational crossJoin + max(struct(score, −cid))
-  * groupBy fallback used above graft.ivf.fusedCellLimit cells. Equality of
-  * the full operator output across both paths is the contract that lets the
-  * DuckDB oracle (which replicates the relational form's arithmetic via
-  * row_number) gate the fused production path. */
+  * groupBy that `assignment` selects above IvfIndex.FusedCellLimit cells.
+  * Equality of the full operator output across both forms is the contract
+  * that lets the DuckDB oracle (which replicates the relational form's
+  * arithmetic via row_number) gate the fused production path. */
 class IvfFusedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def run(): (Seq[Seq[Any]], String) = {
+  private def run(relational: Boolean): (Seq[Seq[Any]], String) = {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val (df, pinned) = graft.SparkEntry.ivfTopKWithHandle(emb, col("vec_id") < 5, 23)
+    val (df, pinned) =
+      if (!relational) graft.SparkEntry.ivfTopKWithHandle(emb, col("vec_id") < 5, 23)
+      else {
+        // SparkEntry.ivfTopKWithHandle's composition (nprobe 2, k 10) with
+        // the relational assignment in place of the fused one
+        val e = IvfIndex.quantized(emb).cache()
+        val cent = IvfIndex.centroids(e, 23)
+        val (out, p) = IvfIndex.probeRerank(
+          e, cent, IvfIndex.relationalAssignment(e, cent), col("vec_id") < 5, 2, 10)
+        (out, e +: p)
+      }
     val rows = df.collect().map(_.toSeq).toSeq
     val plan = df.queryExecution.optimizedPlan.toString
     pinned.foreach(_.unpersist(blocking = false))
@@ -24,15 +35,13 @@ class IvfFusedSpec extends AnyFunSuite {
   }
 
   test("fused literal-centroid assignment ≡ relational groupBy assignment") {
-    val (fused, fusedPlan) = run()
+    val (fused, fusedPlan) = run(relational = false)
     assert(fused.nonEmpty)
     assert(fusedPlan.contains("graft_ivf_argmax"),
       "default path did not take the fused assignment")
-    System.setProperty("graft.ivf.fusedCellLimit", "0")
-    val (relational, relationalPlan) =
-      try run() finally System.clearProperty("graft.ivf.fusedCellLimit")
+    val (relational, relationalPlan) = run(relational = true)
     assert(!relationalPlan.contains("graft_ivf_argmax"),
-      "fusedCellLimit=0 did not force the relational fallback")
+      "the relational assignment ran the fused kernel")
     // collected in the operator's own deterministic orderBy(probe_id, rnk):
     // sequence equality pins ranks AND bitwise cosines across the two paths
     assert(fused == relational)

@@ -73,24 +73,30 @@ class MipsMultiTableSpec extends AnyFunSuite {
   }
 
   test("sparse candidates broadcast into the hamming rerank; dense fall back to merge") {
-    // the counted posture (same as SparkEntry.ivfTopK): a small candidate
-    // set must be broadcast against the cached bits relation — no
-    // corpus-wide shuffle of the O(n·T)-long bits payload — while a set
-    // above graft.mips.broadcastCandLimit rides the merge join AQE can
-    // skew-split. The branch is decided eagerly (cands.count() inside
-    // topKWithHandle), so the returned plan already embeds the choice.
-    def planOf(): String = {
-      spark.catalog.clearCache()
-      SignAlshRetrieval.topK(e, MipsPlan(3, 16, 6), col("vec_id") < 5, 10)
-        .queryExecution.optimizedPlan.toString
-    }
-    val sparse = planOf()
+    // the counted posture (IvfIndex.rerankJoin, shared with the IVF rerank):
+    // a small candidate set must be broadcast against the cached bits
+    // relation — no corpus-wide shuffle of the O(n·T)-long bits payload —
+    // while a set above the candidate limit rides the merge join AQE can
+    // skew-split. The branch is decided eagerly (the count inside
+    // bucketRank), so the returned plan already embeds the choice.
+    val plan = MipsPlan(3, 16, 6)
+    val probe = col("vec_id") < 5
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    spark.catalog.clearCache()
+    val sparseDf = SignAlshRetrieval.topK(e, plan, probe, 10)
+    val sparse = sparseDf.queryExecution.optimizedPlan.toString
     assert(!sparse.contains("merge"), s"sparse candidates took the merge rerank:\n$sparse")
-    System.setProperty("graft.mips.broadcastCandLimit", "0")
-    try {
-      val dense = planOf()
-      assert(dense.contains("merge"), s"dense candidates missing the merge rerank:\n$dense")
-    } finally System.clearProperty("graft.mips.broadcastCandLimit")
+    val sparseRows = rowsOf(sparseDf)
+    // topKWithHandle's composition with the candidate limit forced to 0
+    spark.catalog.clearCache()
+    val corpus = SignAlshRetrieval.corpusBits(e, plan).cache()
+    val denseDf = SignAlshRetrieval.bucketRank(
+      corpus, SignAlshRetrieval.probeBits(e, plan, probe), plan, 10, candLimit = 0L)._1
+    val dense = denseDf.queryExecution.optimizedPlan.toString
+    assert(dense.contains("merge"), s"dense candidates missing the merge rerank:\n$dense")
+    assert(sparseRows.nonEmpty)
+    assert(rowsOf(denseDf) == sparseRows)
     spark.catalog.clearCache()
   }
 
