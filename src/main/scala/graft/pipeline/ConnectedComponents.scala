@@ -25,6 +25,14 @@ import org.apache.spark.sql.functions._
   * Determinism: labels are mins over Long ids — independent of partitioning
   * and cluster size, so cluster ids are stable across runs and parallelism
   * levels (required by the determinism tests, SURVEY.md §5).
+  *
+  * WARM START ([[fromLabels]]): the rounds only ever lower a label to
+  * another label already in the vertex's component, so they may start from
+  * any labels that are ids of the vertex's own component and no greater
+  * than the vertex id. The component's minimum id then starts labelled as
+  * itself, and the fixpoint is the cold run's. An increment whose old
+  * pairs are all kept starts its old docs at their previous cluster ids and
+  * only pays rounds for the merges still to be done (BTS, ICDE 2024).
   */
 object ConnectedComponents {
 
@@ -32,8 +40,17 @@ object ConnectedComponents {
     * @param edges columns `id_a`, `id_b`
     * @return (id, cluster_id) with cluster_id = min id of the component
     */
-  def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sc = vertices.sparkSession.sparkContext
+  def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame =
+    fromLabels(vertices.select(col("id"), col("id").as("cluster_id")), edges, maxIter)
+
+  /** @param initial (id, cluster_id): every vertex once, with its starting
+    *        label. Exact when each label is the id of a vertex of the same
+    *        component and ≤ id (a vertex labelled with itself always is).
+    * @param edges columns `id_a`, `id_b`
+    * @return (id, cluster_id) with cluster_id = min id of the component
+    */
+  def fromLabels(initial: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    val sc = initial.sparkSession.sparkContext
 
     // localCheckpoint persists an internal RDD that outlives the returned
     // DataFrame; without explicit release every CC run leaks blocks into the
@@ -79,8 +96,7 @@ object ConnectedComponents {
       eager = false)
 
     var (labels, labelIds) = checkpointTracked(
-      vertices.select(col("id"), col("id").as("cluster_id")),
-      eager = false)
+      initial.select(col("id"), col("cluster_id")), eager = false)
     // Pointer jumping is engaged only after the plain rounds stop being
     // enough: near-dup components are almost always shallow (diameter ≤ 2-3
     // via the min-id hub), where the jump join is pure overhead — measured

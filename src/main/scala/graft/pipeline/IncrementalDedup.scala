@@ -31,8 +31,10 @@ import graft.sources.TableIO
   *    RE-DERIVED from the pruned pair-docs' text (O(pairs) hashing) rather
   *    than re-read from the O(corpus) shingle checkpoint — the widest
   *    relation in the store for the smallest pair set (see run());
-  *  - clusters re-resolved over all ids + the union verified pairs
-  *    (connected components is cheap relative to text hashing).
+  *  - clusters re-resolved over all ids + the union verified pairs,
+  *    WARM-STARTED from the previous snapshot's clusters (see
+  *    [[previousClusters]]): the rounds pay only for the merges the new
+  *    pairs cause, not for re-deriving every old cluster.
   *
   * Storage is APPEND-ONLY, Iceberg-snapshot style: base stage directories
   * are never rewritten; increment k writes its own manifest-tracked stage
@@ -93,6 +95,33 @@ object IncrementalDedup {
   private def latestOf(
       spark: SparkSession, baseDir: String, incs: Seq[String], stage: String): DataFrame =
     TableIO.read(spark, s"${incs.lastOption.getOrElse(baseDir)}/$stage")
+
+  /** The latest snapshot's clusters as warm-start labels for the next
+    * increment's connected components, or None (cold start) when that
+    * stage is not complete for this store's chain: the base's `clusters`
+    * must carry its chained hash ([[validateStore]] does not require it),
+    * an increment's must carry the store's family tag.
+    *
+    * Exact: old verified pairs are always kept (the monotone contract), so
+    * every old cluster lies inside one component of the union graph, and
+    * its label — its minimum id — is a member id no greater than any of
+    * its docs. New docs start at their own ids. These are the starting
+    * labels [[ConnectedComponents.fromLabels]] needs to reach the cold
+    * run's fixpoint. */
+  private def previousClusters(
+      spark: SparkSession, baseDir: String, incs: Seq[String], cfg: DedupConfig,
+      family: String): Option[DataFrame] = {
+    val complete = incs.lastOption match {
+      case Some(inc) =>
+        TableIO.readManifest(s"$inc/clusters").exists(_.extra.get("family").contains(family))
+      case None =>
+        TableIO.readManifest(s"$baseDir/docs").exists { docs =>
+          val hash = CheckpointedDedup.chainFrom(docs.configHash, cfg).toMap.apply("clusters")
+          TableIO.isComplete(s"$baseDir/clusters", hash)
+        }
+    }
+    if (complete) Some(latestOf(spark, baseDir, incs, "clusters")) else None
+  }
 
   /** The per-increment telemetry table, read across schema GENERATIONS: the
     * round-5 rename (verified_pairs → pairs_adjudicated +
@@ -209,13 +238,20 @@ object IncrementalDedup {
         // 1. fresh docs only (byte-identical-text-per-url contract: a re-crawled
         // url is the SAME document — dropped here, like dropDuplicates within a
         // batch), with ids unique AND disjoint from every existing id
+        // `fresh` is cached like newPagesC (one row per new doc): the id
+        // collision check and the stage write would each re-run the anti-join
+        // against the corpus-sized url column
+        var freshC: DataFrame = null
         val newDocsDf = runner.stage("docs", incHash("docs", salt), famTag) {
-          val fresh = newPagesC.dropDuplicates("url")
+          freshC = newPagesC.dropDuplicates("url")
             .join(oldDocs.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
-          DocIds.assignDisjoint(fresh, oldDocs.select("id"))
+            .cache()
+          DocIds.assignDisjoint(freshC, oldDocs.select("id"))
             .select(col("id"), col("url"), col("text"))
         }.df
-        newPagesC.unpersist(blocking = false) // docs stage write materialized it
+        // the docs stage write materialized both
+        newPagesC.unpersist(blocking = false)
+        if (freshC != null) freshC.unpersist(blocking = false)
 
         // 2-3. text-width stages for NEW rows only — the whole point. Codegen
         // kernels, not UDFs: a daily increment barely notices, but a large
@@ -255,32 +291,38 @@ object IncrementalDedup {
         // an EMPTY increment (all re-crawls) writes empty bands/census stages
         // and touches nothing — guarding here also keeps the explicit key
         // broadcast below provably non-empty (the phantom-broadcast trap)
-        var touchedCaches: Seq[DataFrame] = Seq.empty
-        val (touchedCensus, cappedCum, maxBucketCum, touchedHot) =
-          if (nNewDocs == 0) (null: DataFrame, prevCapped, prevMaxBucket, 0L)
+        var touchedCache: DataFrame = null
+        val (touchedCensus, cappedCum, maxBucketCum, touchedHot, gateCount) =
+          if (nNewDocs == 0) (null: DataFrame, prevCapped, prevMaxBucket, 0L, 0L)
           else {
             // nNewDocs·bands bounds the touched-key count exactly, with no
             // extra count() action; a daily increment broadcasts, a
             // backfill-sized one falls back to a shuffle probe
             val keys = Dedup.probeSide(deltaCensusDf.select("band_hash"),
               nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
-            val prevTouched = readAllPre("census").join(keys, "band_hash")
-              .groupBy("band_hash").agg(sum("bucket_size").as("bucket_size"))
+            // ONE cached touched census carrying both sizes: prev_size sums
+            // the earlier snapshots, bucket_size adds the delta
+            touchedCache = readAllPre("census").join(keys, "band_hash")
+              .select(col("band_hash"), col("bucket_size").as("prev_size"),
+                col("bucket_size"))
+              .unionByName(deltaCensusDf.select(col("band_hash"), lit(0L).as("prev_size"),
+                col("bucket_size")))
+              .groupBy("band_hash")
+              .agg(sum("prev_size").as("prev_size"), sum("bucket_size").as("bucket_size"))
               .cache()
-            val touched = prevTouched.unionByName(deltaCensusDf)
-              .groupBy("band_hash").agg(sum("bucket_size").as("bucket_size"))
-              .cache()
-            touchedCaches = Seq(prevTouched, touched)
-            val prevHot = prevTouched.where(col("bucket_size") > cfg.maxBucket).count()
-            val nowStats = touched.agg(
+            // and ONE action for every stat the census and candidates steps need
+            val stats = touchedCache.agg(
+              count(when(col("prev_size") > cfg.maxBucket, 1)).as("prevHot"),
               count(when(col("bucket_size") > cfg.maxBucket, 1)).as("hot"),
-              max(col("bucket_size")).as("maxB")).first()
+              max(col("bucket_size")).as("maxB"),
+              count(when(col("bucket_size").between(2, cfg.maxBucket), 1)).as("gate")).first()
             // buckets only grow: cumulative capped count = previous snapshot's
             // + touched buckets that crossed the cap THIS increment
-            (touched,
-              prevCapped + (nowStats.getLong(0) - prevHot),
-              math.max(prevMaxBucket, nowStats.getLong(1)),
-              nowStats.getLong(0))
+            (touchedCache.select("band_hash", "bucket_size"),
+              prevCapped + (stats.getLong(1) - stats.getLong(0)),
+              math.max(prevMaxBucket, stats.getLong(2)),
+              stats.getLong(1),
+              stats.getLong(3))
           }
         runner.stage("census", incHash("census", salt), Map(
           "cappedBuckets" -> cappedCum.toString,
@@ -294,32 +336,27 @@ object IncrementalDedup {
           // re-exchanged + re-aggregated the whole relation again after the
           // salted union)
           val inCapNew: Option[DataFrame] =
-            if (nNewDocs == 0) None
+            if (gateCount == 0) None
             else {
-              val gateCount =
-                touchedCensus.where(col("bucket_size").between(2, cfg.maxBucket)).count()
-              if (gateCount == 0) None
-              else {
-                val gate = Dedup.probeSide(
-                  touchedCensus
-                    .where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"),
-                  nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
-                // old band rows are consulted ONLY for gated touched buckets —
-                // a broadcast probe applied at the columnar checkpoint scan,
-                // never a shuffle of the untouched corpus
-                val unionBands = readAllPre("bands").unionByName(newBands)
-                Some(unionBands.join(gate, "band_hash")
-                  .select(col("band_hash"), col("id").as("id_o"))
-                  .join(
-                    newBands.join(gate, "band_hash")
-                      .select(col("band_hash"), col("id").as("id_n"))
-                      .hint("shuffle_hash"),
-                    "band_hash")
-                  .where(col("id_o") =!= col("id_n"))
-                  .select(
-                    least(col("id_o"), col("id_n")).as("id_a"),
-                    greatest(col("id_o"), col("id_n")).as("id_b")))
-              }
+              val gate = Dedup.probeSide(
+                touchedCensus
+                  .where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"),
+                nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
+              // old band rows are consulted ONLY for gated touched buckets —
+              // a broadcast probe applied at the columnar checkpoint scan,
+              // never a shuffle of the untouched corpus
+              val unionBands = readAllPre("bands").unionByName(newBands)
+              Some(unionBands.join(gate, "band_hash")
+                .select(col("band_hash"), col("id").as("id_o"))
+                .join(
+                  newBands.join(gate, "band_hash")
+                    .select(col("band_hash"), col("id").as("id_n"))
+                    .hint("shuffle_hash"),
+                  "band_hash")
+                .where(col("id_o") =!= col("id_n"))
+                .select(
+                  least(col("id_o"), col("id_n")).as("id_a"),
+                  greatest(col("id_o"), col("id_n")).as("id_b")))
             }
           // salted recompute ONLY when the delta touched a hot bucket: an
           // untouched hot bucket's membership is unchanged, so its
@@ -348,7 +385,7 @@ object IncrementalDedup {
           }
         }
         val candOut = runner.stage("candidates", incHash("candidates", salt), famTag)(unionCand).df
-        touchedCaches.foreach(_.unpersist(blocking = false))
+        if (touchedCache != null) touchedCache.unpersist(blocking = false)
 
         // 5. verify ONLY unadjudicated pairs, with docs drawn from the union
         // (one side of a new pair may be an old doc). The docs are PRUNED to
@@ -385,10 +422,18 @@ object IncrementalDedup {
           runner.stage("verified_pairs", incHash("verified_pairs", salt), famTag)(unionVerified).df
         verifyCaches.foreach(_.unpersist(blocking = false)) // stage write materialized them
 
-        // 6. clusters over every id + the union verified pairs
+        // 6. clusters over every id + the union verified pairs: old docs
+        // start at their previous cluster ids, new docs at their own
         runner.stage("clusters", incHash("clusters", salt), famTag) {
-          ConnectedComponents.run(
-            unionDocsAll.select("id"), verifiedOut.select("id_a", "id_b"))
+          val edges = verifiedOut.select("id_a", "id_b")
+          previousClusters(spark, baseDir, priorInc, cfg, family) match {
+            case Some(prev) =>
+              ConnectedComponents.fromLabels(
+                prev.select("id", "cluster_id").unionByName(
+                  newDocsDf.select(col("id"), col("id").as("cluster_id"))),
+                edges)
+            case None => ConnectedComponents.run(unionDocsAll.select("id"), edges)
+          }
         }
 
         (nNewDocs, nToVerify,

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
 import org.json4s._
@@ -13,7 +14,8 @@ import org.json4s.jackson.Serialization
   * is the checkpoint/resume contract of the north rule: a stage whose
   * manifest is present AND whose config hash matches is never recomputed;
   * a config change upstream changes the chained hash and invalidates every
-  * downstream stage.
+  * downstream stage. The manifest also carries the stage's schema, so a
+  * reopen needs no Spark job to infer it.
   */
 object TableIO {
   implicit private val formats: Formats = DefaultFormats
@@ -26,7 +28,10 @@ object TableIO {
       rows: Long,
       wallMillis: Long,
       files: List[FileLineage],
-      extra: Map[String, String])
+      extra: Map[String, String],
+      // the written DataFrame's schema (StructType JSON); None in manifests
+      // written before stages recorded it
+      schema: Option[String] = None)
 
   private def manifestPath(dir: String) = Paths.get(dir, "_manifest.json")
 
@@ -58,8 +63,17 @@ object TableIO {
   def isComplete(dir: String, configHash: String): Boolean =
     readManifest(dir).exists(_.configHash == configHash)
 
+  /** Opens a stage. With the schema from its manifest this is a file
+    * listing and no Spark job; without one (a stage written before
+    * manifests carried it, or no manifest) parquet schema inference runs,
+    * which is one `mergeSchemasInParallel` job per call. Parquet reads
+    * every column as nullable either way, so both give the same schema. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/data")
+    readManifest(dir).flatMap(_.schema) match {
+      case Some(json) =>
+        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(s"$dir/data")
+      case None => spark.read.parquet(s"$dir/data")
+    }
 
   /** Per-file row counts from the parquet FOOTERS under `dir` (driver-side
     * metadata reads, zero Spark jobs). Shared by [[rowCount]] and [[write]]'s
@@ -149,7 +163,8 @@ object TableIO {
       rows = lineage.map(_.rows).sum,
       wallMillis = wallMillis,
       files = lineage,
-      extra = extra)
+      extra = extra,
+      schema = Some(df.schema.json))
     // unique per-call tmp name: with a FIXED tmp path two concurrent
     // write() calls to the same stage dir could publish each other's
     // manifest (describing the other writer's data) or die mid-commit on

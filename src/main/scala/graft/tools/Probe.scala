@@ -25,7 +25,9 @@ import graft.testkit.PagesGen
   *    shuffle partitions scale with cores, as a real cluster's would;
   *  - two warm-up calls at n/8 first — JIT of generated code costs 5-20×
   *    on the first iterations in this JVM;
-  *  - the level's time is the min over `reps` calls at n;
+  *  - the level's time is the min over `reps` calls at n; every call's
+  *    wall (`rep_sec`) and their median (`median_sec`) are printed beside
+  *    it, so a difference can be judged against the spread of the reps;
   *  - efficiency = (T_A / T_B) / (B / A), target ≥ 0.8 at B = 4A; docs/s =
   *    n / T at the last level.
   * Prints ONE JSON line — it writes no file. The workload's own fields in
@@ -55,7 +57,7 @@ object Probe {
     val coresB = if (args.length > 3) args(3).toInt else 8
     val reps = if (args.length > 4) args(4).toInt else 2
     val levels = if (coresA == coresB) Seq(coresA) else Seq(coresA, coresB)
-    val best = levels.map { cores =>
+    val runs = levels.map { cores =>
       val spark = graft.GraftSession.get(cores, s"probe-$name-$cores")
       try {
         def call(m: Long): Result = {
@@ -64,15 +66,18 @@ object Probe {
           r
         }
         call(math.max(1L, n / 8)); call(math.max(1L, n / 8))
-        (1 to reps).map(_ => call(n)).minBy(_.wall)
+        (1 to reps).map(_ => call(n))
       } finally spark.stop()
     }
+    val walls = runs.map(_.map(_.wall))
+    val best = runs.map(_.minBy(_.wall))
     val t = best.map(_.wall)
     val eff =
       if (levels.size == 2) Seq("efficiency" -> (t(0) / t(1)) / (coresB.toDouble / coresA))
       else Nil
     println(json(Seq("metric" -> "probe", "workload" -> name, "n" -> n,
-      "cores" -> levels, "reps" -> reps, "t_sec" -> t) ++ eff ++
+      "cores" -> levels, "reps" -> reps, "t_sec" -> t, "rep_sec" -> walls,
+      "median_sec" -> walls.map(median)) ++ eff ++
       Seq("docs_per_sec" -> n / t.last) ++ best.last.fields))
   }
 
@@ -355,6 +360,11 @@ object Probe {
           "max_bucket" -> census.getLong(0), "capped_buckets" -> census.getLong(1)) ++
           legs.map { case (k, r) => k -> (("sec" -> r.wall) +: r.fields) })
     }
+
+  private[tools] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
 
   /** Minimal JSON: strings, numbers, arrays, and (key, value) objects. */
   private[tools] def json(v: Any): String = v match {

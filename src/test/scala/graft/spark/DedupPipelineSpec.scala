@@ -200,6 +200,66 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(got.length == n && got.forall(_._2 == 0L))
   }
 
+  /** A warm start from `seed` labels (the rest start at their own ids)
+    * must give the cold run's components, exactly. */
+  private def assertWarmEqualsCold(
+      n: Long, edges: Seq[(Long, Long)], seed: Map[Long, Long], maxIter: Int = 50): Unit = {
+    import spark.implicits._
+    val vertices = (0L until n).toDF("id")
+    val e = edges.toDF("id_a", "id_b")
+    val initial = (0L until n).map(v => (v, seed.getOrElse(v, v))).toDF("id", "cluster_id")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cold = labels(ConnectedComponents.run(vertices, e, maxIter))
+    val warm = labels(ConnectedComponents.fromLabels(initial, e, maxIter))
+    assert(cold.size == n && warm == cold)
+  }
+
+  /** Seed labels as a previous snapshot holds them: the cold components of
+    * the old vertices over the old edges. */
+  private def snapshot(oldN: Long, oldEdges: Seq[(Long, Long)]): Map[Long, Long] = {
+    import spark.implicits._
+    ConnectedComponents.run((0L until oldN).toDF("id"), oldEdges.toDF("id_a", "id_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("warm start: a new vertex bridging two old clusters with different minimum ids") {
+    // old clusters {1,2,3} (min 1) and {4,5,6} (min 4); 0 and 7 stay alone
+    val old = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L))
+    // new vertex 9 bridges 3 and 6; new vertex 8 bridges 7 and 9
+    assertWarmEqualsCold(10L, old ++ Seq((3L, 9L), (6L, 9L), (7L, 8L), (8L, 9L)),
+      snapshot(8L, old))
+    // a new edge between two old vertices also merges their clusters
+    assertWarmEqualsCold(8L, old :+ ((6L, 0L)), snapshot(8L, old))
+  }
+
+  test("warm start: a long path extended at its far end (jump rounds)") {
+    // an old 300-vertex path labelled 0, extended by a 300-vertex new path:
+    // the new tail needs the pointer-jump rounds to learn label 0
+    val old = (0L until 299L).map(i => (i, i + 1))
+    val ext = (299L until 599L).map(i => (i, i + 1))
+    assertWarmEqualsCold(600L, old ++ ext, snapshot(300L, old), maxIter = 16)
+  }
+
+  test("warm start: isolated new vertices keep their own ids") {
+    val old = Seq((0L, 3L), (3L, 5L), (1L, 2L))
+    assertWarmEqualsCold(12L, old, snapshot(6L, old))
+  }
+
+  test("warm start: a seed that covers only some vertices") {
+    // seeded random graphs; the seed labels a random subset of the old
+    // vertices with their old components, everything else starts cold
+    for (s <- 1 to 4) {
+      val rnd = new scala.util.Random(s)
+      val (n, oldN) = (120L, 80L)
+      val edges = Seq.fill(90)((rnd.nextLong(n), rnd.nextLong(n))).filter(e => e._1 != e._2)
+      val oldEdges = edges.filter(e => e._1 < oldN && e._2 < oldN && rnd.nextDouble() < 0.7)
+      val seed = snapshot(oldN, oldEdges).filter(_ => rnd.nextBoolean())
+      assert(seed.nonEmpty && seed.size < oldN)
+      assertWarmEqualsCold(n, edges, seed)
+    }
+  }
+
   test("connected components throws loudly when maxIter is hit before fixpoint") {
     import spark.implicits._
     val vertices = (0L to 4L).toDF("id")

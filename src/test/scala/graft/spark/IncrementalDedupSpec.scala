@@ -58,6 +58,34 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(byCluster.exists(_.size >= 2), "no multi-doc clusters — fixture broken")
   }
 
+  test("a base whose clusters stage is incomplete: the increment starts cold and still equals from-scratch") {
+    val n = 160L
+    val all = PagesGen.pages(spark, n, seed = 23L, partitions = 4)
+    val dir = tmp("graft-inc-cold")
+    CheckpointedDedup.run(spark, all.where(col("id") % 2 === 0).drop("id"), cfg, dir)
+    // a crash while the base's clusters stage was being rewritten: manifest
+    // deleted first, data already overwritten (here: every doc in one
+    // cluster). Warm-starting from these labels would merge everything.
+    val clustersDir = s"$dir/clusters"
+    val bogus = TableIO.read(spark, clustersDir)
+      .select(col("id"), min(col("id")).over().as("cluster_id"))
+    bogus.write.parquet(s"$clustersDir/data-bogus")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$clustersDir/_manifest.json"))
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(s"$clustersDir/data"))
+      .iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$clustersDir/data-bogus"),
+      java.nio.file.Paths.get(s"$clustersDir/data"))
+
+    val rep = IncrementalDedup.run(spark, all.where(col("id") % 2 === 1).drop("id"), cfg, dir)
+    val full = CheckpointedDedup.run(spark, all.drop("id"), cfg, tmp("graft-inc-cold-full"))
+    def clusters(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select("id", "cluster_id").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val want = clusters(full.clusters)
+    assert(want.values.toSet.size > 1, "fixture has a single cluster — cannot tell")
+    assert(clusters(rep.clusters) == want)
+  }
+
   test("metrics_inc reads across schema generations (mergeSchema posture)") {
     // the round-5 rename forked the metrics_inc parquet schema mid-store
     // (verified_pairs → pairs_adjudicated + verified_pairs_total); a plain

@@ -17,6 +17,12 @@ class ProbeSpec extends AnyFunSuite {
       assert(!spark.sparkContext.isStopped)
     }
 
+  test("median of the reps, odd and even counts") {
+    assert(Probe.median(Seq(3.0, 1.0, 2.0)) == 2.0)
+    assert(Probe.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
+    assert(Probe.json(Seq("rep_sec" -> Seq(Vector(1.5, 2.0)))) == """{"rep_sec":[[1.5000,2.0000]]}""")
+  }
+
   test("json renders objects, arrays and numbers") {
     assert(Probe.json(Seq("a" -> 1, "b" -> Seq(2, 3), "c" -> Seq("d" -> "e"), "f" -> 0.5)) ==
       """{"a":1,"b":[2,3],"c":{"d":"e"},"f":0.5000}""")
