@@ -16,7 +16,11 @@ import org.apache.spark.sql.SparkSession
   *  - Spark's codegen cache holds 100 compiled classes by default, fewer
   *    than one dedup build plus increment compiles, so a repeated call
   *    recompiles plans the previous call already compiled
-  *    → [[CodegenCacheEntries]].
+  *    → [[CodegenCacheEntries]];
+  *  - Spark names each whole-stage class after its codegen stage id, and
+  *    adaptive execution numbers the stages of one plan differently from
+  *    run to run, so identical code missed that cache under a new name
+  *    → `spark.sql.codegen.useIdInClassName=false`.
   */
 object GraftSession {
 
@@ -33,6 +37,7 @@ object GraftSession {
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
@@ -68,6 +73,7 @@ object GraftSession {
       .appName(appName)
       .master(s"local[$cores]")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.shuffle.file.buffer", "1m")
       .config("spark.shuffle.unsafe.file.output.buffer", "4m")

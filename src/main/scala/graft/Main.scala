@@ -66,73 +66,56 @@ object Main {
     sys.exit(2)
   }
 
-  private val KnownFlags = Seq("--seed", "--shingle-words", "--char-shingles",
-    "--num-hashes", "--bands", "--threshold", "--max-bucket", "--salt-window")
-
-  /** All flags are collected FIRST and the config constructed once —
-    * a copy-per-flag fold would trip DedupConfig's numHashes-divisible-by-
-    * bands invariant on valid flag sets whose intermediate states are
-    * invalid (e.g. --num-hashes=24 --bands=12 against the 42-band default). */
-  /** Throws IllegalArgumentException on unknown flags AND malformed values
-    * (`--threshold=0,5`, `--seed=abc`) — [[main]] turns both into the usage
-    * message + exit 2; a raw NumberFormatException stack trace is not an
+  /** The `--key=value` flags of one command family. Unknown flags and
+    * malformed values (`--threshold=0,5`, `--seed=abc`) throw
+    * IllegalArgumentException — [[main]] turns both into the usage message
+    * + exit 2; a raw NumberFormatException stack trace is not an
     * operator-facing error. */
-  private[graft] def parseConfig(flags: Seq[String]): DedupConfig = {
-    val kv = flags.map { f =>
+  private final class Flags(flags: Seq[String], known: String*) {
+    private val kv = flags.map { f =>
       f.split("=", 2) match {
-        case Array(k, v) if KnownFlags.contains(k) => k -> v
+        case Array(k, v) if known.contains(k) => k -> v
         case _ => throw new IllegalArgumentException(s"unknown flag: $f")
       }
     }.toMap
-    def num[T](k: String, parse: String => T, default: T): T =
+    def str(k: String): Option[String] = kv.get(k)
+    def num[T](k: String, parse: String => T): Option[T] =
       kv.get(k).map { v =>
         try parse(v)
         catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(s"invalid value for $k: $v")
         }
-      }.getOrElse(default)
+      }
+    def int(k: String): Option[Int] = num(k, _.toInt)
+  }
+
+  /** All flags are collected FIRST and the config constructed once —
+    * a copy-per-flag fold would trip DedupConfig's numHashes-divisible-by-
+    * bands invariant on valid flag sets whose intermediate states are
+    * invalid (e.g. --num-hashes=24 --bands=12 against the 42-band default). */
+  private[graft] def parseConfig(flags: Seq[String]): DedupConfig = {
+    val f = new Flags(flags, "--seed", "--shingle-words", "--char-shingles",
+      "--num-hashes", "--bands", "--threshold", "--max-bucket", "--salt-window")
     val d = DedupConfig()
     DedupConfig(
-      shingleWords = num("--shingle-words", _.toInt, d.shingleWords),
-      charShingles = num("--char-shingles", _.toInt, d.charShingles),
-      numHashes = num("--num-hashes", _.toInt, d.numHashes),
-      bands = num("--bands", _.toInt, d.bands),
-      threshold = num("--threshold", _.toDouble, d.threshold),
-      seed = num("--seed", _.toLong, d.seed),
-      maxBucket = num("--max-bucket", _.toInt, d.maxBucket),
-      saltWindow = num("--salt-window", _.toInt, d.saltWindow))
+      shingleWords = f.int("--shingle-words").getOrElse(d.shingleWords),
+      charShingles = f.int("--char-shingles").getOrElse(d.charShingles),
+      numHashes = f.int("--num-hashes").getOrElse(d.numHashes),
+      bands = f.int("--bands").getOrElse(d.bands),
+      threshold = f.num("--threshold", _.toDouble).getOrElse(d.threshold),
+      seed = f.num("--seed", _.toLong).getOrElse(d.seed),
+      maxBucket = f.int("--max-bucket").getOrElse(d.maxBucket),
+      saltWindow = f.int("--salt-window").getOrElse(d.saltWindow))
   }
 
   private[graft] final case class IvfArgs(cells: Option[Int], nprobe: Int, topk: Int)
 
   /** IVF subcommand flags — a separate namespace from the dedup config
     * (the store records no hash family; its chain hash covers input +
-    * nCells). Same contract as [[parseConfig]]: unknown flags and malformed
-    * values throw, [[main]] renders usage. */
+    * nCells). */
   private[graft] def parseIvfArgs(flags: Seq[String]): IvfArgs = {
-    val known = Seq("--cells", "--nprobe", "--topk")
-    val kv = flags.map { f =>
-      f.split("=", 2) match {
-        case Array(k, v) if known.contains(k) => k -> v
-        case _ => throw new IllegalArgumentException(s"unknown flag: $f")
-      }
-    }.toMap
-    def num(k: String, default: Int): Int =
-      kv.get(k).map { v =>
-        try v.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"invalid value for $k: $v")
-        }
-      }.getOrElse(default)
-    IvfArgs(
-      cells = kv.get("--cells").map { v =>
-        try v.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"invalid value for --cells: $v")
-        }
-      },
-      nprobe = num("--nprobe", 2),
-      topk = num("--topk", 10))
+    val f = new Flags(flags, "--cells", "--nprobe", "--topk")
+    IvfArgs(f.int("--cells"), f.int("--nprobe").getOrElse(2), f.int("--topk").getOrElse(10))
   }
 
   private[graft] final case class MipsArgs(
@@ -143,22 +126,8 @@ object Main {
     * mixing user values with planFor defaults would be a config the user
     * never asked for. */
   private[graft] def parseMipsArgs(flags: Seq[String]): MipsArgs = {
-    val known = Seq("--tables", "--planes", "--bucket-bits", "--topk")
-    val kv = flags.map { f =>
-      f.split("=", 2) match {
-        case Array(k, v) if known.contains(k) => k -> v
-        case _ => throw new IllegalArgumentException(s"unknown flag: $f")
-      }
-    }.toMap
-    def num(k: String): Option[Int] =
-      kv.get(k).map { v =>
-        try v.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"invalid value for $k: $v")
-        }
-      }
-    val planKnobs = Seq(num("--tables"), num("--planes"), num("--bucket-bits"))
-    val plan = planKnobs match {
+    val f = new Flags(flags, "--tables", "--planes", "--bucket-bits", "--topk")
+    val plan = Seq(f.int("--tables"), f.int("--planes"), f.int("--bucket-bits")) match {
       case Seq(Some(t), Some(p), Some(b)) =>
         Some(graft.pipeline.SignAlshRetrieval.MipsPlan(t, p, b))
       case Seq(None, None, None) => None
@@ -166,7 +135,7 @@ object Main {
         "--tables/--planes/--bucket-bits must be given together (or none, " +
           "for the planFor(n) default)")
     }
-    MipsArgs(plan, num("--topk").getOrElse(10))
+    MipsArgs(plan, f.int("--topk").getOrElse(10))
   }
 
   private[graft] final case class ScrubArgs(paraSplit: Option[String], paraWords: Int)
@@ -176,25 +145,14 @@ object Main {
     * 10-word blocks is the deterministic rule for single-line corpora (the
     * driver's documents shape). Mutually exclusive. */
   private[graft] def parseScrubArgs(flags: Seq[String]): ScrubArgs = {
-    val known = Seq("--para-split", "--para-words")
-    val kv = flags.map { f =>
-      f.split("=", 2) match {
-        case Array(k, v) if known.contains(k) => k -> v
-        case _ => throw new IllegalArgumentException(s"unknown flag: $f")
-      }
-    }.toMap
-    if (kv.contains("--para-split") && kv.contains("--para-words"))
+    val f = new Flags(flags, "--para-split", "--para-words")
+    if (f.str("--para-split").isDefined && f.str("--para-words").isDefined)
       throw new IllegalArgumentException(
         "--para-split and --para-words are mutually exclusive paragraph rules")
-    val words = kv.get("--para-words").map { v =>
-      try v.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"invalid value for --para-words: $v")
-      }
-    }.getOrElse(10)
+    val words = f.int("--para-words").getOrElse(10)
     if (words < 1)
       throw new IllegalArgumentException(s"--para-words must be >= 1, got $words")
-    ScrubArgs(kv.get("--para-split"), words)
+    ScrubArgs(f.str("--para-split"), words)
   }
 
   private def session(): SparkSession =
@@ -243,21 +201,24 @@ object Main {
     // parsed per command family: the dedup commands take the hash-family
     // config flags, the ivf commands their own namespace — evaluating the
     // wrong parser would reject the other family's valid flags
-    def cfg: DedupConfig =
-      try parseConfig(flags)
+    def parsed[A](parse: Seq[String] => A): A =
+      try parse(flags)
       catch { case e: IllegalArgumentException =>
         System.err.println(e.getMessage); usage()
       }
-    def ivfArgs: IvfArgs =
-      try parseIvfArgs(flags)
-      catch { case e: IllegalArgumentException =>
-        System.err.println(e.getMessage); usage()
+    def cfg: DedupConfig = parsed(parseConfig)
+    // appends take NO flags: the store's frozen config IS the config.
+    // Silently ignoring e.g. --cells would let a user believe they changed
+    // the plan (round-6 review) — reject like every other arm.
+    def noFlags(cmd: String, frozen: String): Unit =
+      if (flags.nonEmpty) {
+        System.err.println(s"$cmd takes no flags (the store's frozen $frozen " +
+          s"the config); got: ${flags.mkString(" ")}")
+        usage()
       }
-    def mipsArgs: MipsArgs =
-      try parseMipsArgs(flags)
-      catch { case e: IllegalArgumentException =>
-        System.err.println(e.getMessage); usage()
-      }
+    def printStages(stages: Seq[graft.pipeline.CheckpointedDedup.StageResult]): Unit =
+      stages.foreach(s => println(
+        f"[graft] stage ${s.name}%-15s ${if (s.recomputed) f"${s.millis / 1000.0}%8.1f s" else "  resumed"}"))
     // shared by ivf-query and mips-query: a (vec_id) parquet that
     // broadcast-semi-joins the store's vectors at the scan (the uniform
     // probe-set posture). The count guard stays: each probe costs an exact
@@ -278,8 +239,7 @@ object Main {
       case Seq("dedup", pages, storeDir) =>
         val spark = session()
         val report = CheckpointedDedup.run(spark, spark.read.parquet(pages), cfg, storeDir)
-        report.stages.foreach(s => println(
-          f"[graft] stage ${s.name}%-15s ${if (s.recomputed) f"${s.millis / 1000.0}%8.1f s" else "  resumed"}"))
+        printStages(report.stages)
         println(s"[graft] dedup done: ${report.docs} docs, " +
           s"${report.verifiedPairs.count()} verified pairs, clusters at $storeDir/clusters")
       case Seq("increment", storeDir, newPages) =>
@@ -307,7 +267,7 @@ object Main {
         println(s"[graft] decontaminate done: ${pairs.count()} flagged pairs → $pairsOut, " +
           s"clean list → $cleanOut")
       case Seq("ivf-build", embPath, storeDir) =>
-        val a = ivfArgs
+        val a = parsed(parseIvfArgs)
         val spark = session()
         // default cell count = the engine-wide ceil(√n) rule, n from the
         // parquet footers (driver-side metadata, no job)
@@ -315,29 +275,21 @@ object Main {
           graft.sources.TableIO.rowCount(spark, embPath).toDouble)).toInt)
         val report = graft.pipeline.IvfIndex.build(
           spark, spark.read.parquet(embPath), storeDir, nCells)
-        report.stages.foreach(s => println(
-          f"[graft] stage ${s.name}%-12s ${if (s.recomputed) f"${s.millis / 1000.0}%8.1f s" else "  resumed"}"))
+        printStages(report.stages)
         println(s"[graft] ivf-build done: ${report.vectors} vectors, " +
           s"${report.nCells} cells, index at $storeDir")
       case Seq("ivf-query", storeDir, probesPath, outDir) =>
-        val a = ivfArgs
+        val a = parsed(parseIvfArgs)
         val spark = session()
         val (probes, nProbes) = probeSet(spark, probesPath)
-        val (res, pinned) = graft.pipeline.IvfIndex.topKWithHandleIds(
+        val (res, pinned) = graft.pipeline.IvfIndex.topKWithHandle(
           spark, storeDir, probes, a.nprobe, a.topk)
         res.write.mode("overwrite").parquet(outDir)
         pinned.foreach(_.unpersist(blocking = false))
         println(s"[graft] ivf-query done: ${spark.read.parquet(outDir).count()} " +
           s"result rows for $nProbes probes → $outDir")
       case Seq("ivf-append", storeDir, newEmbPath) =>
-        // appends take NO flags: the store's frozen geometry IS the config.
-        // Silently ignoring e.g. --cells here would let a user believe they
-        // changed the plan (round-6 review) — reject like every other arm.
-        if (flags.nonEmpty) {
-          System.err.println(s"ivf-append takes no flags (the store's frozen " +
-            s"geometry is the config); got: ${flags.mkString(" ")}")
-          usage()
-        }
+        noFlags("ivf-append", "geometry is")
         val spark = session()
         val r = graft.pipeline.IvfIndex.append(
           spark, spark.read.parquet(newEmbPath), storeDir)
@@ -349,21 +301,16 @@ object Main {
             s"${r.newVectors} new vectors assigned against the frozen " +
             s"centroids (${r.droppedDupOrStored} duplicate or already-stored ids dropped)")
       case Seq("mips-build", embPath, storeDir) =>
-        val a = mipsArgs
+        val a = parsed(parseMipsArgs)
         val spark = session()
         val report = graft.pipeline.MipsIndex.build(
           spark, spark.read.parquet(embPath), storeDir, a.plan)
-        report.stages.foreach(s => println(
-          f"[graft] stage ${s.name}%-12s ${if (s.recomputed) f"${s.millis / 1000.0}%8.1f s" else "  resumed"}"))
+        printStages(report.stages)
         println(s"[graft] mips-build done: ${report.vectors} vectors, plan " +
           s"T=${report.plan.tables}/P=${report.plan.planesPerTable}/" +
           s"b=${report.plan.bucketBits}, index at $storeDir")
       case Seq("mips-append", storeDir, newEmbPath) =>
-        if (flags.nonEmpty) {
-          System.err.println(s"mips-append takes no flags (the store's frozen " +
-            s"plan/maxnorm are the config); got: ${flags.mkString(" ")}")
-          usage()
-        }
+        noFlags("mips-append", "plan/maxnorm are")
         val spark = session()
         val r = graft.pipeline.MipsIndex.append(
           spark, spark.read.parquet(newEmbPath), storeDir)
@@ -375,21 +322,17 @@ object Main {
             s"${r.newVectors} new vectors hashed under the frozen plan/maxnorm " +
             s"(${r.droppedDupOrStored} duplicate or already-stored ids dropped)")
       case Seq("mips-query", storeDir, probesPath, outDir) =>
-        val a = mipsArgs
+        val a = parsed(parseMipsArgs)
         val spark = session()
         val (probes, nProbes) = probeSet(spark, probesPath)
-        val (res, pinned) = graft.pipeline.MipsIndex.topKWithHandleIds(
+        val (res, pinned) = graft.pipeline.MipsIndex.topKWithHandle(
           spark, storeDir, probes, a.topk)
         res.write.mode("overwrite").parquet(outDir)
         pinned.foreach(_.unpersist(blocking = false))
         println(s"[graft] mips-query done: ${spark.read.parquet(outDir).count()} " +
           s"result rows for $nProbes probes → $outDir")
       case Seq("scrub-paragraphs", pagesPath, outDir) =>
-        val a =
-          try parseScrubArgs(flags)
-          catch { case e: IllegalArgumentException =>
-            System.err.println(e.getMessage); usage()
-          }
+        val a = parsed(parseScrubArgs)
         val spark = session()
         graft.functions.GraftExpressions.register(spark)
         // ids assigned the collision-checked way (DocIds), then the CCNet

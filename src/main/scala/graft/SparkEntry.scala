@@ -384,7 +384,8 @@ object SparkEntry {
       .cache() // 4 plan branches: centroid sample, assignment, probes, rerank
     val cent = graft.pipeline.IvfIndex.centroids(e, nCells)
     val cell = graft.pipeline.IvfIndex.assignment(e, cent, nCells)
-    val (out, pinned) = graft.pipeline.IvfIndex.probeRerank(e, cent, cell, probeFilter, nprobe, k)
+    val (out, pinned) = graft.pipeline.IvfIndex.probeRerank(
+      e, cent, cell, e.where(probeFilter), nprobe, k)
     (out, e +: pinned)
   }
 

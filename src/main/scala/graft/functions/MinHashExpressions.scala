@@ -84,8 +84,8 @@ object MinHashKernel {
     Rng.hashString(seed, url.toString)
 
   /** Collision-rehash lane: mixes the colliding id with an independent url
-    * hash (DocIds rehash contract — assign and assignDisjoint must share it
-    * or cross-increment ids diverge). */
+    * hash (DocIds rehash contract — the base build and every increment
+    * must share it or cross-increment ids diverge). */
   def rehashId(id: Long, url: org.apache.spark.unsafe.types.UTF8String): Long =
     Rng.hash2(id, Rng.hashString(0x5345434FL, url.toString))
 

@@ -50,23 +50,6 @@ object ConnectedComponents {
     * @return (id, cluster_id) with cluster_id = min id of the component
     */
   def fromLabels(initial: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sc = initial.sparkSession.sparkContext
-
-    // localCheckpoint persists an internal RDD that outlives the returned
-    // DataFrame; without explicit release every CC run leaks blocks into the
-    // block manager for the session's lifetime. Track the persisted RDD ids
-    // via the context registry and drop superseded iterations eagerly.
-    def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Seq[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(eager = eager)
-      val added = sc.getPersistentRDDs.keysIterator.filterNot(before).toSeq
-      (out, added)
-    }
-    def release(ids: Seq[Int]): Unit = {
-      val reg = sc.getPersistentRDDs
-      ids.foreach(id => reg.get(id).foreach(_.unpersist(blocking = false)))
-    }
-
     // Symmetrize once; propagation then only needs one direction per round.
     // ONE scan of the edge plan via explode — the union form
     // (edges.select(a,b) ∪ edges.select(b,a)) scans `edges` twice, and the
@@ -87,7 +70,7 @@ object ConnectedComponents {
     // (Under AQE even a lazy localCheckpoint's `.rdd` access executes the
     // plan's intermediate shuffle stages to finalize the adaptive plan, so
     // the edge-plan cost lands HERE, not in round 0.)
-    val (sym, symIds) = checkpointTracked(
+    val (sym, symIds) = LocalCheckpoint(
       edges
         .select(explode(array(
           struct(col("id_a").as("src"), col("id_b").as("dst")),
@@ -95,7 +78,7 @@ object ConnectedComponents {
         .select(col("e.src").as("src"), col("e.dst").as("dst")),
       eager = false)
 
-    var (labels, labelIds) = checkpointTracked(
+    var (labels, labelIds) = LocalCheckpoint(
       initial.select(col("id"), col("cluster_id")), eager = false)
     // Pointer jumping is engaged only after the plain rounds stop being
     // enough: near-dup components are almost always shallow (diameter ≤ 2-3
@@ -147,17 +130,17 @@ object ConnectedComponents {
       // total. The count is exact, not a limit(1) probe: a partial action
       // would checkpoint only the partitions it touched and silently
       // recompute the rest later.
-      val (next, nextIds) = checkpointTracked(jumped, eager = false)
+      val (next, nextIds) = LocalCheckpoint(jumped, eager = false)
       val changed = next
         .agg(count(when(col("cluster_id") =!= col("old"), 1)).as("c"))
         .first().getLong(0)
       converged = changed == 0
       iter += 1
-      release(labelIds)
+      LocalCheckpoint.release(initial, labelIds)
       labels = next.select("id", "cluster_id")
       labelIds = nextIds
     }
-    release(symIds)
+    LocalCheckpoint.release(initial, symIds)
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not reach a fixpoint in $maxIter rounds " +

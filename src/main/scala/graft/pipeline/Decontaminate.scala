@@ -206,7 +206,7 @@ object Decontaminate {
       cfg: DedupConfig,
       limits: Limits): (DataFrame, Seq[DataFrame]) = {
     graft.functions.GraftExpressions.register(spark)
-    IncrementalDedup.validateStore(baseDir, cfg)
+    val (_, incs) = IncrementalDedup.validateStore(baseDir, cfg)
     val (evalSigs, nEval, evalShBytes) = evalSide(evalSet, cfg)
     if (nEval == 0L) return emptyResult(spark)
     flagAgainstEval(
@@ -215,8 +215,8 @@ object Decontaminate {
       // away here, but they are inert: with the EVAL side's empty docs
       // dropped, the constant empty-signature band hash matches nothing
       // (up to a 64-bit collision, which exact verify then rejects)
-      corpusBands = IncrementalDedup.readAll(spark, baseDir, "bands"),
-      corpusDocs = IncrementalDedup.readAll(spark, baseDir, "docs"),
+      corpusBands = IncDirs.union(spark, baseDir, incs, "bands"),
+      corpusDocs = IncDirs.union(spark, baseDir, incs, "docs"),
       cfg, limits)
   }
 

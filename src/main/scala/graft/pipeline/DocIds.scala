@@ -23,10 +23,9 @@ object DocIds {
     * graft_url_id expression (identical values to the round-1..4 ScalaUDF
     * form — ids and docs checkpoints stay valid; this was the last per-row
     * UDF on the corpus-wide ingest path). Null url → null id (expression
-    * contract); [[assign]]/[[assignDisjoint]] reject null urls LOUDLY before
-    * it matters — see [[guardedId]]. Callers must have registered
-    * GraftExpressions — [[assign]]/[[assignDisjoint]] and GraftSession.get
-    * do. */
+    * contract); [[assign]] rejects null urls LOUDLY before it matters —
+    * see [[guardedId]]. Callers must have registered GraftExpressions —
+    * [[assign]] and GraftSession.get do. */
   def primaryHash(url: Column): Column =
     call_function("graft_url_id", url, lit(0x55524C49L))
 
@@ -38,7 +37,7 @@ object DocIds {
     * silent contract breach — equi-joins never match NULL, so a null-url doc
     * would bypass pair generation, verification, AND decontamination's
     * anti-join scrub (the empty-shingle leak class, via ids instead of
-    * signatures). assignDisjoint's freshness/collision joins also treat NULL
+    * signatures). The increment's freshness and collision joins also treat NULL
     * as no-match, so every increment would add ANOTHER id=NULL row the
     * collision census can't see. A raise_error branch keeps the rejection
     * per-row inside codegen (no extra validation job). */
@@ -49,101 +48,61 @@ object DocIds {
 
   /** Assign a unique `id` to every distinct url.
     *
+    * Each round counts the new rows' ids together with the `existing` ids
+    * (one `groupBy(id)` census; existing ids are distinct, so a count
+    * above 1 is a new id colliding with a new or an existing one),
+    * rehashes exactly those new rows, and repeats — expected rounds ≈ 1.
+    * Existing ids are FROZEN (downstream state references them), so only
+    * the new side ever rehashes, and a rehash is re-checked against both.
+    *
     * @param pages input with a `url` column (exact repeat crawls — duplicate
     *              urls — are collapsed to one row first; the input contract
     *              is byte-identical text per url)
     * @param primary the initial id column (injectable so tests can force
     *                collisions; production uses [[primaryHash]])
+    * @param existing the incremental-ingest form: an `id` relation the new
+    *                 ids must be disjoint from. It is corpus-sized and is
+    *                 shuffled by the census, as the shuffle_hash semi-join
+    *                 this replaced shuffled it. The census references the
+    *                 new side ONCE: a semi-join of the existing ids to the
+    *                 new ones references it twice, and each reference
+    *                 materialized the cached new pages in a job of its own
     * @throws IllegalStateException if collisions persist after maxRounds
     *                               (cannot happen with 64-bit rehashing
     *                               unless two rows share a url post-dedup)
     */
   def assign(
       pages: DataFrame,
-      primary: Column,
+      primary: Column = primaryHash(col("url")),
+      existing: Option[DataFrame] = None,
       maxRounds: Int = 5): DataFrame = {
     graft.functions.GraftExpressions.register(pages.sparkSession)
-    val sc = pages.sparkSession.sparkContext
     var df = pages.dropDuplicates("url").withColumn("id", guardedId(primary))
     // each round's localCheckpoint pins blocks that supersede the previous
     // round's; release the stale ones once the new checkpoint materializes
-    // (same discipline as ConnectedComponents.checkpointTracked — pinned-
-    // but-dead blocks are an OOM contributor under this runtime's broadcast
-    // accounting pathology)
-    var prevIds: Seq[Int] = Nil
+    var pinned: Seq[Int] = Nil
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
-      val colliding = df.groupBy("id").count().where(col("count") > 1).select("id")
+      val colliding = existing.foldLeft(df.select("id"))(_ unionByName _.select("id"))
+        .groupBy("id").count().where(col("count") > 1).select("id")
       if (colliding.isEmpty) done = true
       else {
-        val before = sc.getPersistentRDDs.keySet
-        df = df
+        val (next, ckpt) = LocalCheckpoint(df
           .join(broadcast(colliding.withColumn("collides", lit(true))), Seq("id"), "left")
           .withColumn("id",
             when(col("collides"), rehash(col("id"), col("url"))).otherwise(col("id")))
-          .drop("collides")
-          .localCheckpoint(true) // ids are final data, not a recomputable plan
-        val added = sc.getPersistentRDDs.keysIterator.filterNot(before).toSeq
-        val reg = sc.getPersistentRDDs
-        prevIds.foreach(id => reg.get(id).foreach(_.unpersist(blocking = false)))
-        prevIds = added
+          .drop("collides"),
+          eager = true) // ids are final data, not a recomputable plan
+        LocalCheckpoint.release(df, pinned)
+        df = next
+        pinned = ckpt
         round += 1
       }
     }
     if (!done)
       throw new IllegalStateException(
         s"doc-id collisions persist after $maxRounds rehash rounds — duplicate urls?")
-    df
-  }
-
-  def assign(pages: DataFrame): DataFrame = assign(pages, primaryHash(col("url")))
-
-  /** Incremental-ingest form: assign ids to NEW pages so they are unique AND
-    * disjoint from a FROZEN existing id set (existing ids are immutable —
-    * downstream state references them, so only the new side ever rehashes).
-    * Each round detects both intra-new collisions and collisions against
-    * `existingIds` (a rehash can create either), rehashes exactly the
-    * colliding rows, and repeats — expected rounds ≈ 1, as in [[assign]].
-    * The existing-id side is corpus-sized: joins carry shuffle hints, never
-    * broadcast. */
-  def assignDisjoint(
-      pages: DataFrame,
-      existingIds: DataFrame,
-      maxRounds: Int = 5): DataFrame = {
-    graft.functions.GraftExpressions.register(pages.sparkSession)
-    val sc = pages.sparkSession.sparkContext
-    val ex = existingIds.select(col("id"))
-    var df = pages.dropDuplicates("url").withColumn("id", guardedId(primaryHash(col("url"))))
-    // release superseded localCheckpoint blocks per round — same discipline
-    // as assign(); pinned-but-dead blocks are an OOM contributor here
-    var prevIds: Seq[Int] = Nil
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      val intra = df.groupBy("id").count().where(col("count") > 1).select("id")
-      val cross = df.select("id").join(ex.hint("shuffle_hash"), Seq("id"), "left_semi")
-      val colliding = intra.union(cross).distinct()
-      if (colliding.isEmpty) done = true
-      else {
-        val before = sc.getPersistentRDDs.keySet
-        df = df
-          .join(colliding.withColumn("collides", lit(true)).hint("shuffle_hash"),
-            Seq("id"), "left")
-          .withColumn("id",
-            when(col("collides"), rehash(col("id"), col("url"))).otherwise(col("id")))
-          .drop("collides")
-          .localCheckpoint(true)
-        val added = sc.getPersistentRDDs.keysIterator.filterNot(before).toSeq
-        val reg = sc.getPersistentRDDs
-        prevIds.foreach(id => reg.get(id).foreach(_.unpersist(blocking = false)))
-        prevIds = added
-        round += 1
-      }
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"doc-id collisions persist after $maxRounds disjoint-rehash rounds")
     df
   }
 }

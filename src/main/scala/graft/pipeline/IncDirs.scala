@@ -9,7 +9,8 @@ import graft.sources.TableIO
   * increment layout shared by all three stores ([[IncrementalDedup]],
   * [[IvfIndex]], [[MipsIndex]]): strict `inc-<k>` naming, gap-free 1..k,
   * manifest-complete = committed, tmp-dir + atomic rename commit, loud
-  * lost-race. Each store supplies its own stage list. */
+  * lost-race, and the base ∪ increments readers. Each store supplies its
+  * own stage list. */
 private[pipeline] object IncDirs {
 
   /** Committed inc dirs in order, with THREE fail-fast gates:
@@ -95,9 +96,21 @@ private[pipeline] object IncDirs {
     (finalDir, out)
   }
 
-  /** Shared append orchestration for the two-stage retrieval stores
-    * ([[IvfIndex.append]]/[[MipsIndex.append]] both delegate here — the
-    * round-6 review found the scaffold copy-pasted):
+  /** A relation as of the latest increment: the base stage unioned with
+    * every committed increment's (the stages stored incrementally). */
+  def union(spark: SparkSession, baseDir: String, incs: Seq[(Int, String)],
+      stage: String): DataFrame =
+    (baseDir +: incs.map(_._2)).map(d => TableIO.read(spark, s"$d/$stage"))
+      .reduce(_ unionByName _)
+
+  /** The latest snapshot's stage: the last increment's, else the base's
+    * (the stages every increment rewrites in full). */
+  def latest(spark: SparkSession, baseDir: String, incs: Seq[(Int, String)],
+      stage: String): DataFrame =
+    TableIO.read(spark, s"${incs.lastOption.fold(baseDir)(_._2)}/$stage")
+
+  /** Append orchestration of the two-stage vector stores
+    * ([[VectorStore.append]]):
     *
     *  - quantize + cache the input ONCE; its count gives `dropped` without
     *    a second scan of the raw input relation;
@@ -106,10 +119,11 @@ private[pipeline] object IncDirs {
     *    against ids already stored; an intra-batch dupe would commit two
     *    vectors under one key, the exact condition the id guard exists
     *    for; arbitrary-copy pick, the IncrementalDedup pages posture),
-    *    then anti-join the stored id set (skinny, shuffle_hash);
-    *  - `extraStat` (an aggregate Column over the new rows, e.g. MIPS'
+    *    then anti-join the stored id set (base ∪ `incs` vectors; skinny,
+    *    shuffle_hash);
+    *  - `second.stat` (an aggregate Column over the new rows, e.g. MIPS'
     *    max ‖v‖²) is FUSED into the same count job and handed to
-    *    `validate`, which runs BEFORE anything is written — a separate
+    *    `second.check`, which runs BEFORE anything is written — a separate
     *    validation agg would be one more Spark job on this VM's
     *    per-job-constant path (round-6 review);
     *  - commit `inc-k/{vectors,<secondStage>}` via [[commit]]. Hash chain:
@@ -119,25 +133,19 @@ private[pipeline] object IncDirs {
     *    a base rebuilt under other config. */
   def appendStages(
       spark: SparkSession, newEmb: DataFrame, baseDir: String, what: String,
-      existingVectorDirs: Seq[String], incs: Seq[(Int, String)],
-      baseChain: String, saltPrefix: String,
+      incs: Seq[(Int, String)], baseChain: String, saltPrefix: String,
       secondStage: String, secondSalt: String,
-      extraStat: Option[org.apache.spark.sql.Column] = None,
-      validate: Long => Unit = _ => (),
-      computeSecond: DataFrame => DataFrame):
-      (String, Long, Long, Seq[CheckpointedDedup.StageResult]) = {
+      second: VectorStore.Second): VectorStore.AppendReport = {
     import org.apache.spark.sql.functions.lit
     val q = IvfIndex.quantized(newEmb).cache()
     try {
       val nInput = q.count()
-      val existingIds = existingVectorDirs
-        .map(d => TableIO.read(spark, d).select("vec_id"))
-        .reduce(_ unionByName _)
+      val existingIds = union(spark, baseDir, incs, "vectors").select("vec_id")
       val newVecs = q.dropDuplicates("vec_id")
         .join(existingIds.hint("shuffle_hash"), Seq("vec_id"), "left_anti")
         .cache()
       try {
-        // ONE aggregation job: row count + extraStat + the vectors-stage
+        // ONE aggregation job: row count + stat + the vectors-stage
         // input fingerprint, fused — the standalone inputFingerprint agg
         // was a whole extra job on this VM's per-job-constant append floor
         // (VERDICT r6 #4). fingerprintCols/fingerprintString ARE the
@@ -145,11 +153,11 @@ private[pipeline] object IncDirs {
         // are invalidation-critical).
         val (fn, fx) = StageRunner.fingerprintCols("vec_id", "v")
         val r = newVecs
-          .agg(fn.as("n"), extraStat.getOrElse(lit(0L)).as("s"), fx.as("x")).first()
+          .agg(fn.as("n"), second.stat.getOrElse(lit(0L)).as("s"), fx.as("x")).first()
         val nNew = r.getLong(0)
         val dropped = nInput - nNew
-        if (nNew == 0) return ("", 0L, dropped, Seq.empty)
-        validate(r.getLong(1))
+        if (nNew == 0) return VectorStore.AppendReport("", 0L, dropped, Seq.empty)
+        second.check(r.getLong(1))
         val k = incs.map(_._1).maxOption.getOrElse(0) + 1
         val hv = CheckpointedDedup.chainHash(baseChain, s"${saltPrefix}_vectors",
           s"$k:v1:${StageRunner.fingerprintString(nNew, r.getLong(2))}")
@@ -170,7 +178,7 @@ private[pipeline] object IncDirs {
           val r1 = new StageRunner(spark, tmp)
           val r2 = new StageRunner(spark, tmp)
           val f1 = Future(r1.stage("vectors", hv, Map("base" -> baseChain)) { newVecs })
-          val f2 = Future(r2.stage(secondStage, h2) { computeSecond(newVecs) })
+          val f2 = Future(r2.stage(secondStage, h2) { second.compute(newVecs) })
           // await BOTH before surfacing either failure: commit must never
           // rename the tmp dir while a stage write is still in flight.
           // When both fail, the second failure rides along as suppressed —
@@ -184,7 +192,7 @@ private[pipeline] object IncDirs {
             case _ => Seq(e1.get, e2.get)
           }
         }
-        (incDir, nNew, dropped, stages)
+        VectorStore.AppendReport(incDir, nNew, dropped, stages)
       } finally newVecs.unpersist(blocking = false)
     } finally q.unpersist(blocking = false)
   }

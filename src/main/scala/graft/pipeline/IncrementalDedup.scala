@@ -46,7 +46,7 @@ import graft.sources.TableIO
   * Contracts (and the two disclosed divergences from a from-scratch run):
   *  - id STABILITY: existing doc ids never change; a new url whose hash
   *    collides with an existing id is rehashed on the NEW side only
-  *    ([[DocIds.assignDisjoint]]). A from-scratch run would rehash both
+  *    ([[DocIds.assign]] with the existing ids). A from-scratch run would rehash both
   *    sides — id stability is the production contract, and the divergence
   *    fires at ~2⁻⁶⁴ per pair.
   *  - MONOTONE verified pairs: a previously verified pair is kept even if
@@ -82,19 +82,7 @@ object IncrementalDedup {
     * with every increment's stage table (for the text-width stages, which
     * are stored incrementally). */
   def readAll(spark: SparkSession, baseDir: String, stage: String): DataFrame =
-    unionOf(spark, baseDir, committedDirs(baseDir), stage)
-
-  private def committedDirs(baseDir: String): Seq[String] =
-    IncDirs.committed(baseDir, Stages, "increment").map(_._2)
-
-  private def unionOf(
-      spark: SparkSession, baseDir: String, incs: Seq[String], stage: String): DataFrame =
-    incs.foldLeft(TableIO.read(spark, s"$baseDir/$stage"))(
-      (df, inc) => df.unionByName(TableIO.read(spark, s"$inc/$stage")))
-
-  private def latestOf(
-      spark: SparkSession, baseDir: String, incs: Seq[String], stage: String): DataFrame =
-    TableIO.read(spark, s"${incs.lastOption.getOrElse(baseDir)}/$stage")
+    IncDirs.union(spark, baseDir, IncDirs.committed(baseDir, Stages, "increment"), stage)
 
   /** The latest snapshot's clusters as warm-start labels for the next
     * increment's connected components, or None (cold start) when that
@@ -109,10 +97,10 @@ object IncrementalDedup {
     * labels [[ConnectedComponents.fromLabels]] needs to reach the cold
     * run's fixpoint. */
   private def previousClusters(
-      spark: SparkSession, baseDir: String, incs: Seq[String], cfg: DedupConfig,
+      spark: SparkSession, baseDir: String, incs: Seq[(Int, String)], cfg: DedupConfig,
       family: String): Option[DataFrame] = {
     val complete = incs.lastOption match {
-      case Some(inc) =>
+      case Some((_, inc)) =>
         TableIO.readManifest(s"$inc/clusters").exists(_.extra.get("family").contains(family))
       case None =>
         TableIO.readManifest(s"$baseDir/docs").exists { docs =>
@@ -120,7 +108,7 @@ object IncrementalDedup {
           TableIO.isComplete(s"$baseDir/clusters", hash)
         }
     }
-    if (complete) Some(latestOf(spark, baseDir, incs, "clusters")) else None
+    if (complete) Some(IncDirs.latest(spark, baseDir, incs, "clusters")) else None
   }
 
   /** The per-increment telemetry table, read across schema GENERATIONS: the
@@ -137,7 +125,7 @@ object IncrementalDedup {
   /** The authoritative pair/cluster tables: the LATEST increment's (each
     * increment writes the full union of these O(pairs)-sized relations). */
   def latest(spark: SparkSession, baseDir: String, stage: String): DataFrame =
-    latestOf(spark, baseDir, committedDirs(baseDir), stage)
+    IncDirs.latest(spark, baseDir, IncDirs.committed(baseDir, Stages, "increment"), stage)
 
   /** The store-consistency gate, shared by [[run]] and by cross-operator
     * readers of the store ([[Decontaminate.pairsFromCheckpoints]]):
@@ -188,7 +176,6 @@ object IncrementalDedup {
     // ONE listing of the store: every prior increment is committed
     // (validateStore failed fast on a partial, gapped or family-mixed one)
     val (family, priorIncs) = validateStore(baseDir, cfg)
-    val priorInc = priorIncs.map(_._2)
     // k = max existing number + 1, NOT count + 1: the gap check makes them
     // equal today, but max+1 stays correct the moment the sequence rule
     // ever changes, and never collides with a surviving higher-numbered dir
@@ -200,16 +187,14 @@ object IncrementalDedup {
     IncDirs.warnStray(baseDir)
 
     // the store was fully validated above (validateStore walked every
-    // increment's manifests); these pre-validated readers skip the
-    // per-call re-listing + re-validation that the PUBLIC readAll/latest
-    // perform for external callers (review r5: run() triggered the full
-    // O(increments × stages) manifest walk at ~8 separate call sites)
-    def readAllPre(stage: String): DataFrame = unionOf(spark, baseDir, priorInc, stage)
-    def latestPre(stage: String): DataFrame = latestOf(spark, baseDir, priorInc, stage)
-
-    val oldDocs = readAllPre("docs") // (id, url, text)
-    val oldCand = latestPre("candidates")
-    val oldVerified = latestPre("verified_pairs")
+    // increment's manifests): every read below goes through that listing,
+    // skipping the per-call re-listing + re-validation that the PUBLIC
+    // readAll/latest perform for external callers (review r5: run()
+    // triggered the full O(increments × stages) manifest walk at ~8
+    // separate call sites)
+    val oldDocs = IncDirs.union(spark, baseDir, priorIncs, "docs") // (id, url, text)
+    val oldCand = IncDirs.latest(spark, baseDir, priorIncs, "candidates")
+    val oldVerified = IncDirs.latest(spark, baseDir, priorIncs, "verified_pairs")
 
     // The increment input is scanned twice (fingerprint + docs stage).
     // An increment is SMALL by definition (a daily batch, not the corpus),
@@ -236,17 +221,17 @@ object IncrementalDedup {
         val runner = new StageRunner(spark, dir)
 
         // 1. fresh docs only (byte-identical-text-per-url contract: a re-crawled
-        // url is the SAME document — dropped here, like dropDuplicates within a
-        // batch), with ids unique AND disjoint from every existing id
-        // `fresh` is cached like newPagesC (one row per new doc): the id
-        // collision check and the stage write would each re-run the anti-join
-        // against the corpus-sized url column
+        // url is the SAME document — dropped here; DocIds.assign collapses
+        // repeats within the batch), with ids unique AND disjoint from every
+        // existing id. `fresh` is cached like newPagesC: the id collision
+        // check and the stage write would each re-run the anti-join against
+        // the corpus-sized url column
         var freshC: DataFrame = null
         val newDocsDf = runner.stage("docs", incHash("docs", salt), famTag) {
-          freshC = newPagesC.dropDuplicates("url")
+          freshC = newPagesC
             .join(oldDocs.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
             .cache()
-          DocIds.assignDisjoint(freshC, oldDocs.select("id"))
+          DocIds.assign(freshC, existing = Some(oldDocs.select("id")))
             .select(col("id"), col("url"), col("text"))
         }.df
         // the docs stage write materialized both
@@ -282,7 +267,7 @@ object IncrementalDedup {
         val deltaCensusDf = Dedup.bucketCensus(newBands)
 
         val prevCensusManifest =
-          TableIO.readManifest(s"${priorInc.lastOption.getOrElse(baseDir)}/census")
+          TableIO.readManifest(s"${priorIncs.lastOption.fold(baseDir)(_._2)}/census")
         val prevCapped = prevCensusManifest
           .flatMap(_.extra.get("cappedBuckets")).map(_.toLong).getOrElse(0L)
         val prevMaxBucket = prevCensusManifest
@@ -302,7 +287,8 @@ object IncrementalDedup {
               nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
             // ONE cached touched census carrying both sizes: prev_size sums
             // the earlier snapshots, bucket_size adds the delta
-            touchedCache = readAllPre("census").join(keys, "band_hash")
+            touchedCache = IncDirs.union(spark, baseDir, priorIncs, "census")
+              .join(keys, "band_hash")
               .select(col("band_hash"), col("bucket_size").as("prev_size"),
                 col("bucket_size"))
               .unionByName(deltaCensusDf.select(col("band_hash"), lit(0L).as("prev_size"),
@@ -345,7 +331,8 @@ object IncrementalDedup {
               // old band rows are consulted ONLY for gated touched buckets —
               // a broadcast probe applied at the columnar checkpoint scan,
               // never a shuffle of the untouched corpus
-              val unionBands = readAllPre("bands").unionByName(newBands)
+              val unionBands =
+                IncDirs.union(spark, baseDir, priorIncs, "bands").unionByName(newBands)
               Some(unionBands.join(gate, "band_hash")
                 .select(col("band_hash"), col("id").as("id_o"))
                 .join(
@@ -372,8 +359,10 @@ object IncrementalDedup {
           // old TEXT is still never re-hashed.
           val saltedNew: Option[DataFrame] =
             if (cfg.saltWindow > 0 && touchedHot > 0) {
-              val bandsFull = readAllPre("bands").unionByName(newBands)
-              val sigsFull = readAllPre("signatures").unionByName(newSigs)
+              val bandsFull =
+                IncDirs.union(spark, baseDir, priorIncs, "bands").unionByName(newBands)
+              val sigsFull =
+                IncDirs.union(spark, baseDir, priorIncs, "signatures").unionByName(newSigs)
               // raw form: the final dedupPairs over oldCand ∪ additions below
               // already dedups, so the salted sub-plan's own pair exchange is
               // pure waste here
@@ -426,7 +415,7 @@ object IncrementalDedup {
         // start at their previous cluster ids, new docs at their own
         runner.stage("clusters", incHash("clusters", salt), famTag) {
           val edges = verifiedOut.select("id_a", "id_b")
-          previousClusters(spark, baseDir, priorInc, cfg, family) match {
+          previousClusters(spark, baseDir, priorIncs, cfg, family) match {
             case Some(prev) =>
               ConnectedComponents.fromLabels(
                 prev.select("id", "cluster_id").unionByName(

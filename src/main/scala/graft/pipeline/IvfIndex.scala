@@ -92,7 +92,9 @@ object IvfIndex {
       .select(col("vec_id"), (-col("m.ncid")).as("cid"))
   }
 
-  /** Probe + exact top-k rerank over already-built index relations.
+  /** Probe + exact top-k rerank over already-built index relations, for
+    * the probe rows `probes` (vec_id, v: a subset of `e` — a filter of it
+    * in memory, [[VectorStore.probeVectors]] in the store).
     *
     * Probed-cell membership: the ≤ probes·nprobe cell keys are broadcast so
     * the corpus-sized assignment relation is probed in place, never
@@ -106,52 +108,14 @@ object IvfIndex {
     *         done. */
   def probeRerank(
       e: DataFrame, cent: DataFrame, cell: DataFrame,
-      probeFilter: Column, nprobe: Int, k: Int): (DataFrame, Seq[DataFrame]) =
-    probeRerankVecs(e, cent, cell,
-      e.where(probeFilter).select(col("vec_id").as("probe_id"), col("v").as("pv")),
-      nprobe, k)
-
-  /** [[probeRerank]] with the probe set given as a (vec_id) RELATION instead
-    * of a filter Column: the probe ids broadcast-semi-join the corpus at the
-    * scan — the uniform probe-set posture (VERDICT r5: Main's ivf-query
-    * materialized up to 100k ids into an In-list literal, a heavyweight plan
-    * node that re-parses per plan copy; this keeps the same plan shape as
-    * every other counted probe join in the repo). Callers guarantee the id
-    * relation is small (the CLI counts it first). */
-  def probeRerankIds(
-      e: DataFrame, cent: DataFrame, cell: DataFrame,
-      probeIds: DataFrame, nprobe: Int, k: Int): (DataFrame, Seq[DataFrame]) = {
-    // emptiness checked on the raw id relation BEFORE the broadcast join is
-    // even planned: probeRerankVecs' own count-guard would evaluate
-    // broadcast(empty ids) to discover the emptiness — materializing the
-    // exact phantom broadcast the short-circuit exists to avoid
-    if (probeIds.limit(1).count() == 0)
-      probeRerankVecs(e, cent, cell,
-        e.select(col("vec_id").as("probe_id"), col("v").as("pv")).limit(0),
-        nprobe, k)
-    else
-      // distinct: a duplicated id in the probe parquet (upstream retry)
-      // would otherwise duplicate the probe row through the inner join —
-      // the cell-ranking window then ranks the SAME cell at prk 1 AND 2,
-      // silently halving nprobe, and the output repeats (probe_id, vec_id)
-      // rows (round-6 review; the replaced In-list form was a filter, for
-      // which duplicates were harmless)
-      probeRerankVecs(e, cent, cell,
-        e.join(broadcast(probeIds.select(col("vec_id")).distinct()), "vec_id")
-          .select(col("vec_id").as("probe_id"), col("v").as("pv")),
-        nprobe, k)
-  }
-
-  private def probeRerankVecs(
-      e: DataFrame, cent: DataFrame, cell: DataFrame,
-      probeVecs0: DataFrame, nprobe: Int, k: Int): (DataFrame, Seq[DataFrame]) = {
+      probes: DataFrame, nprobe: Int, k: Int): (DataFrame, Seq[DataFrame]) = {
     // the probe side is tiny by contract — cache it (it feeds the cell
     // ranking and the final re-join) and COUNT it first: an empty probe set
     // must short-circuit to an empty result BEFORE any broadcast is built
     // (an explicit broadcast of an empty long-keyed relation is the
     // documented ~513 MiB phantom-broadcast trap — the Decontaminate
     // nEval==0 posture, ADVICE r5)
-    val probeVecs = probeVecs0.cache()
+    val probeVecs = probes.select(col("vec_id").as("probe_id"), col("v").as("pv")).cache()
     if (probeVecs.count() == 0) {
       // schema-identical to the populated path (incl. cos_sim's
       // NULLABILITY — graft_cosq is nullable, a bare lit(0.0) is not, and
@@ -209,17 +173,12 @@ object IvfIndex {
     def recomputedStages: Seq[String] = stages.filter(_.recomputed).map(_.name)
   }
 
-  private val StageNames = Seq("vectors", "centroids", "assignment")
-
-  /** Per-stage chained config hashes downstream of the vectors stage —
-    * shared by [[build]] and [[topKWithHandle]]'s validation so a store
-    * whose stages were written under different inputs/configs fails fast
-    * instead of silently mixing index generations. */
-  private def chain(h0: String, nCells: Int): Map[String, String] = {
-    val h1 = CheckpointedDedup.chainHash(h0, "ivf_centroids", nCells.toString)
-    val h2 = CheckpointedDedup.chainHash(h1, "ivf_assignment", "argmax")
-    Map("centroids" -> h1, "assignment" -> h2)
-  }
+  /** The store protocol: `centroids` chains off `vectors` under nCells,
+    * `assignment` (the second stage, recomputed per append) off
+    * `centroids`. nCells is read back from the centroids manifest. */
+  private val Store = new VectorStore[Int]("IVF", "ivf",
+    Seq("centroids" -> ((n: Int) => n.toString), "assignment" -> ((_: Int) => "argmax")),
+    tag => tag("nCells").toInt)
 
   /** Build (or resume) the index store at baseDir from an
     * (vec_id, embedding: array<float>) relation. The vectors stage folds an
@@ -232,10 +191,9 @@ object IvfIndex {
     require(nCells >= 1, s"nCells must be >= 1, got $nCells")
     graft.functions.GraftExpressions.register(spark)
     val runner = new StageRunner(spark, baseDir)
-    val h0 = CheckpointedDedup.chainHash("root", "ivf_vectors",
-      s"v1:${StageRunner.inputFingerprint(emb, "vec_id", "embedding")}")
+    val h0 = Store.vectorsHash(emb)
     val vectorsStage = runner.stage("vectors", h0) { quantized(emb) }
-    val hashes = chain(h0, nCells)
+    val hashes = Store.chain(h0, nCells).toMap
     val centroidsStage = runner.stage("centroids", hashes("centroids"),
       Map("nCells" -> nCells.toString)) {
       centroids(vectorsStage.df, nCells)
@@ -248,39 +206,25 @@ object IvfIndex {
     BuildReport(runner.stages.toSeq, nVecs, nCells)
   }
 
-  /** Top-k cosine ANN for every vector of the store matching probeFilter —
-    * from the checkpoints alone: no corpus re-quantization, no centroid
-    * re-sample, and above all NO re-run of the O(n·C·d) assignment. Returns
-    * the result plus the pinned relations (the nearDupPairsWithHandle
-    * contract): the cached vectors read-back, probe set, and candidate set
-    * — callers unpersist when done. (The plain-DataFrame `topK` form was
-    * REMOVED in round 6: it discarded the pinned handles, so repeated calls
-    * in a long-lived session accumulated corpus-scale caches — ADVICE r5.) */
+  /** Top-k cosine ANN for every stored vector whose id is in the (vec_id)
+    * relation `probeIds` — from the checkpoints alone: no corpus
+    * re-quantization, no centroid re-sample, and above all NO re-run of the
+    * O(n·C·d) assignment. The probe rows are [[VectorStore.probeVectors]].
+    * Returns the result plus the pinned relations (the
+    * nearDupPairsWithHandle contract): the cached vectors read-back, probe
+    * set, and candidate set — callers unpersist when done. */
   def topKWithHandle(
-      spark: SparkSession, baseDir: String, probeFilter: Column,
-      nprobe: Int = 2, k: Int = 10): (DataFrame, Seq[DataFrame]) = {
-    val (e, cent, cell) = openStore(spark, baseDir)
-    val (out, pinned) = probeRerank(e, cent, cell, probeFilter, nprobe, k)
-    (out, e +: pinned)
-  }
-
-  /** [[topKWithHandle]] with the probe set as a (vec_id) relation — the
-    * broadcast-semi-join posture (see [[probeRerankIds]]). */
-  def topKWithHandleIds(
       spark: SparkSession, baseDir: String, probeIds: DataFrame,
       nprobe: Int = 2, k: Int = 10): (DataFrame, Seq[DataFrame]) = {
-    val (e, cent, cell) = openStore(spark, baseDir)
-    val (out, pinned) = probeRerankIds(e, cent, cell, probeIds, nprobe, k)
+    val (_, vectors, cell) = Store.open(spark, baseDir)
+    val e = vectors.cache() // probe + rerank branches
+    val cent = TableIO.read(spark, s"$baseDir/centroids")
+    val (out, pinned) =
+      probeRerank(e, cent, cell, VectorStore.probeVectors(e, probeIds), nprobe, k)
     (out, e +: pinned)
   }
 
   // ------------------------------------------------------------- append --
-
-  private val IncStageNames = Seq("vectors", "assignment")
-
-  final case class AppendReport(
-      incDir: String, newVectors: Long, droppedDupOrStored: Long,
-      stages: Seq[CheckpointedDedup.StageResult])
 
   /** Append new (vec_id, embedding) rows to a completed store WITHOUT
     * re-paying the base's O(n·C·d) assignment — the store's whole point is
@@ -290,92 +234,17 @@ object IvfIndex {
     * every existing vector's cell), so the work is exactly:
     *  - an id anti-join against the stored ids (re-delivered vec_ids are
     *    dropped, the IncrementalDedup re-crawl posture — an id collision
-    *    would serve two vectors under one key). Skinny id-only scan of the
-    *    union, hint-proofed shuffle_hash (the store side is unbounded);
+    *    would serve two vectors under one key);
     *  - quantization + fused argmax assignment of ONLY the new rows — a
     *    narrow O(new·C·d) map against the base centroids;
-    *  - an `inc-k/{vectors,assignment}` snapshot, committed by tmp-dir +
-    *    atomic rename ([[IncDirs]]; gap-free numbering, manifest-complete =
-    *    committed, loud lost-race).
+    *  - an `inc-k/{vectors,assignment}` snapshot ([[VectorStore.append]]).
     * The inc vectors manifest records the base ASSIGNMENT hash as its
     * `base` tag: queries validate every append still chains off the
     * CURRENT base generation, so a base rebuilt under different input or
-    * nCells fails fast instead of mixing index generations.
-    * Zero genuinely-new rows → nothing written (report with incDir = ""). */
-  def append(spark: SparkSession, newEmb: DataFrame, baseDir: String): AppendReport = {
-    graft.functions.GraftExpressions.register(spark)
-    IncDirs.warnStray(baseDir)
-    val (baseManifests, nCells, incs) = validateStore(baseDir)
-    val baseChain = chain(baseManifests("vectors").configHash, nCells)("assignment")
-    val cent = TableIO.read(spark, s"$baseDir/centroids")
-    val (incDir, nNew, nDropped, stages) = IncDirs.appendStages(
-      spark, newEmb, baseDir, "IVF store",
-      existingVectorDirs = s"$baseDir/vectors" +: incs.map { case (_, d) => s"$d/vectors" },
-      incs = incs, baseChain = baseChain, saltPrefix = "ivf_append",
-      secondStage = "assignment", secondSalt = "argmax",
-      computeSecond = newVecs => assignment(newVecs, cent, nCells))
-    AppendReport(incDir, nNew, nDropped, stages)
-  }
-
-  /** Base-store manifest validation shared by [[openStore]] and [[append]]:
-    * returns the base manifests, nCells, and the committed appends. */
-  private def validateStore(
-      baseDir: String): (Map[String, TableIO.Manifest], Int, Seq[(Int, String)]) = {
-    // fail fast on a missing/partial/mixed-generation store: every stage
-    // manifest must exist and the stored hashes must CHAIN — a stage
-    // rewritten under a different input or nCells (its hash differs from
-    // the chain recomputed off the vectors manifest) must not silently
-    // serve candidates from one index generation and vectors from another
-    val manifests = StageNames.map { n =>
-      n -> TableIO.readManifest(s"$baseDir/$n").getOrElse(
-        throw new IllegalStateException(
-          s"IVF store at $baseDir is incomplete: stage '$n' has no manifest " +
-            s"(crashed or never-finished build) — re-run IvfIndex.build"))
-    }.toMap
-    val nCells = manifests("centroids").extra.getOrElse("nCells",
-      throw new IllegalStateException(
-        s"IVF store at $baseDir: centroids manifest lacks the nCells tag")).toInt
-    val expect = chain(manifests("vectors").configHash, nCells)
-    StageNames.drop(1).foreach { n =>
-      require(manifests(n).configHash == expect(n),
-        s"IVF store at $baseDir: stage '$n' was written for a different " +
-          s"input/config than the current vectors stage (hash chain broken) — " +
-          s"re-run IvfIndex.build")
+    * nCells fails fast instead of mixing index generations. */
+  def append(spark: SparkSession, newEmb: DataFrame, baseDir: String): VectorStore.AppendReport =
+    Store.append(spark, newEmb, baseDir) { s =>
+      val cent = TableIO.read(spark, s"$baseDir/centroids")
+      VectorStore.Second(newVecs => assignment(newVecs, cent, s.cfg))
     }
-    // appended snapshots: committed (gap-free, manifest-complete) AND
-    // chained — each inc must extend THIS base generation (its recorded
-    // `base` tag is the current base assignment hash) and be internally
-    // consistent (assignment hash chains off its vectors hash)
-    val incs = IncDirs.committed(baseDir, IncStageNames, "IVF store")
-    incs.foreach { case (_, dir) =>
-      val vm = TableIO.readManifest(s"$dir/vectors").get
-      val am = TableIO.readManifest(s"$dir/assignment").get
-      require(vm.extra.get("base").contains(expect("assignment")),
-        s"IVF store append at $dir was built against a DIFFERENT base " +
-          s"generation (the base was rebuilt under other input/nCells since) " +
-          s"— delete the inc-* dirs and re-append, or rebuild the store")
-      require(am.configHash ==
-        CheckpointedDedup.chainHash(vm.configHash, "ivf_append_assignment", "argmax"),
-        s"IVF store append at $dir: assignment does not chain off its own " +
-          s"vectors stage (hash chain broken) — quarantine that increment")
-    }
-    (manifests, nCells, incs)
-  }
-
-  /** Validate the store (base chain + every committed append) and open its
-    * three relations — vectors and assignment as the UNION of base + incs
-    * (vectors CACHED: it feeds the probe and rerank branches). */
-  private def openStore(
-      spark: SparkSession, baseDir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftExpressions.register(spark)
-    val (_, _, incs) = validateStore(baseDir)
-    def unioned(stage: String): DataFrame =
-      (Seq(s"$baseDir/$stage") ++ incs.map { case (_, d) => s"$d/$stage" })
-        .map(d => TableIO.read(spark, d))
-        .reduce(_ unionByName _)
-    val e = unioned("vectors").cache() // probe + rerank branches
-    val cent = TableIO.read(spark, s"$baseDir/centroids")
-    val cell = unioned("assignment")
-    (e, cent, cell)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.TableIO
 
@@ -31,18 +31,16 @@ object MipsIndex {
     def recomputedStages: Seq[String] = stages.filter(_.recomputed).map(_.name)
   }
 
-  final case class AppendReport(
-      incDir: String, newVectors: Long, droppedDupOrStored: Long,
-      stages: Seq[CheckpointedDedup.StageResult])
-
-  private val StageNames = Seq("vectors", "bits")
-  private val IncStageNames = Seq("vectors", "bits")
-
   private def planSalt(p: MipsPlan): String =
     s"${p.tables}:${p.planesPerTable}:${p.bucketBits}"
 
-  private def bitsHash(h0: String, plan: MipsPlan): String =
-    CheckpointedDedup.chainHash(h0, "mips_bits", planSalt(plan))
+  /** The store protocol: `bits` (the second stage, recomputed per append)
+    * chains off `vectors` under the banding plan, read back from the bits
+    * manifest's plan tags. Its `m2` tag is not part of the chain: only
+    * [[append]] needs it. */
+  private val Store = new VectorStore[MipsPlan]("MIPS", "mips",
+    Seq("bits" -> planSalt _),
+    tag => MipsPlan(tag("tables").toInt, tag("planesPerTable").toInt, tag("bucketBits").toInt))
 
   /** Build (or resume) the index store at baseDir from a
     * (vec_id, embedding: array<float>) relation. The banding plan defaults
@@ -53,8 +51,7 @@ object MipsIndex {
       plan: Option[MipsPlan] = None): BuildReport = {
     graft.functions.GraftExpressions.register(spark)
     val runner = new StageRunner(spark, baseDir)
-    val h0 = CheckpointedDedup.chainHash("root", "mips_vectors",
-      s"v1:${StageRunner.inputFingerprint(emb, "vec_id", "embedding")}")
+    val h0 = Store.vectorsHash(emb)
     val vectorsStage = runner.stage("vectors", h0) { IvfIndex.quantized(emb) }
     val nVecs = TableIO.readManifest(s"$baseDir/vectors").map(_.rows).getOrElse(0L)
     val p = plan.getOrElse(SignAlshRetrieval.planFor(nVecs))
@@ -72,12 +69,13 @@ object MipsIndex {
     // review). Detect the m2-less manifest and force the stage to
     // recompute — manifest deleted FIRST, the crash-safe rewrite protocol.
     val bitsDir = s"$baseDir/bits"
-    if (TableIO.isComplete(bitsDir, bitsHash(h0, p)) &&
+    val bitsHash = Store.chain(h0, p).last._2
+    if (TableIO.isComplete(bitsDir, bitsHash) &&
         !TableIO.readManifest(bitsDir).exists(_.extra.contains("m2"))) {
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(bitsDir, "_manifest.json"))
     }
-    runner.stage("bits", bitsHash(h0, p), Map(
+    runner.stage("bits", bitsHash, Map(
       "tables" -> p.tables.toString,
       "planesPerTable" -> p.planesPerTable.toString,
       "bucketBits" -> p.bucketBits.toString,
@@ -94,126 +92,41 @@ object MipsIndex {
     * are id-anti-joined against the stored ids (re-deliveries dropped),
     * only the genuinely-new rows pay quantization + the O(new·T·P)
     * P-transform, and the result commits as an `inc-k/{vectors,bits}`
-    * snapshot (gap-free numbering, manifest-complete = committed, atomic
-    * rename, loud lost-race — [[IncDirs]]).
+    * snapshot ([[VectorStore.append]]).
     *
     * A new vector with ‖v‖² > the frozen M2 fails fast: under SignALSH the
     * norm terms require ‖v‖ ≤ maxnorm, and silently hashing it under the
     * base M2 would index it with out-of-contract bits (missed matches) —
     * rebuild the store when the corpus outgrows its maxnorm. */
-  def append(spark: SparkSession, newEmb: DataFrame, baseDir: String): AppendReport = {
-    graft.functions.GraftExpressions.register(spark)
-    IncDirs.warnStray(baseDir)
-    val (manifests, p, m2Opt, incs) = validateStore(baseDir)
-    val m2 = m2Opt.getOrElse(throw new IllegalStateException(
-      s"MIPS store at $baseDir predates the append feature (bits manifest " +
-        s"lacks the m2 tag) — re-run MipsIndex.build once to enable appends " +
-        s"(build detects the legacy manifest and refreshes the bits stage)"))
-    val baseChain = bitsHash(manifests("vectors").configHash, p)
-    val (incDir, nNew, nDropped, stages) = IncDirs.appendStages(
-      spark, newEmb, baseDir, "MIPS store",
-      existingVectorDirs = s"$baseDir/vectors" +: incs.map { case (_, d) => s"$d/vectors" },
-      incs = incs, baseChain = baseChain, saltPrefix = "mips_append",
-      secondStage = "bits", secondSalt = planSalt(p),
-      // maxnorm check FUSED into the core's count agg (one job)
-      extraStat = Some(coalesce(max(call_function("graft_dot", col("v"), col("v"))), lit(0L))),
-      validate = mx => require(mx <= m2,
-        s"MIPS store at $baseDir: an appended vector has ‖v‖² = $mx > the " +
-          s"store's frozen maxnorm M2 = $m2 — SignALSH bits for it would be " +
-          s"out of contract; rebuild the store (MipsIndex.build) to re-fit " +
-          s"the maxnorm"),
-      computeSecond = newVecs => SignAlshRetrieval.corpusBitsWithM2(newVecs, p, m2))
-    AppendReport(incDir, nNew, nDropped, stages)
-  }
+  def append(spark: SparkSession, newEmb: DataFrame, baseDir: String): VectorStore.AppendReport =
+    Store.append(spark, newEmb, baseDir) { s =>
+      val m2 = s.tags.get("m2").map(_.toLong).getOrElse(throw new IllegalStateException(
+        s"MIPS store at $baseDir predates the append feature (bits manifest " +
+          s"lacks the m2 tag) — re-run MipsIndex.build once to enable appends " +
+          s"(build detects the legacy manifest and refreshes the bits stage)"))
+      VectorStore.Second(newVecs => SignAlshRetrieval.corpusBitsWithM2(newVecs, s.cfg, m2),
+        // maxnorm check FUSED into the append's count agg (one job)
+        stat = Some(coalesce(max(call_function("graft_dot", col("v"), col("v"))), lit(0L))),
+        check = mx => require(mx <= m2,
+          s"MIPS store at $baseDir: an appended vector has ‖v‖² = $mx > the " +
+            s"store's frozen maxnorm M2 = $m2 — SignALSH bits for it would be " +
+            s"out of contract; rebuild the store (MipsIndex.build) to re-fit " +
+            s"the maxnorm"))
+    }
 
-  /** Top-k MIPS for every stored vector matching probeFilter — from the
-    * checkpoints alone: the corpus (base AND appends) is never re-hashed;
-    * only the probe rows pay the Q-transform. */
+  /** Top-k MIPS for every stored vector whose id is in the (vec_id)
+    * relation `probeIds` — from the checkpoints alone: the corpus (base AND
+    * appends) is never re-hashed; only the probe rows
+    * ([[VectorStore.probeVectors]]) pay the Q-transform. The plan is the
+    * store's (a pre-append-era store without the m2 tag still queries). */
   def topKWithHandle(
-      spark: SparkSession, baseDir: String, probeFilter: Column,
-      k: Int = 10): (DataFrame, Seq[DataFrame]) = {
-    val (vectors, corpus, p) = openStore(spark, baseDir)
-    val probes = SignAlshRetrieval.probeBits(vectors, p, probeFilter)
-    val (out, pinned) = SignAlshRetrieval.bucketRank(corpus, probes, p, k)
-    (out, corpus +: pinned)
-  }
-
-  /** [[topKWithHandle]] with the probe set as a (vec_id) relation — the
-    * broadcast-semi-join posture (see IvfIndex.probeRerankIds); the CLI's
-    * form. Callers guarantee the id relation is small (the CLI counts it). */
-  def topKWithHandleIds(
       spark: SparkSession, baseDir: String, probeIds: DataFrame,
       k: Int = 10): (DataFrame, Seq[DataFrame]) = {
-    val (vectors, corpus, p) = openStore(spark, baseDir)
-    // empty id relation short-circuited BEFORE the broadcast join is planned
-    // (evaluating broadcast(empty) is the phantom-broadcast trap)
-    // distinct: a duplicated probe id would ride the inner join into
-    // duplicate probe rows — duplicate bucket probes and repeated result
-    // rows burning rnk ≤ k slots (round-6 review, the IvfIndex rationale)
-    val probeVecs =
-      if (probeIds.limit(1).count() == 0) vectors.limit(0)
-      else vectors.join(broadcast(probeIds.select(col("vec_id")).distinct()), "vec_id")
-    val probes = SignAlshRetrieval.probeBits(probeVecs, p, lit(true))
-    val (out, pinned) = SignAlshRetrieval.bucketRank(corpus, probes, p, k)
+    val (s, vectors, bits) = Store.open(spark, baseDir)
+    val corpus = bits.cache() // bucket join + rerank
+    val probes = SignAlshRetrieval.probeBits(
+      VectorStore.probeVectors(vectors, probeIds), s.cfg, lit(true))
+    val (out, pinned) = SignAlshRetrieval.bucketRank(corpus, probes, s.cfg, k)
     (out, corpus +: pinned)
   }
-
-  /** Validate base + appends and open (vectors∪, cached bits∪, plan). */
-  private def openStore(
-      spark: SparkSession, baseDir: String): (DataFrame, DataFrame, MipsPlan) = {
-    graft.functions.GraftExpressions.register(spark)
-    val (_, p, _, incs) = validateStore(baseDir)
-    def unioned(stage: String): DataFrame =
-      (Seq(s"$baseDir/$stage") ++ incs.map { case (_, d) => s"$d/$stage" })
-        .map(d => TableIO.read(spark, d))
-        .reduce(_ unionByName _)
-    val vectors = unioned("vectors")
-    // the bits read-back feeds two plan branches (bucket join + rerank)
-    val corpus = unioned("bits").cache()
-    (vectors, corpus, p)
-  }
-
-  /** Store-consistency gate shared by queries and [[append]]: base
-    * manifests present, plan tags present, bits hash chained off the
-    * current vectors hash, every append committed AND chained off THIS
-    * base generation. m2 is None on a pre-append-era store (queryable —
-    * m2 is unused by queries — but [[append]] requires it). */
-  private def validateStore(
-      baseDir: String): (Map[String, TableIO.Manifest], MipsPlan, Option[Long], Seq[(Int, String)]) = {
-    val manifests = StageNames.map { n =>
-      n -> TableIO.readManifest(s"$baseDir/$n").getOrElse(
-        throw new IllegalStateException(
-          s"MIPS store at $baseDir is incomplete: stage '$n' has no manifest " +
-            s"(crashed or never-finished build) — re-run MipsIndex.build"))
-    }.toMap
-    val extra = manifests("bits").extra
-    val p = MipsPlan(
-      tables = extra.getOrElse("tables", missingTag(baseDir, "tables")).toInt,
-      planesPerTable = extra.getOrElse("planesPerTable", missingTag(baseDir, "planesPerTable")).toInt,
-      bucketBits = extra.getOrElse("bucketBits", missingTag(baseDir, "bucketBits")).toInt)
-    val m2 = extra.get("m2").map(_.toLong)
-    val baseChain = bitsHash(manifests("vectors").configHash, p)
-    require(manifests("bits").configHash == baseChain,
-      s"MIPS store at $baseDir: the bits stage was written for a different " +
-        s"input/plan than the current vectors stage (hash chain broken) — " +
-        s"re-run MipsIndex.build")
-    val incs = IncDirs.committed(baseDir, IncStageNames, "MIPS store")
-    incs.foreach { case (_, dir) =>
-      val vm = TableIO.readManifest(s"$dir/vectors").get
-      val bm = TableIO.readManifest(s"$dir/bits").get
-      require(vm.extra.get("base").contains(baseChain),
-        s"MIPS store append at $dir was built against a DIFFERENT base " +
-          s"generation (the base was rebuilt under other input/plan since) — " +
-          s"delete the inc-* dirs and re-append, or rebuild the store")
-      require(bm.configHash ==
-        CheckpointedDedup.chainHash(vm.configHash, "mips_append_bits", planSalt(p)),
-        s"MIPS store append at $dir: bits do not chain off their own vectors " +
-          s"stage (hash chain broken) — quarantine that increment")
-    }
-    (manifests, p, m2, incs)
-  }
-
-  private def missingTag(baseDir: String, tag: String): Nothing =
-    throw new IllegalStateException(
-      s"MIPS store at $baseDir: bits manifest lacks the '$tag' plan tag")
 }

@@ -189,7 +189,7 @@ object Probe {
       val nDelta = math.max(1L, n / 8)
       val delta = emb.where(col("vec_id") < nDelta).withColumn("vec_id", col("vec_id") + n).cache()
       delta.count()
-      val probes = col("vec_id") < 32
+      val probes = spark.range(32).select(col("id").as("vec_id"))
       def query(topK: => (DataFrame, Seq[DataFrame])): Double = {
         val ((rows, pinned), w) = timed { val (df, p) = topK; (df.count(), p) }
         pinned.foreach(_.unpersist(blocking = false))

@@ -48,6 +48,19 @@ class DocIdsSpec extends AnyFunSuite {
     assert(df.select("id").distinct().count() == 20)
   }
 
+  test("new ids colliding with existing ids rehash on the new side only") {
+    import spark.implicits._
+    // every new primary lane lands in 0..15, all of which are existing ids
+    val existing = (0L until 16L).toDF("id")
+    val df = DocIds.assign(pages(40), pmod(xxhash64(col("url")), lit(16)), Some(existing))
+    val ids = df.select("id").as[Long].collect()
+    assert(ids.length == 40 && ids.distinct.length == 40)
+    assert(!ids.exists(id => id >= 0L && id < 16L), "a new id reused an existing one")
+    val again = DocIds.assign(pages(40).repartition(3), pmod(xxhash64(col("url")), lit(16)),
+      Some(existing)).select("id").as[Long].collect()
+    assert(again.sorted.toSeq == ids.sorted.toSeq, "rehashing is deterministic")
+  }
+
   test("null urls fail the run loudly (assign and assignDisjoint)") {
     // the ScalaUDF lane NPE'd on null urls; the codegen expression
     // null-propagates, and a NULL id silently bypasses every downstream
@@ -62,7 +75,7 @@ class DocIdsSpec extends AnyFunSuite {
         m.getMessage != null && m.getMessage.contains("null url")))
     val existing = DocIds.assign(pages(10)).select("id")
     val eDisjoint = intercept[Exception] {
-      DocIds.assignDisjoint(withNull, existing).count()
+      DocIds.assign(withNull, existing = Some(existing)).count()
     }
     assert(exceptionChain(eDisjoint).exists(m =>
       m.getMessage != null && m.getMessage.contains("null url")))

@@ -25,7 +25,7 @@ class IvfFusedSpec extends AnyFunSuite {
         val e = IvfIndex.quantized(emb).cache()
         val cent = IvfIndex.centroids(e, 23)
         val (out, p) = IvfIndex.probeRerank(
-          e, cent, IvfIndex.relationalAssignment(e, cent), col("vec_id") < 5, 2, 10)
+          e, cent, IvfIndex.relationalAssignment(e, cent), e.where(col("vec_id") < 5), 2, 10)
         (out, e +: p)
       }
     val rows = df.collect().map(_.toSeq).toSeq

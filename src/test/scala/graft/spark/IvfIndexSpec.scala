@@ -10,7 +10,8 @@ import graft.sources.TableIO
   * input+config must recompute NOTHING, an nCells change must invalidate
   * only centroids+assignment (the quantized vectors stage — typically the
   * bulk of the bytes — stays valid), an input change must invalidate the
-  * whole chain, and a partial/mixed-generation store must fail fast. */
+  * whole chain. The fail-fast validation of a partial or mixed-generation
+  * store is pinned for both vector stores by graft.pipeline.VectorStoreSpec. */
 class IvfIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -25,13 +26,17 @@ class IvfIndexSpec extends AnyFunSuite {
   private def collect(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq
 
+  /** The (vec_id) probe relation of ids 0 until n — the store query's form. */
+  private def ids(n: Long): org.apache.spark.sql.DataFrame =
+    spark.range(n).select(col("id").as("vec_id"))
+
   test("store query ≡ in-memory query; resume recomputes nothing") {
     val dir = tmpDir()
     val r1 = IvfIndex.build(spark, emb, dir, nCells = 23)
     assert(r1.recomputedStages == Seq("vectors", "centroids", "assignment"))
     assert(r1.vectors == emb.count())
 
-    val (store, pinned) = IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
+    val (store, pinned) = IvfIndex.topKWithHandle(spark, dir, ids(5))
     val fromStore = try collect(store)
       finally pinned.foreach(_.unpersist(blocking = false))
     val (mem, memPinned) = graft.SparkEntry.ivfTopKWithHandle(emb, col("vec_id") < 5, 23)
@@ -55,20 +60,22 @@ class IvfIndexSpec extends AnyFunSuite {
     val dir = tmpDir()
     IvfIndex.build(spark, emb, dir, nCells = 23)
     import spark.implicits._
-    // relation form (the CLI's broadcast-semi-join posture) must return
-    // exactly what the equivalent filter form returns
-    val ids = Seq(0L, 1L, 2L, 3L, 4L).toDF("vec_id")
-    val (byIds, p1) = IvfIndex.topKWithHandleIds(spark, dir, ids)
+    // the store's relation form (the CLI's broadcast-semi-join posture)
+    // must return exactly what the filter form of probeRerank returns over
+    // the same stored relations
+    val (byIds, p1) = IvfIndex.topKWithHandle(spark, dir, Seq(0L, 1L, 2L, 3L, 4L).toDF("vec_id"))
     val fromIds = try collect(byIds) finally p1.foreach(_.unpersist(blocking = false))
-    val (byFilter, p2) = IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
+    val Seq(e, cent, cell) = Seq("vectors", "centroids", "assignment")
+      .map(n => TableIO.read(spark, s"$dir/$n"))
+    val (byFilter, p2) = IvfIndex.probeRerank(e, cent, cell, e.where(col("vec_id") < 5), 2, 10)
     val fromFilter = try collect(byFilter) finally p2.foreach(_.unpersist(blocking = false))
     assert(fromIds.nonEmpty && fromIds == fromFilter)
     // empty probe set: empty result with the SAME schema, and no broadcast
     // in the plan (the phantom-broadcast guard, ADVICE r5)
-    val (emptyRes, p3) = IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 0)
+    val (emptyRes, p3) = IvfIndex.topKWithHandle(spark, dir, Seq.empty[Long].toDF("vec_id"))
     try {
-      assert(emptyRes.schema == byFilter.schema,
-        s"${emptyRes.schema} != ${byFilter.schema}")
+      assert(emptyRes.schema == byIds.schema,
+        s"${emptyRes.schema} != ${byIds.schema}")
       assert(emptyRes.count() == 0)
       val plan = emptyRes.queryExecution.optimizedPlan.toString.toLowerCase
       assert(!plan.contains("broadcast"),
@@ -84,7 +91,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(r.recomputedStages == Seq("centroids", "assignment"))
     assert(TableIO.readManifest(s"$dir/vectors").get.snapshotId == vecSnap)
     // and the store still queries consistently under the new config
-    val (df, pinned) = IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 3)
+    val (df, pinned) = IvfIndex.topKWithHandle(spark, dir, ids(3))
     try assert(df.count() > 0L)
     finally pinned.foreach(_.unpersist(blocking = false))
   }
@@ -117,13 +124,13 @@ class IvfIndexSpec extends AnyFunSuite {
     // equality target: the same probe against relations rebuilt in memory
     // over the UNION with the base's FROZEN centroids (a full rebuild would
     // re-sample centroids from the union — frozen geometry is the contract)
-    val (got, p1) = IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 12, nprobe = 2, k = 10)
+    val (got, p1) = IvfIndex.topKWithHandle(spark, dir, ids(12), nprobe = 2, k = 10)
     val fromStore = try collect(got) finally p1.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
     val eAll = IvfIndex.quantized(emb)
     val cent = IvfIndex.centroids(IvfIndex.quantized(base), 23)
     val cell = IvfIndex.assignment(eAll, cent, 23)
-    val (want, p2) = IvfIndex.probeRerank(eAll, cent, cell, col("vec_id") < 12, 2, 10)
+    val (want, p2) = IvfIndex.probeRerank(eAll, cent, cell, eAll.where(col("vec_id") < 12), 2, 10)
     val fromMem = try collect(want) finally p2.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
     assert(fromStore.nonEmpty && fromStore == fromMem)
@@ -137,10 +144,10 @@ class IvfIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val clean = Seq(0L, 1L, 2L).toDF("vec_id")
     val dup = Seq(0L, 0L, 1L, 2L, 2L, 2L).toDF("vec_id")
-    val (a, pa) = IvfIndex.topKWithHandleIds(spark, dir, clean)
+    val (a, pa) = IvfIndex.topKWithHandle(spark, dir, clean)
     val want = try collect(a) finally pa.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
-    val (b, pb) = IvfIndex.topKWithHandleIds(spark, dir, dup)
+    val (b, pb) = IvfIndex.topKWithHandle(spark, dir, dup)
     val got = try collect(b) finally pb.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
     assert(got == want, "dup probe ids must behave as a set (the filter-form semantics)")
@@ -157,70 +164,5 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(r.droppedDupOrStored == delta.count(), "the intra-batch copies counted as dropped")
     val stored = TableIO.read(spark, s"$dir/inc-1/vectors")
     assert(stored.count() == stored.select("vec_id").distinct().count())
-  }
-
-  test("append validation: partial inc, gap, and base-rebuilt-under-other-config fail fast") {
-    val base = emb.where(col("vec_id") % 5 =!= 0)
-    val delta = emb.where(col("vec_id") % 5 === 0)
-    val dir = tmpDir()
-    IvfIndex.build(spark, base, dir, nCells = 23)
-    IvfIndex.append(spark, delta, dir)
-    // partial: drop the inc assignment manifest
-    val mf = java.nio.file.Paths.get(s"$dir/inc-1/assignment/_manifest.json")
-    val saved = java.nio.file.Files.readAllBytes(mf)
-    java.nio.file.Files.delete(mf)
-    val e1 = intercept[IllegalArgumentException] {
-      IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    }
-    assert(e1.getMessage.contains("PARTIAL") && e1.getMessage.contains("inc-1"))
-    java.nio.file.Files.write(mf, saved)
-    // gap: rename inc-1 to inc-2
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$dir/inc-1"), java.nio.file.Paths.get(s"$dir/inc-2"))
-    val e2 = intercept[IllegalArgumentException] {
-      IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    }
-    assert(e2.getMessage.contains("GAP"))
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$dir/inc-2"), java.nio.file.Paths.get(s"$dir/inc-1"))
-    // a stray inc-0 (never engine-written — appends number from 1) must be
-    // ignored like any other stray, not read as "inc-1 is missing" (ADVICE r7);
-    // inc-01 parses to a valid number — the canonical-form guard ignores it
-    // rather than letting it duplicate the real inc-1 (r7 review)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/inc-0"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/inc-01"))
-    val (okDf, okPinned) = IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    assert(okDf.count() > 0)
-    okPinned.foreach(_.unpersist(blocking = false))
-    // base rebuilt under a different nCells: the append no longer chains
-    IvfIndex.build(spark, base, dir, nCells = 31)
-    val e3 = intercept[IllegalArgumentException] {
-      IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    }
-    assert(e3.getMessage.contains("DIFFERENT base generation"))
-  }
-
-  test("missing stage and broken hash chain fail fast") {
-    val dir = tmpDir()
-    val ex = intercept[IllegalStateException] {
-      IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    }
-    assert(ex.getMessage.contains("no manifest"))
-
-    IvfIndex.build(spark, emb, dir, nCells = 23)
-    // simulate a mixed-generation store: the assignment stage rewritten
-    // under some other chain (here: just a wrong stored hash). The data is
-    // materialized to driver rows first — writing a stage from its own lazy
-    // read would overwrite the path mid-scan.
-    val aDir = s"$dir/assignment"
-    val m = TableIO.readManifest(aDir).get
-    val src = TableIO.read(spark, aDir)
-    val copy = spark.createDataFrame(
-      java.util.Arrays.asList(src.collect(): _*), src.schema)
-    TableIO.write(copy, aDir, "assignment", "deadbeef", 0L, m.extra)
-    val ex2 = intercept[IllegalArgumentException] {
-      IvfIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    }
-    assert(ex2.getMessage.contains("hash chain broken"))
   }
 }

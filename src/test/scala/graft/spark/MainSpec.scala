@@ -135,7 +135,7 @@ class MainSpec extends AnyFunSuite {
     assert(res.agg(max("rnk")).first().getLong(0) <= 5L)
     // the CLI answer is the operator's answer: same store queried directly
     val (direct, pinned) = graft.pipeline.IvfIndex.topKWithHandle(
-      spark, store, col("vec_id") < 3, 2, 5)
+      spark, store, Seq(0L, 1L, 2L).toDF("vec_id"), 2, 5)
     try assert(res.orderBy("probe_id", "rnk").collect().map(_.toSeq).toSeq ==
       direct.collect().map(_.toSeq).toSeq)
     finally pinned.foreach(_.unpersist(blocking = false))
@@ -192,7 +192,7 @@ class MainSpec extends AnyFunSuite {
     assert(res.select("probe_id").distinct().count() == 2)
     assert(res.agg(max("rnk")).first().getLong(0) <= 5L)
     // the CLI answer is the operator's answer
-    val (direct, pinned) = graft.pipeline.MipsIndex.topKWithHandleIds(
+    val (direct, pinned) = graft.pipeline.MipsIndex.topKWithHandle(
       spark, store, Seq(0L, 1000000L).toDF("vec_id"), 5)
     try assert(res.collect().map(_.toSeq).toSet ==
       direct.collect().map(_.toSeq).toSet)

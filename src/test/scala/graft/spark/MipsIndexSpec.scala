@@ -11,12 +11,18 @@ import graft.sources.TableIO
   * what the in-memory operator returns over the same vectors and plan (the
   * Q-transform needs no maxnorm, so probe bits against the store are the
   * build-time bits), resume must recompute nothing, a plan change must
-  * invalidate only the bits stage, and partial stores fail fast. */
+  * invalidate only the bits stage. The fail-fast validation of a partial
+  * or mixed-generation store is pinned for both vector stores by
+  * graft.pipeline.VectorStoreSpec. */
 class MipsIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
   private val plan = MipsPlan(3, 16, 6)
+
+  /** The (vec_id) probe relation of ids 0 until n — the store query's form. */
+  private def ids(n: Long): org.apache.spark.sql.DataFrame =
+    spark.range(n).select(col("id").as("vec_id"))
 
   private def tmpDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft-mips-store").toFile
@@ -30,7 +36,7 @@ class MipsIndexSpec extends AnyFunSuite {
     assert(r1.recomputedStages == Seq("vectors", "bits"))
     assert(r1.plan == plan)
 
-    val (store, pinned) = MipsIndex.topKWithHandle(spark, dir, col("vec_id") < 5, k = 10)
+    val (store, pinned) = MipsIndex.topKWithHandle(spark, dir, ids(5), k = 10)
     val fromStore = try store.collect().map(_.toSeq).toSeq
       finally pinned.foreach(_.unpersist(blocking = false))
     val e = emb.select(col("vec_id"), GraftFunctions.quantize(col("embedding")).as("v"))
@@ -92,7 +98,7 @@ class MipsIndexSpec extends AnyFunSuite {
     // the rows).
     val dirB = tmpDir()
     MipsIndex.build(spark, emb, dirB, Some(plan))
-    val probe = col("vec_id").isInCollection(deltaIds :+ 7L)
+    val probe = (deltaIds :+ 7L).toDF("vec_id")
     val (a, pa) = MipsIndex.topKWithHandle(spark, dirA, probe, k = 10)
     val fromAppend = try a.collect().map(_.toSeq).toSet
       finally pa.foreach(_.unpersist(blocking = false))
@@ -102,35 +108,27 @@ class MipsIndexSpec extends AnyFunSuite {
       finally pb.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
     assert(fromAppend.nonEmpty && fromAppend == fromRebuild)
-
-    // ids-relation query form (the CLI posture) ≡ the filter form
-    val (c, pc) = MipsIndex.topKWithHandleIds(
-      spark, dirA, (deltaIds :+ 7L).toDF("vec_id"), k = 10)
-    val fromIds = try c.collect().map(_.toSeq).toSet
-      finally pc.foreach(_.unpersist(blocking = false))
-    spark.catalog.clearCache()
-    assert(fromIds == fromAppend)
   }
 
   test("empty probe set short-circuits before any broadcast (filter and ids forms)") {
     import spark.implicits._
     val dir = tmpDir()
     MipsIndex.build(spark, emb, dir, Some(plan))
-    val (populated, pp) = MipsIndex.topKWithHandle(spark, dir, col("vec_id") < 3)
+    val (populated, pp) = MipsIndex.topKWithHandle(spark, dir, ids(3))
     val popSchema = populated.schema
     pp.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
-    // filter form
-    val (e1, p1) = MipsIndex.topKWithHandle(spark, dir, col("vec_id") < 0)
+    // filter form: the in-memory entry over the stored vectors
+    val (e1, p1) = SignAlshRetrieval.topKWithHandle(
+      TableIO.read(spark, s"$dir/vectors"), plan, col("vec_id") < 0, 10)
     try {
       assert(e1.schema == popSchema, s"${e1.schema} != $popSchema")
       assert(e1.count() == 0)
       assert(!e1.queryExecution.optimizedPlan.toString.toLowerCase.contains("broadcast"))
     } finally p1.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
-    // ids-relation form (the CLI posture)
-    val (e2, p2) = MipsIndex.topKWithHandleIds(
-      spark, dir, Seq.empty[Long].toDF("vec_id"))
+    // ids-relation form: the store entry (the CLI posture)
+    val (e2, p2) = MipsIndex.topKWithHandle(spark, dir, Seq.empty[Long].toDF("vec_id"))
     try {
       assert(e2.schema == popSchema)
       assert(e2.count() == 0)
@@ -159,7 +157,7 @@ class MipsIndexSpec extends AnyFunSuite {
     val copy = spark.createDataFrame(
       java.util.Arrays.asList(src.collect(): _*), src.schema)
     TableIO.write(copy, s"$dir/bits", "bits", m.configHash, 0L, m.extra - "m2")
-    val (q, pq) = MipsIndex.topKWithHandle(spark, dir, col("vec_id") < 3)
+    val (q, pq) = MipsIndex.topKWithHandle(spark, dir, ids(3))
     try assert(q.count() > 0) finally pq.foreach(_.unpersist(blocking = false))
     val ex2 = intercept[IllegalStateException] {
       MipsIndex.append(spark, emb.limit(1), dir)
@@ -177,29 +175,6 @@ class MipsIndexSpec extends AnyFunSuite {
       .withColumn("vec_id", col("vec_id") + 5000000L)
     val ra = MipsIndex.append(spark, fresh, dir)
     assert(ra.newVectors == 1L)
-    spark.catalog.clearCache()
-  }
-
-  test("missing stage and broken hash chain fail fast") {
-    val dir = tmpDir()
-    val ex = intercept[IllegalStateException] {
-      MipsIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    }
-    assert(ex.getMessage.contains("no manifest"))
-
-    MipsIndex.build(spark, emb, dir, Some(plan))
-    val bDir = s"$dir/bits"
-    val m = TableIO.readManifest(bDir).get
-    val src = TableIO.read(spark, bDir)
-    // materialized to driver rows first: writing a stage from its own lazy
-    // read would overwrite the path mid-scan
-    val copy = spark.createDataFrame(
-      java.util.Arrays.asList(src.collect(): _*), src.schema)
-    TableIO.write(copy, bDir, "bits", "deadbeef", 0L, m.extra)
-    val ex2 = intercept[IllegalArgumentException] {
-      MipsIndex.topKWithHandle(spark, dir, col("vec_id") < 5)
-    }
-    assert(ex2.getMessage.contains("hash chain broken"))
     spark.catalog.clearCache()
   }
 }
