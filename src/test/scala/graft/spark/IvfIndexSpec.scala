@@ -10,8 +10,9 @@ import graft.sources.TableIO
   * input+config must recompute NOTHING, an nCells change must invalidate
   * only centroids+assignment (the quantized vectors stage — typically the
   * bulk of the bytes — stays valid), an input change must invalidate the
-  * whole chain. The fail-fast validation of a partial or mixed-generation
-  * store is pinned for both vector stores by graft.pipeline.VectorStoreSpec. */
+  * whole chain, and a partial/mixed-generation store must fail fast (the
+  * full validator matrix runs for both vector stores in
+  * graft.pipeline.VectorStoreSpec). */
 class IvfIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -164,5 +165,70 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(r.droppedDupOrStored == delta.count(), "the intra-batch copies counted as dropped")
     val stored = TableIO.read(spark, s"$dir/inc-1/vectors")
     assert(stored.count() == stored.select("vec_id").distinct().count())
+  }
+
+  test("append validation: partial inc, gap, and base-rebuilt-under-other-config fail fast") {
+    val base = emb.where(col("vec_id") % 5 =!= 0)
+    val delta = emb.where(col("vec_id") % 5 === 0)
+    val dir = tmpDir()
+    IvfIndex.build(spark, base, dir, nCells = 23)
+    IvfIndex.append(spark, delta, dir)
+    // partial: drop the inc assignment manifest
+    val mf = java.nio.file.Paths.get(s"$dir/inc-1/assignment/_manifest.json")
+    val saved = java.nio.file.Files.readAllBytes(mf)
+    java.nio.file.Files.delete(mf)
+    val e1 = intercept[IllegalArgumentException] {
+      IvfIndex.topKWithHandle(spark, dir, ids(5))
+    }
+    assert(e1.getMessage.contains("PARTIAL") && e1.getMessage.contains("inc-1"))
+    java.nio.file.Files.write(mf, saved)
+    // gap: rename inc-1 to inc-2
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(s"$dir/inc-1"), java.nio.file.Paths.get(s"$dir/inc-2"))
+    val e2 = intercept[IllegalArgumentException] {
+      IvfIndex.topKWithHandle(spark, dir, ids(5))
+    }
+    assert(e2.getMessage.contains("GAP"))
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(s"$dir/inc-2"), java.nio.file.Paths.get(s"$dir/inc-1"))
+    // a stray inc-0 (never engine-written — appends number from 1) must be
+    // ignored like any other stray, not read as "inc-1 is missing";
+    // inc-01 parses to a valid number — the canonical-form guard ignores it
+    // rather than letting it duplicate the real inc-1
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/inc-0"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/inc-01"))
+    val (okDf, okPinned) = IvfIndex.topKWithHandle(spark, dir, ids(5))
+    assert(okDf.count() > 0)
+    okPinned.foreach(_.unpersist(blocking = false))
+    // base rebuilt under a different nCells: the append no longer chains
+    IvfIndex.build(spark, base, dir, nCells = 31)
+    val e3 = intercept[IllegalArgumentException] {
+      IvfIndex.topKWithHandle(spark, dir, ids(5))
+    }
+    assert(e3.getMessage.contains("DIFFERENT base generation"))
+  }
+
+  test("missing stage and broken hash chain fail fast") {
+    val dir = tmpDir()
+    val ex = intercept[IllegalStateException] {
+      IvfIndex.topKWithHandle(spark, dir, ids(5))
+    }
+    assert(ex.getMessage.contains("no manifest"))
+
+    IvfIndex.build(spark, emb, dir, nCells = 23)
+    // simulate a mixed-generation store: the assignment stage rewritten
+    // under some other chain (here: just a wrong stored hash). The data is
+    // materialized to driver rows first — writing a stage from its own lazy
+    // read would overwrite the path mid-scan.
+    val aDir = s"$dir/assignment"
+    val m = TableIO.readManifest(aDir).get
+    val src = TableIO.read(spark, aDir)
+    val copy = spark.createDataFrame(
+      java.util.Arrays.asList(src.collect(): _*), src.schema)
+    TableIO.write(copy, aDir, "assignment", "deadbeef", 0L, m.extra)
+    val ex2 = intercept[IllegalArgumentException] {
+      IvfIndex.topKWithHandle(spark, dir, ids(5))
+    }
+    assert(ex2.getMessage.contains("hash chain broken"))
   }
 }
