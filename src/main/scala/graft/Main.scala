@@ -216,7 +216,7 @@ object Main {
           s"the config); got: ${flags.mkString(" ")}")
         usage()
       }
-    def printStages(stages: Seq[graft.pipeline.CheckpointedDedup.StageResult]): Unit =
+    def printStages(stages: Seq[graft.pipeline.StageResult]): Unit =
       stages.foreach(s => println(
         f"[graft] stage ${s.name}%-15s ${if (s.recomputed) f"${s.millis / 1000.0}%8.1f s" else "  resumed"}"))
     // shared by ivf-query and mips-query: a (vec_id) parquet that

@@ -1,14 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.Rng
-import graft.sources.TableIO
 
-/** The full resumable pipeline over a `pages` table (SURVEY.md §3.2):
-  *
-  *   pages → SHINGLES → SIGNATURES → CANDIDATES → VERIFIED_PAIRS → CLUSTERS
-  *
+/** The full resumable pipeline over a `pages` table ([[DedupStages]]).
   * Every stage is checkpointed via [[TableIO]] (manifest + per-file lineage);
   * a re-run recomputes only stages whose manifest is missing or whose chained
   * config hash changed. A `metrics` table accumulates per-stage wall time,
@@ -18,8 +12,6 @@ import graft.sources.TableIO
   */
 object CheckpointedDedup {
 
-  final case class StageResult(name: String, df: DataFrame, recomputed: Boolean, millis: Long)
-
   final case class RunReport(
       clusters: DataFrame,
       verifiedPairs: DataFrame,
@@ -28,34 +20,9 @@ object CheckpointedDedup {
     def recomputedStages: Seq[String] = stages.filter(_.recomputed).map(_.name)
   }
 
-  private[pipeline] def chainHash(prev: String, stage: String, salt: String): String =
-    java.lang.Long.toHexString(Rng.hashString(0x434B5054L, s"$prev|$stage|$salt"))
-
-  /** The per-stage chained config hashes downstream of the docs stage.
-    * Shared with [[IncrementalDedup]], which recomputes them from the base
-    * run's docs manifest hash to prove the supplied cfg IS the base run's
-    * config — an increment run with a different seed/numHashes/bands would
-    * otherwise silently union signatures from different hash families and
-    * miss every cross-split near-dup (ADVICE r3). */
-  private[pipeline] def chainFrom(h0: String, cfg: DedupConfig): Seq[(String, String)] = {
-    val h1 = chainHash(h0, "shingles", s"${cfg.shingleWords}:${cfg.charShingles}:${cfg.seed}")
-    val h2 = chainHash(h1, "signatures", s"${cfg.numHashes}:${cfg.seed}")
-    // bands + census are checkpointed stages since round 5: bands are
-    // stateless per doc and census counts are ADDITIVE, so an increment can
-    // extend them without the O(corpus) recompute (VERDICT r4 #3)
-    val hb = chainHash(h2, "bands", s"${cfg.bands}:${cfg.seed}")
-    val hc = chainHash(hb, "census", "counts")
-    // saltWindow is in the candidates salt because the stage READS it (gates
-    // salted hot-pair generation) — without it a saltWindow change would
-    // resume from a stale candidates checkpoint and corrupt downstream pairs
-    val h3 = chainHash(hc, "candidates", s"${cfg.maxBucket}:${cfg.saltWindow}")
-    val h4 = chainHash(h3, "verified_pairs", s"${cfg.threshold}")
-    val h5 = chainHash(h4, "clusters", "cc")
-    Seq("shingles" -> h1, "signatures" -> h2, "bands" -> hb, "census" -> hc,
-      "candidates" -> h3, "verified_pairs" -> h4, "clusters" -> h5)
-  }
-
-  /** Run (or resume) the pipeline.
+  /** Run (or resume) the pipeline: [[DedupStages]] over an empty prior,
+    * each stage resumed in place when its manifest carries its chained
+    * config hash.
     *
     * @param pages DataFrame with at least (url STRING, text STRING); doc ids
     *              are derived as the seeded 64-bit hash of url (stable,
@@ -63,14 +30,8 @@ object CheckpointedDedup {
     * @param baseDir checkpoint root; stage tables live at baseDir/<stage>
     */
   def run(spark: SparkSession, pages: DataFrame, cfg: DedupConfig, baseDir: String): RunReport = {
-    // run-or-resume core shared with the index stores (StageRunner)
     val runner = new StageRunner(spark, baseDir)
-    def stage(name: String, hash: String, extra: => Map[String, String] = Map.empty)(
-        compute: => DataFrame): StageResult = runner.stage(name, hash, extra)(compute)
-
-    // each stage's hash salts ONLY the config fields it actually reads, so a
-    // change to (say) the verify threshold leaves upstream checkpoints valid.
-    // The docs stage additionally folds an INPUT FINGERPRINT (row count +
+    // The docs stage folds an INPUT FINGERPRINT (row count +
     // order-independent xor of per-row xxhash64 over url and the FULL text —
     // one pass over data the stage scans anyway) into its hash: pointing the
     // same baseDir at different input must invalidate the whole chain, not
@@ -79,111 +40,24 @@ object CheckpointedDedup {
     // invalidates, wherever in the page it lands. bit_xor over zero rows is
     // NULL → coalesce, so an empty input fingerprints cleanly instead of
     // NPEing.
-    val h0 = chainHash("root", "docs",
+    val h0 = StageRunner.chainHash("root", "docs",
       s"v3:${StageRunner.inputFingerprint(pages, "url", "text")}")
-    val docsStage = stage("docs", h0) {
-      // stable doc id = seeded hash of url (no monotonically_increasing_id —
-      // that is partition-dependent and breaks cross-run determinism), with
-      // birthday collisions detected and rehashed away (DocIds: a 64-bit
-      // url hash alone silently merges ~3×10⁴ doc pairs at 10^12 docs)
-      DocIds.assign(pages).select(col("id"), col("url"), col("text"))
-    }
-
-    val chain = chainFrom(h0, cfg).toMap
-    // codegen shingle/signature kernels (same values as the round-1..4 UDF
-    // forms — checkpoints written by either stay valid)
-    graft.functions.GraftExpressions.register(spark)
-    val h1 = chain("shingles")
-    val shinglesStage = stage("shingles", h1) {
-      docsStage.df.select(col("id"), Dedup.shingleHashes(cfg)(col("text")).as("shingles"))
-    }
-
-    val h2 = chain("signatures")
-    val signaturesStage = stage("signatures", h2) {
-      shinglesStage.df.select(col("id"), Dedup.minhashSig(cfg)(col("shingles")).as("sig"))
-    }
-
-    // BANDS + CENSUS as real checkpoint stages (16 B/row narrow tables):
-    // an increment reuses them additively — new docs write only their own
-    // band rows, and the union census is base + delta (counts are additive)
-    // — instead of recomputing band hashes over the whole union corpus
-    // (VERDICT r4 #3). The census stage manifest carries the skew stats
-    // (cappedBuckets / maxBucketSize), so a resumed run and an increment
-    // read the hot-bucket gate decision without any re-aggregation.
-    val hb = chain("bands")
-    val bandsStage = stage("bands", hb) {
-      Dedup.bands(signaturesStage.df, cfg)
-    }
-
-    val hc = chain("census")
-    var censusStats: Map[String, String] = Map.empty
-    var censusCache: DataFrame = null
-    val censusStage = stage("census", hc, censusStats) {
-      censusCache = Dedup.bucketCensus(bandsStage.df).cache()
-      // count/coalesce, not bare sum/max: over an EMPTY corpus (supported
-      // input — the docs-stage fingerprint coalesces for it) a zero-row
-      // census returns NULL aggregates and getLong would NPE mid-run
-      // (round-6 review)
-      val stats = censusCache.agg(
-        count(when(col("bucket_size") > cfg.maxBucket, 1)).as("capped"),
-        coalesce(max(col("bucket_size")), lit(0L)).as("maxB")).first()
-      censusStats = Map(
-        "cappedBuckets" -> stats.getLong(0).toString,
-        "maxBucketSize" -> stats.getLong(1).toString,
-        "saltWindow" -> cfg.saltWindow.toString)
-      censusCache
-    }
-    if (censusCache != null) censusCache.unpersist(blocking = false)
-    // resume-safe skew stats: from the stage manifest (filled either by the
-    // write above or by a previous run)
-    val skewStats = TableIO.readManifest(s"$baseDir/census").map(_.extra).getOrElse(Map.empty)
-    val capped = skewStats.get("cappedBuckets").map(_.toLong).getOrElse(0L)
-
-    val h3 = chain("candidates")
-    val candidatesStage = stage("candidates", h3, skewStats) {
-      Dedup.candidatePairs(bandsStage.df, censusStage.df, signaturesStage.df, cfg, capped > 0)
-    }
-
-    val h4 = chain("verified_pairs")
-    // VERIFY ID-PRUNE (VERDICT r4 #5, the incremental path's trick applied
-    // to the base run): the verify joins take docs pruned to the candidate
-    // ids, counted from the candidates manifest (Dedup.prunedVerify). The
-    // manifest discloses the pair count and the pruned doc count, which
-    // must stay O(pairs), not O(corpus).
-    var verifyStats: Map[String, String] = Map.empty
-    var prunedDocsCache: DataFrame = null
-    val verifiedStage = stage("verified_pairs", h4, verifyStats) {
-      val nCand = TableIO.readManifest(s"$baseDir/candidates").map(_.rows).getOrElse(-1L)
-      val (verified, prunedDocs) = Dedup.prunedVerify(candidatesStage.df, nCand, docsStage.df, cfg)
-      prunedDocsCache = prunedDocs
-      // verifyPruned is always true now (the verify always prunes); the key
-      // stays so the manifest layout and its readers are unchanged
-      verifyStats = Map(
-        "verifyPruned" -> "true",
-        "verifyPairCount" -> nCand.toString,
-        "verifyPrunedDocs" -> prunedDocs.count().toString)
-      verified
-    }
-    if (prunedDocsCache != null) prunedDocsCache.unpersist(blocking = false)
-
-    val h5 = chain("clusters")
-    val clustersStage = stage("clusters", h5) {
-      ConnectedComponents.run(docsStage.df.select("id"), verifiedStage.df.select("id_a", "id_b"))
-    }
+    val hashes = (("docs" -> h0) +: DedupStages.chainFrom(h0, cfg)).toMap
+    val added = DedupStages.run(spark, runner, pages, cfg, hashes, Map.empty, prior = None)
 
     // metrics table: one row per stage per run (append = run history);
     // richer than StageRunner's basic set — also carries the manifest
     // extras (skew/verify disclosures) and a docs/sec rate
     import spark.implicits._
-    val nDocs = TableIO.readManifest(s"$baseDir/docs").map(_.rows).getOrElse(0L)
-    val metricsDf = runner.stages.toSeq.map { s =>
-      val m = TableIO.readManifest(s"$baseDir/${s.name}")
+    runner.stages.toSeq.map { s =>
+      val m = runner.manifest(s.name)
       (s.name, m.map(_.rows).getOrElse(-1L), s.millis, s.recomputed,
         m.map(_.extra.mkString(";")).getOrElse(""),
-        if (s.millis > 0) nDocs * 1000.0 / s.millis else 0.0)
+        if (s.millis > 0) added.docs * 1000.0 / s.millis else 0.0)
     }.toDF("stage", "rows", "millis", "recomputed", "extra", "docs_per_sec")
-    metricsDf.write.mode("append").parquet(s"$baseDir/metrics")
+      .write.mode("append").parquet(s"$baseDir/metrics")
 
-    RunReport(clustersStage.df, verifiedStage.df, runner.stages.toSeq, nDocs)
+    val stages = runner.stages.toSeq
+    RunReport(stages.last.df, stages.find(_.name == "verified_pairs").get.df, stages, added.docs)
   }
 }

@@ -108,6 +108,31 @@ object Dedup {
   def bucketCensus(bands: DataFrame): DataFrame =
     bands.groupBy("band_hash").agg(count(lit(1)).as("bucket_size"))
 
+  /** A census over nothing earlier: the touched-census form
+    * (band_hash, prev_size, bucket_size) with every `prev_size` 0. */
+  private[pipeline] def withoutPrior(census: DataFrame): DataFrame =
+    census.select(col("band_hash"), lit(0L).as("prev_size"), col("bucket_size"))
+
+  /** Over-cap buckets before and after a snapshot (`prevHot`, `hot`), the
+    * largest bucket, and the in-cap non-singleton buckets (`gate`). */
+  private[pipeline] final case class CensusStats(prevHot: Long, hot: Long, maxBucket: Long, gate: Long)
+
+  /** The census-stats aggregate over a touched census (band_hash,
+    * prev_size, bucket_size): ONE job, and the one over-cap test of the
+    * in-memory and store paths. count/coalesce, not bare sum/max: over an
+    * EMPTY census (an empty corpus is supported input) the aggregates would
+    * be NULL and getLong would NPE mid-run (round-6 review). A census that
+    * is the cache's first action scans in full, so the cache holds every
+    * partition for the joins that read it next. */
+  private[pipeline] def censusStats(touched: DataFrame, cfg: DedupConfig): CensusStats = {
+    val r = touched.agg(
+      count(when(col("prev_size") > cfg.maxBucket, 1)),
+      count(when(col("bucket_size") > cfg.maxBucket, 1)),
+      coalesce(max(col("bucket_size")), lit(0L)),
+      count(when(col("bucket_size").between(2, cfg.maxBucket), 1))).first()
+    CensusStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+  }
+
   /** Stage CANDIDATES: within-bucket pairs via a bucket-key SELF-JOIN,
     * deduped across bands (OR-amplification = any shared band ⇒ candidate).
     *
@@ -120,24 +145,35 @@ object Dedup {
     * [[rawSaltedHotPairs]]; the shuffled `bands` exchange is reused by
     * Catalyst for both join sides.
     *
-    * The one candidate step of the in-memory and the checkpointed pipeline.
-    * `hot` says the census holds an over-cap bucket (the caller knows it
-    * from a census probe or from the census stage's manifest); with
-    * salting on, the RAW in-cap and salted pairs are unioned before ONE
-    * [[dedupPairs]] — the dedup-then-union-then-dedup shape exchanged and
-    * re-aggregated the biggest intermediate (the in-cap pair relation)
-    * twice. With no hot bucket the salted sub-plan is not built at all: it
-    * would be all-empty relations, pure plan weight. */
+    * The one candidate step of the in-memory pipeline and the stores
+    * ([[DedupStages]]: `bands`/`signatures` are a snapshot's new rows,
+    * `census` the touched census, and a `prior` snapshot's band rows,
+    * signatures and candidates extend them — see
+    * [[rawCandidatesFromCensus]] for `bounded`). `hot` says the census
+    * holds an over-cap bucket (the caller knows it from the census stats
+    * or the census stage's manifest); with salting on, the RAW in-cap and
+    * salted pairs are unioned before ONE [[dedupPairs]] — the
+    * dedup-then-union-then-dedup shape exchanged and re-aggregated the
+    * biggest intermediate (the in-cap pair relation) twice. With no hot
+    * bucket the salted sub-plan is not built at all: it would be all-empty
+    * relations, pure plan weight. */
   private[pipeline] def candidatePairs(
       bands: DataFrame,
       census: DataFrame,
       signatures: DataFrame,
       cfg: DedupConfig,
-      hot: Boolean): DataFrame = {
-    val raw = rawCandidatesFromCensus(bands, census, cfg)
-    dedupPairs(
-      if (cfg.saltWindow > 0 && hot) raw.union(rawSaltedHotPairs(bands, census, signatures, cfg))
-      else raw)
+      hot: Boolean,
+      prior: Option[DedupStages.Prior] = None,
+      bounded: Boolean = false): DataFrame = {
+    val raw = rawCandidatesFromCensus(bands, census, cfg, prior.map(_.bands), bounded)
+    // the salted window pairing is not decomposable per snapshot: a hot
+    // bucket's FULL membership is read, from the narrow checkpoints
+    val salted =
+      if (cfg.saltWindow > 0 && hot)
+        Some(rawSaltedHotPairs(prior.fold(bands)(_.bands.unionByName(bands)), census,
+          prior.fold(signatures)(_.signatures.unionByName(signatures)), cfg))
+      else None
+    dedupPairs((prior.map(_.candidates) ++ Some(raw) ++ salted).reduce(_ union _))
   }
 
   /** Pair dedup partitioned by id_a ONLY: hashpartitioning(id_a) clusters
@@ -151,29 +187,48 @@ object Dedup {
 
   /** Un-deduped within-bucket pairs — the raw form exists so the salted hot
     * path can union its additions BEFORE the single pair-relation dedup
-    * ([[candidatePairs]]; the same restructure IncrementalDedup applied in
-    * round 5).
+    * ([[candidatePairs]], [[DedupStages]]).
     *
-    * The census gate is forced to a SHUFFLE join: its key set is unbounded
-    * (one row per non-singleton bucket — at 200k docs already ~2M keys, at
-    * 10^12 docs billions), but after the band_hash column narrowed to one
-    * bigint AQE's runtime size estimate started flipping this join to
-    * broadcast, building a multi-hundred-MB HashedRelation on every thread
-    * (measured: OOM at 200k docs × 32 threads × 8g). The hot-key side of
-    * the salted path stays an explicit broadcast — THAT key set (over-cap
-    * buckets) is genuinely tiny. */
+    * `bands` are the new docs' band rows; their pairs come from the bucket
+    * self-join (`id_a < id_b`). `prior` band rows (a snapshot's earlier
+    * docs, ids disjoint from the new ones) pair only with new rows, and are
+    * read only through the gate probe — a bucket with no new member adds
+    * no pair, so the untouched prior corpus is never shuffled.
+    *
+    * The census gate is a SHUFFLE probe unless `bounded` (the caller
+    * counted the gate non-empty and its key set small: see [[probeSide]]).
+    * Over a whole corpus the key set is unbounded (one row per
+    * non-singleton bucket — at 200k docs already ~2M keys, at 10^12 docs
+    * billions), and after the band_hash column narrowed to one bigint AQE's
+    * runtime size estimate started flipping this join to broadcast,
+    * building a multi-hundred-MB HashedRelation on every thread (measured:
+    * OOM at 200k docs × 32 threads × 8g). The hot-key side of the salted
+    * path stays an explicit broadcast — THAT key set (over-cap buckets) is
+    * genuinely tiny. */
   private[pipeline] def rawCandidatesFromCensus(
       bands: DataFrame,
       census: DataFrame,
-      cfg: DedupConfig): DataFrame = {
-    val ok = bands.join(
-      census.where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash")
-        .hint("shuffle_hash"),
-      "band_hash")
-    ok.select(col("band_hash"), col("id").as("id_a"))
-      .join(ok.select(col("band_hash"), col("id").as("id_b")), "band_hash")
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
+      cfg: DedupConfig,
+      prior: Option[DataFrame] = None,
+      bounded: Boolean = false): DataFrame = {
+    val gate = probeSide(
+      census.where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"), bounded)
+    val ok = bands.join(gate, "band_hash")
+    val right = ok.select(col("band_hash"), col("id").as("id_b"))
+    prior.fold(
+      ok.select(col("band_hash"), col("id").as("id_a")).join(right, "band_hash")
+        .where(col("id_a") < col("id_b"))
+        .select("id_a", "id_b")) { old =>
+      // the same self-join with its left side extended by the prior rows,
+      // each of which pairs with every new row: ONE join, each pair once
+      old.select(col("band_hash"), col("id"), lit(true).as("old"))
+        .unionByName(bands.select(col("band_hash"), col("id"), lit(false).as("old")))
+        .join(gate, "band_hash")
+        .select(col("band_hash"), col("id").as("id_a"), col("old"))
+        .join(right.hint("shuffle_hash"), "band_hash")
+        .where(col("old") || col("id_a") < col("id_b"))
+        .select(least(col("id_a"), col("id_b")).as("id_a"), greatest(col("id_a"), col("id_b")).as("id_b"))
+    }
   }
 
   /** Hot-bucket members split into bounded SALT CELLS (explicit skew
@@ -304,8 +359,8 @@ object Dedup {
   private[pipeline] def probeSide(keys: DataFrame, provablySmall: Boolean): DataFrame =
     if (provablySmall) broadcast(keys) else keys.hint("shuffle_hash")
 
-  /** Stage VERIFY as the stores run it, shared by [[CheckpointedDedup]]
-    * (all candidates) and [[IncrementalDedup]] (the unadjudicated ones):
+  /** Stage VERIFY as the stores run it ([[DedupStages]]: a build's
+    * candidates, or an increment's unadjudicated ones):
     * exact Jaccard, then the LCS pass for long exact overlaps (north rule),
     * over docs PRUNED to the ids that appear in `pairs`.
     *
@@ -350,39 +405,27 @@ object Dedup {
   }
 
   /** Internal pipeline assembly, end-to-end: docs(id, text) → verified
-    * near-dup pairs. Returns the verified pairs plus every DataFrame it
-    * pinned: the signatures (reused by banding AND the verify join) and the
-    * bucket census (materialized once by the hot-bucket probe and reused by
-    * the candidate join and, when needed, the salted path). Callers that
-    * fully materialize the result should release them — [[clusters]]
-    * does. */
-  private def verifiedWithCaches(docs: DataFrame, cfg: DedupConfig): (DataFrame, Seq[DataFrame]) = {
+    * near-dup pairs, plus EVERY DataFrame it pinned: the signatures (reused
+    * by banding AND the verify join) and the bucket census (materialized
+    * once by the hot-bucket probe and reused by the candidate join and,
+    * when needed, the salted path). Callers that fully materialize the
+    * result must unpersist all of them — returning only the head silently
+    * leaked the cached census (ADVICE r2); [[clusters]] does. */
+  def nearDupPairsWithHandle(docs: DataFrame, cfg: DedupConfig): (DataFrame, Seq[DataFrame]) = {
     val sigs = signatures(docs, cfg).cache()
     val bandsDf = bands(sigs, cfg)
     val census = bucketCensus(bandsDf).cache()
-    // The salted sub-plan is built ONLY when hot buckets exist (one probe
-    // over the census, which this materializes for reuse downstream). With
+    // The salted sub-plan is built ONLY when hot buckets exist (the census
+    // stats job, which materializes the census for reuse downstream). With
     // no hot buckets the salted branch is all-empty relations — pure plan
     // weight, and AQE's broadcast conversion of empty hashed relations
     // carries a pathological ~0.5 GiB accounting in this runtime that
-    // evicts checkpoint blocks. The checkpointed pipeline gates the same
-    // way on its census stats.
-    // full-scan count, not a limit(1) probe: the probe is the census
-    // cache's FIRST action, and a partial action caches only the partitions
-    // it touched — the gate join would then recompute the rest
-    val hasHot = cfg.saltWindow > 0 &&
-      census.agg(count(when(col("bucket_size") > cfg.maxBucket, 1)).as("c"))
-        .first().getLong(0) > 0
+    // evicts checkpoint blocks. The stores gate the same way on the same
+    // stats.
+    val hasHot = cfg.saltWindow > 0 && censusStats(withoutPrior(census), cfg).hot > 0
     val pairs = candidatePairs(bandsDf, census, sigs, cfg, hasHot)
     (verify(pairs, sigs.select("id", "shingles"), cfg), Seq(sigs, census))
   }
-
-  /** Verified pairs plus EVERY DataFrame the pipeline pinned (signatures and
-    * the materialized bucket census). Callers that fully materialize the
-    * result must unpersist all of them — returning only the head silently
-    * leaked the cached census (ADVICE r2). */
-  def nearDupPairsWithHandle(docs: DataFrame, cfg: DedupConfig): (DataFrame, Seq[DataFrame]) =
-    verifiedWithCaches(docs, cfg)
 
   /** Convenience form that leaves the signature cache pinned for the session
     * (the plan is lazy, so it cannot be released before the caller's action).
@@ -396,7 +439,7 @@ object Dedup {
   /** End-to-end: docs(id, text) → (id, cluster_id) for every doc, cluster_id =
     * min doc id of the duplicate component (singletons map to themselves). */
   def clusters(docs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val (verified, caches) = verifiedWithCaches(docs, cfg)
+    val (verified, caches) = nearDupPairsWithHandle(docs, cfg)
     val out = ConnectedComponents.run(docs.select("id"), verified.select("id_a", "id_b"))
     caches.foreach(_.unpersist(blocking = false)) // CC materialized the edges
     out

@@ -159,9 +159,9 @@ private[pipeline] object IncDirs {
         if (nNew == 0) return VectorStore.AppendReport("", 0L, dropped, Seq.empty)
         second.check(r.getLong(1))
         val k = incs.map(_._1).maxOption.getOrElse(0) + 1
-        val hv = CheckpointedDedup.chainHash(baseChain, s"${saltPrefix}_vectors",
+        val hv = StageRunner.chainHash(baseChain, s"${saltPrefix}_vectors",
           s"$k:v1:${StageRunner.fingerprintString(nNew, r.getLong(2))}")
-        val h2 = CheckpointedDedup.chainHash(hv, s"${saltPrefix}_$secondStage", secondSalt)
+        val h2 = StageRunner.chainHash(hv, s"${saltPrefix}_$secondStage", secondSalt)
         val (incDir, stages) = commit(baseDir, k, what) { tmp =>
           // The two stage writes are INDEPENDENT given the cached newVecs
           // (the second stage used to recompute from the first stage's

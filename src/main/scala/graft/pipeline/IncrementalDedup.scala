@@ -7,55 +7,15 @@ import graft.sources.TableIO
 
 /** INCREMENTAL dedup: extend a completed [[CheckpointedDedup]] run with a
   * batch of newly crawled pages — the production shape at 100 TB, where a
-  * daily increment must not re-hash the petabytes already processed.
-  *
-  * What is reused vs recomputed:
-  *  - REUSED (old text is never re-shingled corpus-wide): the base run's
-  *    `docs` checkpoint, and — since round 5 — its `bands` and `census`
-  *    checkpoints. Bands are stateless per doc and census counts are
-  *    ADDITIVE, so the increment writes only its own band rows + a delta
-  *    census; the union census is materialized only for buckets the
-  *    increment TOUCHES (prev ⋉ touched-keys + delta), and old band rows
-  *    are consulted only for those buckets via a broadcast key probe at
-  *    the columnar checkpoint scan. `signatures` are read back only on the
-  *    rare hot-bucket (salted) path;
-  *  - RECOMPUTED: candidate pairs involving ≥1 new doc (O(new·bucket)).
-  *    Old-old pairs are invariant — a bucket with no new member contributes
-  *    nothing new, and an over-cap bucket can never come back under the
-  *    cap — this is the layer where old and new docs must meet (a new
-  *    page's duplicate may have been crawled a year ago);
-  *  - VERIFIED only for pairs NOT already adjudicated: union candidates
-  *    anti-join the base candidates checkpoint (a pair that was a candidate
-  *    before has a known verdict — in `verified_pairs` or failed the
-  *    threshold; re-verifying it is waste). Verify-stage shingles are
-  *    RE-DERIVED from the pruned pair-docs' text (O(pairs) hashing) rather
-  *    than re-read from the O(corpus) shingle checkpoint — the widest
-  *    relation in the store for the smallest pair set (see run());
-  *  - clusters re-resolved over all ids + the union verified pairs,
-  *    WARM-STARTED from the previous snapshot's clusters (see
-  *    [[previousClusters]]): the rounds pay only for the merges the new
-  *    pairs cause, not for re-deriving every old cluster.
+  * daily increment must not re-hash the petabytes already processed. It
+  * runs [[DedupStages]] over the store's latest snapshot (what each stage
+  * reuses, recomputes and stores, and the two disclosed divergences from a
+  * from-scratch build, are documented there).
   *
   * Storage is APPEND-ONLY, Iceberg-snapshot style: base stage directories
   * are never rewritten; increment k writes its own manifest-tracked stage
-  * tables under `baseDir/inc-<k>/` (docs/shingles/signatures hold ONLY the
-  * new rows; candidates/verified_pairs/clusters hold the authoritative
-  * union — pair/cluster tables are O(dup pairs), not O(corpus text)).
-  * [[readAll]] reconstructs any full relation as base ∪ increments.
-  *
-  * Contracts (and the two disclosed divergences from a from-scratch run):
-  *  - id STABILITY: existing doc ids never change; a new url whose hash
-  *    collides with an existing id is rehashed on the NEW side only
-  *    ([[DocIds.assign]] with the existing ids). A from-scratch run would rehash both
-  *    sides — id stability is the production contract, and the divergence
-  *    fires at ~2⁻⁶⁴ per pair.
-  *  - MONOTONE verified pairs: a previously verified pair is kept even if
-  *    its bucket later crossed the census cap (a from-scratch run would
-  *    drop the over-cap bucket's candidates — verified knowledge is never
-  *    un-learned).
-  *  - Otherwise output == CheckpointedDedup.run over old ∪ new pages
-  *    (equivalence-tested in IncrementalDedupSpec, planted duplicates
-  *    crossing the base/increment split).
+  * tables under `baseDir/inc-<k>/`. [[readAll]] reconstructs any full
+  * relation as base ∪ increments.
   */
 object IncrementalDedup {
 
@@ -74,15 +34,11 @@ object IncrementalDedup {
   private def incHash(stage: String, salt: String): String =
     java.lang.Long.toHexString(Rng.hashString(0x494E4352L /* "INCR" */, s"$stage|$salt"))
 
-  private[graft] val Stages =
-    Seq("docs", "shingles", "signatures", "bands", "census",
-      "candidates", "verified_pairs", "clusters")
-
   /** A full relation as of the latest increment: the base stage unioned
     * with every increment's stage table (for the text-width stages, which
     * are stored incrementally). */
   def readAll(spark: SparkSession, baseDir: String, stage: String): DataFrame =
-    IncDirs.union(spark, baseDir, IncDirs.committed(baseDir, Stages, "increment"), stage)
+    IncDirs.union(spark, baseDir, IncDirs.committed(baseDir, DedupStages.Names, "increment"), stage)
 
   /** The latest snapshot's clusters as warm-start labels for the next
     * increment's connected components, or None (cold start) when that
@@ -104,7 +60,7 @@ object IncrementalDedup {
         TableIO.readManifest(s"$inc/clusters").exists(_.extra.get("family").contains(family))
       case None =>
         TableIO.readManifest(s"$baseDir/docs").exists { docs =>
-          val hash = CheckpointedDedup.chainFrom(docs.configHash, cfg).toMap.apply("clusters")
+          val hash = DedupStages.chainFrom(docs.configHash, cfg).toMap.apply("clusters")
           TableIO.isComplete(s"$baseDir/clusters", hash)
         }
     }
@@ -125,7 +81,7 @@ object IncrementalDedup {
   /** The authoritative pair/cluster tables: the LATEST increment's (each
     * increment writes the full union of these O(pairs)-sized relations). */
   def latest(spark: SparkSession, baseDir: String, stage: String): DataFrame =
-    IncDirs.latest(spark, baseDir, IncDirs.committed(baseDir, Stages, "increment"), stage)
+    IncDirs.latest(spark, baseDir, IncDirs.committed(baseDir, DedupStages.Names, "increment"), stage)
 
   /** The store-consistency gate, shared by [[run]] and by cross-operator
     * readers of the store ([[Decontaminate.pairsFromCheckpoints]]):
@@ -150,14 +106,14 @@ object IncrementalDedup {
     val baseDocs = TableIO.readManifest(s"$baseDir/docs").getOrElse(
       throw new IllegalArgumentException(
         s"base run at $baseDir is missing stage 'docs' — run CheckpointedDedup first"))
-    val chain = CheckpointedDedup.chainFrom(baseDocs.configHash, cfg)
+    val chain = DedupStages.chainFrom(baseDocs.configHash, cfg)
     for ((stage, hash) <- chain if stage != "clusters")
       require(TableIO.isComplete(s"$baseDir/$stage", hash),
         s"base stage '$stage' at $baseDir is missing or was written under a " +
           s"DIFFERENT config than the supplied cfg ($cfg) — a store consumer must " +
           s"use the base run's exact shingle/signature/banding config")
     val family = chain.toMap.apply("verified_pairs")
-    val incs = IncDirs.committed(baseDir, Stages, "increment")
+    val incs = IncDirs.committed(baseDir, DedupStages.Names, "increment")
     for ((_, inc) <- incs) {
       val fam = TableIO.readManifest(s"$inc/signatures").flatMap(_.extra.get("family"))
       require(fam.contains(family),
@@ -174,7 +130,8 @@ object IncrementalDedup {
       cfg: DedupConfig,
       baseDir: String): IncReport = {
     // ONE listing of the store: every prior increment is committed
-    // (validateStore failed fast on a partial, gapped or family-mixed one)
+    // (validateStore failed fast on a partial, gapped or family-mixed one),
+    // and every read below goes through that listing
     val (family, priorIncs) = validateStore(baseDir, cfg)
     // k = max existing number + 1, NOT count + 1: the gap check makes them
     // equal today, but max+1 stays correct the moment the sequence rule
@@ -186,248 +143,29 @@ object IncrementalDedup {
     // nonce, so they accumulate — the documented disk-exhaustion mode)
     IncDirs.warnStray(baseDir)
 
-    // the store was fully validated above (validateStore walked every
-    // increment's manifests): every read below goes through that listing,
-    // skipping the per-call re-listing + re-validation that the PUBLIC
-    // readAll/latest perform for external callers (review r5: run()
-    // triggered the full O(increments × stages) manifest walk at ~8
-    // separate call sites)
-    val oldDocs = IncDirs.union(spark, baseDir, priorIncs, "docs") // (id, url, text)
-    val oldCand = IncDirs.latest(spark, baseDir, priorIncs, "candidates")
-    val oldVerified = IncDirs.latest(spark, baseDir, priorIncs, "verified_pairs")
-
     // The increment input is scanned twice (fingerprint + docs stage).
     // An increment is SMALL by definition (a daily batch, not the corpus),
     // so cache it across the two — the base pipeline deliberately does NOT
     // do this (a 100 TB corpus cannot cache; its fingerprint pass stays a
     // cheap columnar scan).
     val newPagesC = newPages.cache()
-    // input fingerprint of the increment — the ONE shared derivation
-    // (StageRunner.inputFingerprint, identical string to the hand-rolled
-    // agg this replaced; round-6 review: a second copy of the
-    // invalidation-critical formula could silently fork the salts)
     val salt = s"inc$k:${StageRunner.inputFingerprint(newPagesC, "url", "text")}"
+    val prior = new DedupStages.Prior(spark, baseDir, priorIncs,
+      previousClusters(spark, baseDir, priorIncs, cfg, family))
 
     // All eight stages are written into IncDirs.commit's private staging
     // dir and published by one rename: readers see the complete inc-<k> or
     // nothing. A lost race must be re-run against the winner's docs —
-    // blindly retrying with k+1 would re-add them. Every stage goes through
-    // StageRunner (as IncDirs.appendStages does); inside a fresh staging dir
-    // each one recomputes, and its manifest records the full wall and the
-    // family tag.
-    val famTag = Map("family" -> family)
-    val (finalDir, (nNewDocs, nToVerify, nVerifiedTotal)) =
-      IncDirs.commit(baseDir, k, "increment") { dir =>
-        val runner = new StageRunner(spark, dir)
-
-        // 1. fresh docs only (byte-identical-text-per-url contract: a re-crawled
-        // url is the SAME document — dropped here; DocIds.assign collapses
-        // repeats within the batch), with ids unique AND disjoint from every
-        // existing id. `fresh` is cached like newPagesC: the id collision
-        // check and the stage write would each re-run the anti-join against
-        // the corpus-sized url column
-        var freshC: DataFrame = null
-        val newDocsDf = runner.stage("docs", incHash("docs", salt), famTag) {
-          freshC = newPagesC
-            .join(oldDocs.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
-            .cache()
-          DocIds.assign(freshC, existing = Some(oldDocs.select("id")))
-            .select(col("id"), col("url"), col("text"))
-        }.df
-        // the docs stage write materialized both
-        newPagesC.unpersist(blocking = false)
-        if (freshC != null) freshC.unpersist(blocking = false)
-
-        // 2-3. text-width stages for NEW rows only — the whole point. Codegen
-        // kernels, not UDFs: a daily increment barely notices, but a large
-        // BACKFILL increment is corpus-shaped and would pay interpreted-UDF
-        // boxing for every row (VERDICT r4 What's wrong #1).
-        graft.functions.GraftExpressions.register(spark)
-        val newShingles = runner.stage("shingles", incHash("shingles", salt), famTag) {
-          newDocsDf.select(col("id"), Dedup.shingleHashes(cfg)(col("text")).as("shingles"))
-        }.df
-        val newSigs = runner.stage("signatures", incHash("signatures", salt), famTag) {
-          newShingles.select(col("id"), Dedup.minhashSig(cfg)(col("shingles")).as("sig"))
-        }.df
-
-        // 4. ADDITIVE band/census extension (VERDICT r4 #3). Bands are
-        // stateless per doc and census counts are additive, so the increment
-        // writes ONLY its own band rows + its delta census; the union census is
-        // needed ONLY for buckets the increment TOUCHES (old-old pairs are
-        // invariant: a bucket with no new member contributes nothing new, its
-        // in-cap pairs are already in the base candidates checkpoint, and an
-        // over-cap bucket can never come back under the cap). Touched-bucket
-        // census = Σ over snapshots (prev census ⋉ touched keys) + delta —
-        // O(new·bands) work against a columnar scan of the narrow census
-        // checkpoints, instead of the r4 form's O(union) re-banding of every
-        // signature + O(union·bands) census shuffle.
-        val nNewDocs = TableIO.readManifest(s"$dir/docs").map(_.rows).getOrElse(0L)
-        val newBands =
-          runner.stage("bands", incHash("bands", salt), famTag)(Dedup.bands(newSigs, cfg)).df
-        val deltaCensusDf = Dedup.bucketCensus(newBands)
-
-        val prevCensusManifest =
-          TableIO.readManifest(s"${priorIncs.lastOption.fold(baseDir)(_._2)}/census")
-        val prevCapped = prevCensusManifest
-          .flatMap(_.extra.get("cappedBuckets")).map(_.toLong).getOrElse(0L)
-        val prevMaxBucket = prevCensusManifest
-          .flatMap(_.extra.get("maxBucketSize")).map(_.toLong).getOrElse(0L)
-
-        // an EMPTY increment (all re-crawls) writes empty bands/census stages
-        // and touches nothing — guarding here also keeps the explicit key
-        // broadcast below provably non-empty (the phantom-broadcast trap)
-        var touchedCache: DataFrame = null
-        val (touchedCensus, cappedCum, maxBucketCum, touchedHot, gateCount) =
-          if (nNewDocs == 0) (null: DataFrame, prevCapped, prevMaxBucket, 0L, 0L)
-          else {
-            // nNewDocs·bands bounds the touched-key count exactly, with no
-            // extra count() action; a daily increment broadcasts, a
-            // backfill-sized one falls back to a shuffle probe
-            val keys = Dedup.probeSide(deltaCensusDf.select("band_hash"),
-              nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
-            // ONE cached touched census carrying both sizes: prev_size sums
-            // the earlier snapshots, bucket_size adds the delta
-            touchedCache = IncDirs.union(spark, baseDir, priorIncs, "census")
-              .join(keys, "band_hash")
-              .select(col("band_hash"), col("bucket_size").as("prev_size"),
-                col("bucket_size"))
-              .unionByName(deltaCensusDf.select(col("band_hash"), lit(0L).as("prev_size"),
-                col("bucket_size")))
-              .groupBy("band_hash")
-              .agg(sum("prev_size").as("prev_size"), sum("bucket_size").as("bucket_size"))
-              .cache()
-            // and ONE action for every stat the census and candidates steps need
-            val stats = touchedCache.agg(
-              count(when(col("prev_size") > cfg.maxBucket, 1)).as("prevHot"),
-              count(when(col("bucket_size") > cfg.maxBucket, 1)).as("hot"),
-              max(col("bucket_size")).as("maxB"),
-              count(when(col("bucket_size").between(2, cfg.maxBucket), 1)).as("gate")).first()
-            // buckets only grow: cumulative capped count = previous snapshot's
-            // + touched buckets that crossed the cap THIS increment
-            (touchedCache.select("band_hash", "bucket_size"),
-              prevCapped + (stats.getLong(1) - stats.getLong(0)),
-              math.max(prevMaxBucket, stats.getLong(2)),
-              stats.getLong(1),
-              stats.getLong(3))
-          }
-        runner.stage("census", incHash("census", salt), Map(
-          "cappedBuckets" -> cappedCum.toString,
-          "maxBucketSize" -> maxBucketCum.toString,
-          "saltWindow" -> cfg.saltWindow.toString) ++ famTag)(deltaCensusDf)
-
-        val unionCand = {
-          // raw (undeduped) pair additions from this increment; ONE dedupPairs
-          // over oldCand ∪ additions at the end (the r4-#1 exchange-cut
-          // reasoning: the previous shape deduped the in-cap pairs and then
-          // re-exchanged + re-aggregated the whole relation again after the
-          // salted union)
-          val inCapNew: Option[DataFrame] =
-            if (gateCount == 0) None
-            else {
-              val gate = Dedup.probeSide(
-                touchedCensus
-                  .where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"),
-                nNewDocs * cfg.bands <= Dedup.BroadcastKeyLimit)
-              // old band rows are consulted ONLY for gated touched buckets —
-              // a broadcast probe applied at the columnar checkpoint scan,
-              // never a shuffle of the untouched corpus
-              val unionBands =
-                IncDirs.union(spark, baseDir, priorIncs, "bands").unionByName(newBands)
-              Some(unionBands.join(gate, "band_hash")
-                .select(col("band_hash"), col("id").as("id_o"))
-                .join(
-                  newBands.join(gate, "band_hash")
-                    .select(col("band_hash"), col("id").as("id_n"))
-                    .hint("shuffle_hash"),
-                  "band_hash")
-                .where(col("id_o") =!= col("id_n"))
-                .select(
-                  least(col("id_o"), col("id_n")).as("id_a"),
-                  greatest(col("id_o"), col("id_n")).as("id_b")))
-            }
-          // salted recompute ONLY when the delta touched a hot bucket: an
-          // untouched hot bucket's membership is unchanged, so its
-          // (deterministic) salted window pairs are already in the previous
-          // candidates checkpoint — the old cappedCum>0 gate re-ran the whole
-          // salted sub-plan over the union on EVERY increment over a hot store,
-          // including zero-new-docs re-crawls (review r5). The window pairing
-          // is still not decomposable per increment, so the touched hot
-          // buckets' FULL union membership is consulted — but only theirs:
-          // touchedCensus (cumulative counts for touched keys only) is the
-          // census the salted sub-plan sees, so untouched buckets are never hot
-          // keys in it. Bands/signatures come from the narrow checkpoints —
-          // old TEXT is still never re-hashed.
-          val saltedNew: Option[DataFrame] =
-            if (cfg.saltWindow > 0 && touchedHot > 0) {
-              val bandsFull =
-                IncDirs.union(spark, baseDir, priorIncs, "bands").unionByName(newBands)
-              val sigsFull =
-                IncDirs.union(spark, baseDir, priorIncs, "signatures").unionByName(newSigs)
-              // raw form: the final dedupPairs over oldCand ∪ additions below
-              // already dedups, so the salted sub-plan's own pair exchange is
-              // pure waste here
-              Some(Dedup.rawSaltedHotPairs(bandsFull, touchedCensus, sigsFull, cfg))
-            } else None
-          (inCapNew ++ saltedNew).reduceOption(_ unionByName _) match {
-            case None => oldCand
-            case Some(add) => Dedup.dedupPairs(oldCand.unionByName(add))
-          }
-        }
-        val candOut = runner.stage("candidates", incHash("candidates", salt), famTag)(unionCand).df
-        if (touchedCache != null) touchedCache.unpersist(blocking = false)
-
-        // 5. verify ONLY unadjudicated pairs, with docs drawn from the union
-        // (one side of a new pair may be an old doc). The docs are PRUNED to
-        // ids that actually appear in those pairs before the verify joins
-        // (Dedup.prunedVerify): without the prune the sort-merge join sorts
-        // the ENTIRE union shingle relation (O(corpus·shingle-width) — measured
-        // 37 s of a 50 s increment on the text-heavy probe) for a pair set that
-        // is O(new dups). The id prune keeps verify proportional to the work,
-        // which is the whole point of the incremental path. Its shingles are
-        // re-derived from the pruned docs' text: O(pairs) work — NOT a
-        // violation of the never-re-hash-old-text contract, which is about
-        // corpus-proportional cost.
-        // toVerify is CACHED: the driver-side count below materializes it
-        // anyway, and it is otherwise re-evaluated (candidates anti-join and
-        // all) by the id-prune union and the verify join.
-        val toVerify = candOut.join(oldCand.hint("shuffle_hash"), Seq("id_a", "id_b"), "left_anti")
-          .cache()
-        val nToVerify = toVerify.count()
-        val unionDocsAll = oldDocs.unionByName(newDocsDf)
-        var verifyCaches: Seq[DataFrame] = Seq(toVerify)
-        // ZERO unadjudicated pairs — the common daily case — skips the entire
-        // verify sub-plan: building it anyway would run the prune, Jaccard
-        // and LCS joins over an empty pair set (prunedVerify keeps an empty
-        // id set off the broadcast path, the phantom-broadcast shape this
-        // runtime accounts ~513 MiB for).
-        val unionVerified =
-          if (nToVerify == 0) oldVerified
-          else {
-            val (newVerified, prunedDocs) = Dedup.prunedVerify(toVerify, nToVerify, unionDocsAll, cfg)
-            verifyCaches :+= prunedDocs
-            oldVerified.unionByName(newVerified).dropDuplicates("id_a", "id_b")
-          }
-        val verifiedOut =
-          runner.stage("verified_pairs", incHash("verified_pairs", salt), famTag)(unionVerified).df
-        verifyCaches.foreach(_.unpersist(blocking = false)) // stage write materialized them
-
-        // 6. clusters over every id + the union verified pairs: old docs
-        // start at their previous cluster ids, new docs at their own
-        runner.stage("clusters", incHash("clusters", salt), famTag) {
-          val edges = verifiedOut.select("id_a", "id_b")
-          previousClusters(spark, baseDir, priorIncs, cfg, family) match {
-            case Some(prev) =>
-              ConnectedComponents.fromLabels(
-                prev.select("id", "cluster_id").unionByName(
-                  newDocsDf.select(col("id"), col("id").as("cluster_id"))),
-                edges)
-            case None => ConnectedComponents.run(unionDocsAll.select("id"), edges)
-          }
-        }
-
-        (nNewDocs, nToVerify,
-          TableIO.readManifest(s"$dir/verified_pairs").map(_.rows).getOrElse(0L))
-      }
+    // blindly retrying with k+1 would re-add them. Inside a fresh staging
+    // dir every stage recomputes, and its manifest records the full wall
+    // and the family tag.
+    val (finalDir, added) =
+      try IncDirs.commit(baseDir, k, "increment") { dir =>
+        DedupStages.run(spark, new StageRunner(spark, dir), newPagesC, cfg,
+          stage => incHash(stage, salt), Map("family" -> family), Some(prior))
+      } finally newPagesC.unpersist(blocking = false)
+    val nVerifiedTotal =
+      TableIO.readManifest(s"$finalDir/verified_pairs").map(_.rows).getOrElse(0L)
 
     // per-increment telemetry row (the BASE run's history is the separate
     // $baseDir/metrics table): both the pairs adjudicated THIS increment
@@ -438,7 +176,7 @@ object IncrementalDedup {
     // lost the column on new rows (VERDICT r5 What's wrong #1). New readers
     // use [[readMetricsInc]], which merge-schemas across generations.
     import spark.implicits._
-    Seq((s"inc-$k", nNewDocs, nToVerify, nVerifiedTotal, nVerifiedTotal, salt))
+    Seq((s"inc-$k", added.docs, added.pairsVerified, nVerifiedTotal, nVerifiedTotal, salt))
       .toDF("stage", "new_docs", "pairs_adjudicated", "verified_pairs_total",
         "verified_pairs", "salt")
       .withColumn("recomputed", lit(true))
@@ -448,6 +186,6 @@ object IncrementalDedup {
     IncReport(
       TableIO.read(spark, s"$finalDir/clusters"),
       TableIO.read(spark, s"$finalDir/verified_pairs"),
-      finalDir, nNewDocs, nToVerify)
+      finalDir, added.docs, added.pairsVerified)
   }
 }

@@ -169,7 +169,7 @@ object IvfIndex {
   // ---------------------------------------------------------------- store --
 
   final case class BuildReport(
-      stages: Seq[CheckpointedDedup.StageResult], vectors: Long, nCells: Int) {
+      stages: Seq[StageResult], vectors: Long, nCells: Int) {
     def recomputedStages: Seq[String] = stages.filter(_.recomputed).map(_.name)
   }
 

@@ -27,7 +27,7 @@ object MipsIndex {
   import SignAlshRetrieval.MipsPlan
 
   final case class BuildReport(
-      stages: Seq[CheckpointedDedup.StageResult], vectors: Long, plan: MipsPlan) {
+      stages: Seq[StageResult], vectors: Long, plan: MipsPlan) {
     def recomputedStages: Seq[String] = stages.filter(_.recomputed).map(_.name)
   }
 

@@ -52,7 +52,7 @@ object SimHashDedup {
     * sides, and without the cache the (CPU-dense) fingerprint expression
     * re-runs on every scan branch — 4 full SimHash passes over the corpus
     * per query (VERDICT r2, What's wrong #3; the minhash path caches its
-    * signatures for the same reason, Dedup.verifiedWithCaches). The pin is
+    * signatures for the same reason, Dedup.nearDupPairsWithHandle). The pin is
     * released by the caller's post-action `clearCache` (Bench/Verify), like
     * every other per-query cache in this contract.
     *

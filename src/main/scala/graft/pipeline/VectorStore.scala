@@ -37,13 +37,13 @@ private[pipeline] final class VectorStore[C](
     * embedding) — pointing a store at different vectors invalidates the
     * whole chain. */
   def vectorsHash(emb: DataFrame): String =
-    CheckpointedDedup.chainHash("root", s"${prefix}_vectors",
+    StageRunner.chainHash("root", s"${prefix}_vectors",
       s"v1:${StageRunner.inputFingerprint(emb, "vec_id", "embedding")}")
 
   /** Expected hash of every stage after `vectors`, in chain order. */
   def chain(h0: String, cfg: C): Seq[(String, String)] =
     links.scanLeft(("vectors", h0)) { case ((_, prev), (stage, salt)) =>
-      stage -> CheckpointedDedup.chainHash(prev, s"${prefix}_$stage", salt(cfg))
+      stage -> StageRunner.chainHash(prev, s"${prefix}_$stage", salt(cfg))
     }.tail
 
   /** Fail fast on a missing, partial or mixed-generation store:
@@ -79,7 +79,7 @@ private[pipeline] final class VectorStore[C](
           s"generation (the base was rebuilt under other input/config since) " +
           s"— delete the inc-* dirs and re-append, or rebuild the store")
       require(TableIO.readManifest(s"$dir/$second").get.configHash ==
-        CheckpointedDedup.chainHash(vm.configHash, s"${prefix}_append_$second", secondSalt(cfg)),
+        StageRunner.chainHash(vm.configHash, s"${prefix}_append_$second", secondSalt(cfg)),
         s"$what append at $dir: $second does not chain off its own vectors " +
           s"stage (hash chain broken) — quarantine that increment")
     }
@@ -113,7 +113,7 @@ object VectorStore {
 
   final case class AppendReport(
       incDir: String, newVectors: Long, droppedDupOrStored: Long,
-      stages: Seq[CheckpointedDedup.StageResult])
+      stages: Seq[StageResult])
 
   /** A validated store: its config, every tag of the manifest it was read
     * from, the hash of its last base stage (the `base` tag every increment

@@ -8,8 +8,8 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
-import graft.pipeline.{CheckpointedDedup, Decontaminate, Dedup, DedupConfig, IncrementalDedup,
-  IvfIndex, MipsIndex}
+import graft.pipeline.{CheckpointedDedup, Decontaminate, Dedup, DedupConfig, DedupStages,
+  IncrementalDedup, IvfIndex, MipsIndex, StageResult}
 import graft.sources.TableIO
 import graft.testkit.PagesGen
 
@@ -23,8 +23,9 @@ import graft.testkit.PagesGen
   * Protocol, owned here once:
   *  - each core level runs in a fresh session (stop + rebuild) whose
   *    shuffle partitions scale with cores, as a real cluster's would;
-  *  - two warm-up calls at n/8 first — JIT of generated code costs 5-20×
-  *    on the first iterations in this JVM;
+  *  - two warm-up calls at n first — JIT of generated code costs 5-20×
+  *    on the first iterations in this JVM, and calls at n/8 left it cold
+  *    for n (the timed calls kept falling rep after rep);
   *  - the level's time is the min over `reps` calls at n; every call's
   *    wall (`rep_sec`) and their median (`median_sec`) are printed beside
   *    it, so a difference can be judged against the spread of the reps;
@@ -65,7 +66,7 @@ object Probe {
           println(f"[probe] $name cores=$cores n=$m wall=${r.wall}%.2f s")
           r
         }
-        call(math.max(1L, n / 8)); call(math.max(1L, n / 8))
+        call(n); call(n)
         (1 to reps).map(_ => call(n))
       } finally spark.stop()
     }
@@ -196,7 +197,7 @@ object Probe {
         require(rows > 0, "store query returned no rows")
         w
       }
-      def stageMs(st: Seq[CheckpointedDedup.StageResult]) = st.map(s => s.name -> s.millis)
+      def stageMs(st: Seq[StageResult]) = st.map(s => s.name -> s.millis)
       leg(spark) {
         val nCells = math.ceil(math.sqrt(n.toDouble)).toInt
         val (_, ivfBuild) = timed(IvfIndex.build(spark, emb, s"$root/ivf", nCells))
@@ -301,7 +302,7 @@ object Probe {
         r
       }
       val (_, tFull) = timed(CheckpointedDedup.run(spark, all.drop("id"), cfg, s"$dir/full"))
-      val stageMs = IncrementalDedup.Stages.map(s =>
+      val stageMs = DedupStages.Names.map(s =>
         s -> TableIO.readManifest(s"${rep.incDir}/$s").map(_.wallMillis).getOrElse(-1L))
       spark.catalog.clearCache()
       Result(tInc, Seq("rows" -> rep.newDocs, "cost_ratio" -> tInc / tFull,

@@ -12,6 +12,8 @@ import graft.testkit.PagesGen
 class CheckpointedDedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val cfg = DedupConfig(seed = 42L)
+  private val Stages = Seq("docs", "shingles", "signatures", "bands", "census",
+    "candidates", "verified_pairs", "clusters")
 
   private def freshDir(): String = {
     val p = Files.createTempDirectory("graft-ckpt")
@@ -42,8 +44,7 @@ class CheckpointedDedupSpec extends AnyFunSuite {
       assert(rep.clusters.count() == 0L)
       // every stage committed (manifest present) — a resume finds a
       // complete store, not a crash scar
-      Seq("docs", "shingles", "signatures", "bands", "census",
-        "candidates", "verified_pairs", "clusters").foreach { s =>
+      Stages.foreach { s =>
         assert(TableIO.readManifest(s"$dir/$s").isDefined, s"stage $s missing")
       }
     } finally rmrf(dir)
@@ -53,8 +54,7 @@ class CheckpointedDedupSpec extends AnyFunSuite {
     val base = freshDir()
     val pages = PagesGen.pages(spark, 120, 0L, 4)
     val first = CheckpointedDedup.run(spark, pages, cfg, base)
-    assert(first.recomputedStages.toSet ==
-      Set("docs", "shingles", "signatures", "bands", "census", "candidates", "verified_pairs", "clusters"))
+    assert(first.recomputedStages == Stages)
     val c1 = collectClusters(first.clusters)
 
     val second = CheckpointedDedup.run(spark, pages, cfg, base)
@@ -64,18 +64,31 @@ class CheckpointedDedupSpec extends AnyFunSuite {
   }
 
   test("deleting a downstream stage recomputes it (and only it) with identical output") {
-    val base = freshDir()
     val pages = PagesGen.pages(spark, 120, 0L, 4)
-    val first = CheckpointedDedup.run(spark, pages, cfg, base)
-    val c1 = collectClusters(first.clusters)
-    val pairs1 = first.verifiedPairs.collect().map(_.toSeq).toSet
+    // the default config, and one whose 3-doc dup clusters are over the cap
+    // (salted pairs; a resumed census hands its skew stats on from its
+    // manifest)
+    for (c <- Seq(cfg, cfg.copy(maxBucket = 2, saltWindow = 4))) {
+      val base = freshDir()
+      val first = CheckpointedDedup.run(spark, pages, c, base)
+      val c1 = collectClusters(first.clusters)
+      val pairs1 = first.verifiedPairs.collect().map(_.toSeq).toSet
+      assert(pairs1.nonEmpty)
+      if (c.maxBucket == 2)
+        assert(TableIO.readManifest(s"$base/census").get.extra("cappedBuckets").toLong > 0)
 
-    rmrf(s"$base/verified_pairs"); rmrf(s"$base/clusters")
-    val second = CheckpointedDedup.run(spark, pages, cfg, base)
-    assert(second.recomputedStages == Seq("verified_pairs", "clusters"))
-    assert(collectClusters(second.clusters) == c1)
-    assert(second.verifiedPairs.collect().map(_.toSeq).toSet == pairs1)
-    rmrf(base)
+      // every stage in turn, as a crash before its commit leaves it: no
+      // manifest over its data. The re-run resumes every other stage.
+      for (stage <- Stages) {
+        Files.delete(Path.of(s"$base/$stage/_manifest.json"))
+        val again = CheckpointedDedup.run(spark, pages, c, base)
+        assert(again.recomputedStages == Seq(stage), s"after deleting $stage ($c)")
+        assert(collectClusters(again.clusters) == c1, s"clusters after recomputing $stage ($c)")
+        assert(again.verifiedPairs.collect().map(_.toSeq).toSet == pairs1,
+          s"verified pairs after recomputing $stage ($c)")
+      }
+      rmrf(base)
+    }
   }
 
   test("config change invalidates the chain from the affected stage on") {
@@ -98,8 +111,7 @@ class CheckpointedDedupSpec extends AnyFunSuite {
     // same row count, different content (seed) — the input fingerprint in
     // the docs-stage hash must force a full recompute, not a stale resume
     val second = CheckpointedDedup.run(spark, PagesGen.pages(spark, 80, 1L, 4), cfg, base)
-    assert(second.recomputedStages.toSet ==
-      Set("docs", "shingles", "signatures", "bands", "census", "candidates", "verified_pairs", "clusters"))
+    assert(second.recomputedStages == Stages)
     rmrf(base)
   }
 

@@ -350,6 +350,54 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(IncrementalDedup.readAll(spark, dir, "docs").count() == 60L)
   }
 
+  test("a crashed increment's staging dir is warned about, not read; the retry equals an uninterrupted run") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    def copyTree(from: String, to: String): Unit = {
+      val src = Paths.get(from)
+      val walk = Files.walk(src)
+      try walk.iterator().asScala.foreach(p => Files.copy(p, Paths.get(to).resolve(src.relativize(p))))
+      finally walk.close()
+    }
+    val all = PagesGen.pages(spark, 120L, seed = 41L, partitions = 4)
+    val inc = all.where(col("id") >= 60).drop("id")
+    val dir = s"${tmp("graft-inc-retry")}/store"
+    val ref = s"${tmp("graft-inc-retry-ref")}/store"
+    CheckpointedDedup.run(spark, all.where(col("id") < 60).drop("id"), cfg, dir)
+    copyTree(dir, ref)
+
+    // the crash: an increment of OTHER pages staged up to its census, then
+    // died before its pair stages — left behind as a staging dir (made
+    // here as a complete increment of a copy, with its last stages deleted)
+    val other = PagesGen.pages(spark, 40L, seed = 43L, partitions = 4).drop("id")
+    val scratch = s"${tmp("graft-inc-retry-crash")}/store"
+    copyTree(dir, scratch)
+    IncrementalDedup.run(spark, other, cfg, scratch)
+    val stray = s"$dir/inc-1.tmp-crashed0"
+    Files.move(Paths.get(s"$scratch/inc-1"), Paths.get(stray))
+    for (s <- Seq("candidates", "verified_pairs", "clusters")) {
+      val walk = Files.walk(Paths.get(s"$stray/$s"))
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
+    }
+
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val rep = try IncrementalDedup.run(spark, inc, cfg, dir) finally System.setErr(stderr)
+    val want = IncrementalDedup.run(spark, inc, cfg, ref)
+
+    assert(err.toString.contains("stale append staging dir") && err.toString.contains("inc-1.tmp-crashed0"),
+      s"no warning about the stray: $err")
+    assert(Files.exists(Paths.get(stray)), "the stray must be left for the operator")
+    assert(rep.incDir.endsWith("inc-1") && rep.newDocs == 60L)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    for (s <- Seq("docs", "bands", "census", "candidates", "verified_pairs", "clusters"))
+      assert(rows(TableIO.read(spark, s"$dir/inc-1/$s")) == rows(TableIO.read(spark, s"$ref/inc-1/$s")),
+        s"inc-1/$s differs from the uninterrupted run")
+    assert(IncrementalDedup.readAll(spark, dir, "docs").count() == 120L)
+    assert(rep.pairsVerified == want.pairsVerified)
+  }
+
   test("a deleted MIDDLE increment is a gap, not a silent doc drop") {
     val all = PagesGen.pages(spark, 90L, seed = 29L, partitions = 4)
     val dir = tmp("graft-inc-gap")
