@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -133,6 +133,12 @@ object Dedup {
     CensusStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
+  /** No rows, with `df`'s schema: a local relation, so the optimizer drops
+    * a join or union side over it and a plan over an empty earlier
+    * snapshot is the plan over none. */
+  private[pipeline] def none(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
+
   /** Stage CANDIDATES: within-bucket pairs via a bucket-key SELF-JOIN,
     * deduped across bands (OR-amplification = any shared band ⇒ candidate).
     *
@@ -146,34 +152,46 @@ object Dedup {
     * Catalyst for both join sides.
     *
     * The one candidate step of the in-memory pipeline and the stores
-    * ([[DedupStages]]: `bands`/`signatures` are a snapshot's new rows,
-    * `census` the touched census, and a `prior` snapshot's band rows,
-    * signatures and candidates extend them — see
-    * [[rawCandidatesFromCensus]] for `bounded`). `hot` says the census
-    * holds an over-cap bucket (the caller knows it from the census stats
-    * or the census stage's manifest); with salting on, the RAW in-cap and
-    * salted pairs are unioned before ONE [[dedupPairs]] — the
-    * dedup-then-union-then-dedup shape exchanged and re-aggregated the
-    * biggest intermediate (the in-cap pair relation) twice. With no hot
-    * bucket the salted sub-plan is not built at all: it would be all-empty
-    * relations, pure plan weight. */
+    * ([[DedupStages]]). `bands`/`signatures` are the new rows and `census`
+    * their (touched) census; an earlier snapshot's band rows, signatures
+    * and candidate pairs extend them, and are empty relations ([[none]])
+    * when there is none. `hot` says the census holds an over-cap bucket
+    * (the caller knows it from the census stats or the census stage's
+    * manifest); with salting on, the RAW in-cap and salted pairs are
+    * unioned before ONE [[dedupPairs]] — the dedup-then-union-then-dedup
+    * shape exchanged and re-aggregated the biggest intermediate (the in-cap
+    * pair relation) twice. With no hot bucket the salted sub-plan is not
+    * built at all: it would be all-empty relations, pure plan weight.
+    *
+    * `gateKeys` is the in-cap gate's key count when the caller has counted
+    * it: an empty gate builds no in-cap join, so no earlier band row is
+    * read, and a small one is broadcast ([[rawCandidatesFromCensus]]). A
+    * snapshot that adds no pair keeps the earlier pairs as they are, with
+    * no re-dedup — an increment with no near-duplicate shuffles nothing of
+    * the prior store. */
   private[pipeline] def candidatePairs(
       bands: DataFrame,
       census: DataFrame,
       signatures: DataFrame,
       cfg: DedupConfig,
       hot: Boolean,
-      prior: Option[DedupStages.Prior] = None,
-      bounded: Boolean = false): DataFrame = {
-    val raw = rawCandidatesFromCensus(bands, census, cfg, prior.map(_.bands), bounded)
+      earlierBands: => DataFrame,
+      earlierSignatures: => DataFrame,
+      earlierPairs: DataFrame,
+      gateKeys: Option[Long]): DataFrame = {
+    val inCap =
+      if (gateKeys.contains(0L)) None
+      else Some(rawCandidatesFromCensus(bands, census, cfg, earlierBands,
+        bounded = gateKeys.exists(_ <= BroadcastKeyLimit)))
     // the salted window pairing is not decomposable per snapshot: a hot
     // bucket's FULL membership is read, from the narrow checkpoints
     val salted =
       if (cfg.saltWindow > 0 && hot)
-        Some(rawSaltedHotPairs(prior.fold(bands)(_.bands.unionByName(bands)), census,
-          prior.fold(signatures)(_.signatures.unionByName(signatures)), cfg))
+        Some(rawSaltedHotPairs(earlierBands.unionByName(bands), census,
+          earlierSignatures.unionByName(signatures), cfg))
       else None
-    dedupPairs((prior.map(_.candidates) ++ Some(raw) ++ salted).reduce(_ union _))
+    (inCap ++ salted).reduceOption(_ union _)
+      .fold(earlierPairs)(added => dedupPairs(earlierPairs.union(added)))
   }
 
   /** Pair dedup partitioned by id_a ONLY: hashpartitioning(id_a) clusters
@@ -187,13 +205,14 @@ object Dedup {
 
   /** Un-deduped within-bucket pairs — the raw form exists so the salted hot
     * path can union its additions BEFORE the single pair-relation dedup
-    * ([[candidatePairs]], [[DedupStages]]).
+    * ([[candidatePairs]]).
     *
-    * `bands` are the new docs' band rows; their pairs come from the bucket
-    * self-join (`id_a < id_b`). `prior` band rows (a snapshot's earlier
-    * docs, ids disjoint from the new ones) pair only with new rows, and are
-    * read only through the gate probe — a bucket with no new member adds
-    * no pair, so the untouched prior corpus is never shuffled.
+    * ONE bucket self-join over the gated rows: a new row pairs with the
+    * later new rows of its bucket (`id_a < id_b`), an earlier row (ids
+    * disjoint from the new ones) with every new row. Earlier rows are read
+    * only through the gate probe — a bucket with no new member adds no
+    * pair. With no earlier rows the union side and the `earlier` flag fold
+    * away, and the plan is the plain self-join.
     *
     * The census gate is a SHUFFLE probe unless `bounded` (the caller
     * counted the gate non-empty and its key set small: see [[probeSide]]).
@@ -209,26 +228,20 @@ object Dedup {
       bands: DataFrame,
       census: DataFrame,
       cfg: DedupConfig,
-      prior: Option[DataFrame] = None,
-      bounded: Boolean = false): DataFrame = {
+      earlierBands: DataFrame,
+      bounded: Boolean): DataFrame = {
     val gate = probeSide(
       census.where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"), bounded)
     val ok = bands.join(gate, "band_hash")
-    val right = ok.select(col("band_hash"), col("id").as("id_b"))
-    prior.fold(
-      ok.select(col("band_hash"), col("id").as("id_a")).join(right, "band_hash")
-        .where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")) { old =>
-      // the same self-join with its left side extended by the prior rows,
-      // each of which pairs with every new row: ONE join, each pair once
-      old.select(col("band_hash"), col("id"), lit(true).as("old"))
-        .unionByName(bands.select(col("band_hash"), col("id"), lit(false).as("old")))
-        .join(gate, "band_hash")
-        .select(col("band_hash"), col("id").as("id_a"), col("old"))
-        .join(right.hint("shuffle_hash"), "band_hash")
-        .where(col("old") || col("id_a") < col("id_b"))
-        .select(least(col("id_a"), col("id_b")).as("id_a"), greatest(col("id_a"), col("id_b")).as("id_b"))
-    }
+    val earlier = col("earlier")
+    earlierBands.join(gate, "band_hash")
+      .select(col("band_hash"), col("id").as("id_a"), lit(true).as("earlier"))
+      .unionByName(ok.select(col("band_hash"), col("id").as("id_a"), lit(false).as("earlier")))
+      .join(ok.select(col("band_hash"), col("id").as("id_b")), "band_hash")
+      .where(earlier || col("id_a") < col("id_b"))
+      .select(
+        when(earlier, least(col("id_a"), col("id_b"))).otherwise(col("id_a")).as("id_a"),
+        when(earlier, greatest(col("id_a"), col("id_b"))).otherwise(col("id_b")).as("id_b"))
   }
 
   /** Hot-bucket members split into bounded SALT CELLS (explicit skew
@@ -423,7 +436,8 @@ object Dedup {
     // evicts checkpoint blocks. The stores gate the same way on the same
     // stats.
     val hasHot = cfg.saltWindow > 0 && censusStats(withoutPrior(census), cfg).hot > 0
-    val pairs = candidatePairs(bandsDf, census, sigs, cfg, hasHot)
+    val pairs = candidatePairs(bandsDf, census, sigs, cfg, hasHot, none(bandsDf), none(sigs),
+      none(bandsDf.select(col("id").as("id_a"), col("id").as("id_b"))), gateKeys = None)
     (verify(pairs, sigs.select("id", "shingles"), cfg), Seq(sigs, census))
   }
 

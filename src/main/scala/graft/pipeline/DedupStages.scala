@@ -34,11 +34,13 @@ import graft.sources.TableIO
   *    after (`bucket_size`). Old-old pairs are invariant: a bucket with no
   *    new member adds nothing, and an over-cap bucket never comes back
   *    under the cap. Skew stats are cumulative;
-  *  - candidates: new–old pairs, through a gate probe over the prior's
-  *    band rows, beside the new–new self-join; salted pairs only when a
-  *    touched bucket is hot (an untouched hot bucket's window pairs are
-  *    already stored), over the touched buckets' full membership from the
-  *    narrow bands/signatures checkpoints; one dedup over prior ∪ new;
+  *  - candidates: the prior's band rows, read through the gate probe,
+  *    extend one side of the new rows' bucket self-join; salted pairs only
+  *    when a touched bucket is hot (an untouched hot bucket's window pairs
+  *    are already stored), over the touched buckets' full membership from
+  *    the narrow bands/signatures checkpoints; one dedup over prior ∪ new.
+  *    With no touched in-cap or hot bucket the prior's pairs stand, and no
+  *    prior band row is read;
   *  - verified_pairs: only pairs the prior has not adjudicated (a prior
   *    candidate has a verdict — kept in `verified_pairs` or failed); prior
   *    verified pairs are always kept, even when their bucket later crossed
@@ -47,6 +49,8 @@ import graft.sources.TableIO
   *  - clusters: connected components warm-started from the prior's
   *    clusters when the entry supplies them ([[ConnectedComponents.fromLabels]]).
   *
+  * Where a step reads the prior, a build reads an empty relation, which
+  * the optimizer folds away: the build runs the plan it would run alone.
   * Otherwise an increment's output equals a build over old ∪ new pages
   * (IncrementalDedupSpec, with planted duplicates crossing the split).
   */
@@ -83,11 +87,12 @@ private[graft] object DedupStages {
 
   /** The store as of its latest snapshot: the text-width stages and the
     * census as base ∪ increments, the pair stages as the latest
-    * snapshot's. `clusters` are warm-start labels, or None (cold start).
+    * snapshot's. `labels` start connected components: the warm-start
+    * `clusters` when given, else every stored doc on its own (cold start).
     * Stages are opened when a step first reads them. */
   final class Prior(
       spark: SparkSession, baseDir: String, incs: Seq[(Int, String)],
-      val clusters: Option[DataFrame]) {
+      clusters: Option[DataFrame]) {
     private def union(stage: String) = IncDirs.union(spark, baseDir, incs, stage)
     lazy val docs: DataFrame = union("docs")
     lazy val signatures: DataFrame = union("signatures")
@@ -95,17 +100,22 @@ private[graft] object DedupStages {
     lazy val census: DataFrame = union("census")
     lazy val candidates: DataFrame = IncDirs.latest(spark, baseDir, incs, "candidates")
     lazy val verified: DataFrame = IncDirs.latest(spark, baseDir, incs, "verified_pairs")
+    lazy val labels: DataFrame = clusters.getOrElse(selfLabels(docs)).select("id", "cluster_id")
     /** The cumulative skew stats of the latest census manifest. */
     lazy val skew: Map[String, String] =
       TableIO.readManifest(s"${incs.lastOption.fold(baseDir)(_._2)}/census")
         .map(_.extra).getOrElse(Map.empty)
   }
 
+  private def selfLabels(docs: DataFrame): DataFrame = docs.select(col("id"), col("id").as("cluster_id"))
+
   /** What a run added: its new docs and the candidate pairs it verified. */
   final case class Added(docs: Long, pairsVerified: Long)
 
   /** Run (or resume) every stage through `runner`, in order. `hash` gives
-    * each stage's config hash; `tags` are added to every manifest. */
+    * each stage's config hash; `tags` are added to every manifest. With a
+    * prior, `pages` (cached by the increment entry) is released once the
+    * docs stage is written. */
   def run(
       spark: SparkSession,
       runner: StageRunner,
@@ -122,6 +132,10 @@ private[graft] object DedupStages {
     val pinned = ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { pinned += df.cache(); df }
     def release(): Unit = { pinned.foreach(_.unpersist(blocking = false)); pinned.clear() }
+    // the prior's relation, or no rows with `like`'s schema: a join or union
+    // side over it folds away, so the step runs the build's plan
+    def earlier(read: Prior => DataFrame, like: => DataFrame): DataFrame =
+      prior.fold(Dedup.none(like))(read)
 
     // 1. docs: stable id = seeded hash of url (no monotonically_increasing_id
     // — partition-dependent), with birthday collisions detected and rehashed
@@ -131,6 +145,7 @@ private[graft] object DedupStages {
     // corpus-sized url column.
     val docs = stage("docs") {
       val fresh = prior.fold(pages) { p =>
+        pinned += pages
         pin(pages.join(p.docs.select("url").hint("shuffle_hash"), Seq("url"), "left_anti"))
       }
       DocIds.assign(fresh, existing = prior.map(_.docs.select("id")))
@@ -193,11 +208,13 @@ private[graft] object DedupStages {
 
     // 6. candidates (the manifest discloses the skew stats)
     val candidates = stage("candidates", skew) {
-      // no new doc, no new pair; an untouched hot bucket's window pairs are
-      // already stored, so only a touched hot bucket re-runs the salting
-      prior.filter(_ => nNew == 0).map(_.candidates).getOrElse(
-        Dedup.candidatePairs(bands.df, touchedCensus, signatures.df, cfg, touchedHot > 0, prior,
-          bounded = prior.isDefined && stats.gate > 0 && nNew * cfg.bands <= Dedup.BroadcastKeyLimit))
+      // an increment counted its gate: with no new doc, or no touched
+      // in-cap bucket and no touched hot one (an untouched hot bucket's
+      // window pairs are already stored), the prior's pairs stand
+      Dedup.candidatePairs(bands.df, touchedCensus, signatures.df, cfg, touchedHot > 0,
+        earlier(_.bands, bands.df), earlier(_.signatures, signatures.df),
+        earlier(_.candidates, bands.df.select(col("id").as("id_a"), col("id").as("id_b"))),
+        gateKeys = prior.map(_ => stats.gate))
     }
     release()
 
@@ -205,7 +222,7 @@ private[graft] object DedupStages {
     // so the verify is O(pairs), not O(corpus). A build counts its pairs
     // from the candidates manifest (no job); an increment's unadjudicated
     // pairs are cached, since the count materializes them anyway.
-    val allDocs = prior.fold(docs.df)(_.docs.unionByName(docs.df))
+    val allDocs = earlier(_.docs, docs.df).unionByName(docs.df)
     var nPairs = 0L
     var nPrunedDocs = 0L
     val verified = stage("verified_pairs", Map(
@@ -222,21 +239,19 @@ private[graft] object DedupStages {
         val (fresh, prunedDocs) = Dedup.prunedVerify(pairs, nPairs, allDocs, cfg)
         pinned += prunedDocs
         nPrunedDocs = prunedDocs.count()
-        prior.fold(fresh)(_.verified.unionByName(fresh).dropDuplicates("id_a", "id_b"))
+        // disjoint: each prior verified pair is a prior candidate, which
+        // `pairs` excludes
+        earlier(_.verified, fresh).unionByName(fresh)
       }
     }
     release()
 
-    // 8. clusters over every id and the union verified pairs
+    // 8. clusters over every id and the union verified pairs: stored docs
+    // start at the prior's labels, new docs at their own ids
     stage("clusters") {
-      val edges = verified.df.select("id_a", "id_b")
-      prior.flatMap(_.clusters) match {
-        case Some(labels) =>
-          ConnectedComponents.fromLabels(labels.select("id", "cluster_id")
-            .unionByName(docs.df.select(col("id"), col("id").as("cluster_id"))), edges)
-        case None =>
-          ConnectedComponents.run(allDocs.select("id"), edges)
-      }
+      ConnectedComponents.fromLabels(
+        earlier(_.labels, selfLabels(docs.df)).unionByName(selfLabels(docs.df)),
+        verified.df.select("id_a", "id_b"))
     }
     Added(nNew,
       runner.manifest("verified_pairs").flatMap(_.extra.get("verifyPairCount")).map(_.toLong)

@@ -163,7 +163,7 @@ object IncrementalDedup {
       try IncDirs.commit(baseDir, k, "increment") { dir =>
         DedupStages.run(spark, new StageRunner(spark, dir), newPagesC, cfg,
           stage => incHash(stage, salt), Map("family" -> family), Some(prior))
-      } finally newPagesC.unpersist(blocking = false)
+      } finally newPagesC.unpersist(blocking = false) // after a failed or resumed docs stage
     val nVerifiedTotal =
       TableIO.readManifest(s"$finalDir/verified_pairs").map(_.rows).getOrElse(0L)
 

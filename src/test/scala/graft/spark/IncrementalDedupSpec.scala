@@ -297,6 +297,32 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(IncrementalDedup.readAll(spark, dir, "docs").count() == 120L)
   }
 
+  test("an increment with no near-duplicate reads no prior band row and keeps the prior's pairs") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val all = PagesGen.pages(spark, 80L, seed = 47L, partitions = 4)
+    val dir = tmp("graft-inc-nodup")
+    CheckpointedDedup.run(spark, all.drop("id"), cfg, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val baseCandidates = rows(TableIO.read(spark, s"$dir/candidates"))
+    val baseVerified = rows(TableIO.read(spark, s"$dir/verified_pairs"))
+    // the stored band rows are gone (their manifest stays): any step that
+    // reads them fails the increment
+    val walk = Files.walk(Paths.get(s"$dir/bands/data"))
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
+    // every word unique to its page: no new page shares a bucket with any
+    // other page, so the in-cap gate is empty and no hot bucket is touched
+    val fresh = (0 until 20).map(i =>
+      (s"https://nodup.example/p$i", (0 until 60).map(j => s"nd${i}w$j").mkString(" ")))
+      .toDF("url", "text")
+    val rep = IncrementalDedup.run(spark, fresh, cfg, dir)
+    assert(rep.newDocs == 20L && rep.pairsVerified == 0L)
+    assert(rows(TableIO.read(spark, s"${rep.incDir}/candidates")) == baseCandidates)
+    assert(rows(rep.verifiedPairs) == baseVerified)
+    assert(rep.clusters.count() == 100L)
+  }
+
   test("a PARTIAL increment (missing stage manifest) fails fast, naming the dir") {
     val all = PagesGen.pages(spark, 80L, seed = 13L, partitions = 4)
     val dir = tmp("graft-inc-partial")
