@@ -779,8 +779,8 @@ object SparkEntry {
       val e = tbl(s, dir, "embeddings")
         .select(col("vec_id"), call_function("graft_quantize", col("embedding")).as("v"))
       val buckets = array((0 until Planes.LpLanes).map { j =>
-        // graft_dot against the foldable coefficient literal — the
-        // dotConst HOF tree runs interpreted per corpus row (same values)
+        // graft_dot against the foldable coefficient literal — a built-in
+        // zip_with/aggregate tree would run interpreted per corpus row
         floor((call_function("graft_dot", col("v"), typedLit(Planes.lpCoeff(j).toSeq))
           + lit(Planes.lpShift(j)))
           .cast("double") / lit(Planes.LpW.toDouble)).cast("long")

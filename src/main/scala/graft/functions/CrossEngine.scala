@@ -159,14 +159,6 @@ object CrossEngine {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
   }
 
-  /** Exact integer dot product of an array<bigint> column with a constant
-    * plane — stays in whole-stage codegen (no UDF). */
-  def dotConst(v: Column, plane: Array[Long]): Column =
-    aggregate(
-      zip_with(v, typedlit(plane.toSeq), (x, y) => x * y),
-      lit(0L),
-      (acc, x) => acc + x)
-
   // ------------------------------------------------------------- simhash-56
 
   /** 56-bit md5-token SimHash (classic Charikar sign-of-summed-projections,

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.core.{MinHasher, Rng, Similarities}
+import graft.core.{MinHasher, Rng}
 
 /** Column-level functions of the engine.
   *
@@ -77,12 +77,6 @@ object GraftFunctions extends Serializable {
     udf((text: String) =>
       if (text == null) Array.empty[Long] else wordNgramHashSet(text, n, seed))
 
-  /** Char-n-gram twin of [[shingleHashesUdf]] — REFERENCE form only
-    * (pipeline: `graft_char_shingle_hashes`). */
-  def charShingleHashesUdf(n: Int, seed: Long): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) =>
-      if (text == null) Array.empty[Long] else shingleHashSet(charNgrams(text, n), seed))
-
   // ------------------------------------------------------------- signatures
 
   /** MinHash signature: all k lanes in one pass (op #2 of SURVEY §2.a). */
@@ -106,13 +100,6 @@ object GraftFunctions extends Serializable {
     }
     out
   }
-
-  /** Exact Jaccard on two sorted-distinct shingle-hash arrays — the
-    * verify-stage ground truth (J(∅,∅)=0, similarities.jl:230-238).
-    * REFERENCE form only (pipeline: codegen `graft_jaccard_sorted`). */
-  val jaccardSortedUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((a: Array[Long], b: Array[Long]) =>
-      if (a == null || b == null) 0.0 else Similarities.jaccardSorted(a, b))
 
   // (Text SimHash lives in CrossEngine.SimHash56 — the oracled md5-token
   // form used by SimHashDedup/NearDupStream; the vector form is

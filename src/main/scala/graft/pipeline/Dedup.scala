@@ -153,10 +153,14 @@ object Dedup {
     *
     * The one candidate step of the in-memory pipeline and the stores
     * ([[DedupStages]]). `bands`/`signatures` are the new rows and `census`
-    * their (touched) census; an earlier snapshot's band rows, signatures
-    * and candidate pairs extend them, and are empty relations ([[none]])
-    * when there is none. `hot` says the census holds an over-cap bucket
-    * (the caller knows it from the census stats or the census stage's
+    * their (touched) census; an earlier snapshot's band rows and signatures
+    * extend them, and are empty relations ([[none]]) when there is none.
+    * Returns only the pairs this snapshot ADDS: every in-cap pair holds a
+    * new id (new ids are disjoint from stored ones, [[DocIds.assign]]), so
+    * none was an earlier candidate; a salted pair can re-pair two earlier
+    * docs, so the salted pairs are anti-joined to `earlierPairs`, which is
+    * read only then. `hot` says the census holds an over-cap bucket (the
+    * caller knows it from the census stats or the census stage's
     * manifest); with salting on, the RAW in-cap and salted pairs are
     * unioned before ONE [[dedupPairs]] — the dedup-then-union-then-dedup
     * shape exchanged and re-aggregated the biggest intermediate (the in-cap
@@ -166,9 +170,8 @@ object Dedup {
     * `gateKeys` is the in-cap gate's key count when the caller has counted
     * it: an empty gate builds no in-cap join, so no earlier band row is
     * read, and a small one is broadcast ([[rawCandidatesFromCensus]]). A
-    * snapshot that adds no pair keeps the earlier pairs as they are, with
-    * no re-dedup — an increment with no near-duplicate shuffles nothing of
-    * the prior store. */
+    * snapshot that adds no pair returns no rows — an increment with no
+    * near-duplicate reads nothing of the prior store's pairs or bands. */
   private[pipeline] def candidatePairs(
       bands: DataFrame,
       census: DataFrame,
@@ -177,7 +180,7 @@ object Dedup {
       hot: Boolean,
       earlierBands: => DataFrame,
       earlierSignatures: => DataFrame,
-      earlierPairs: DataFrame,
+      earlierPairs: => DataFrame,
       gateKeys: Option[Long]): DataFrame = {
     val inCap =
       if (gateKeys.contains(0L)) None
@@ -188,10 +191,11 @@ object Dedup {
     val salted =
       if (cfg.saltWindow > 0 && hot)
         Some(rawSaltedHotPairs(earlierBands.unionByName(bands), census,
-          earlierSignatures.unionByName(signatures), cfg))
+          earlierSignatures.unionByName(signatures), cfg)
+          .join(earlierPairs.hint("shuffle_hash"), Seq("id_a", "id_b"), "left_anti"))
       else None
-    (inCap ++ salted).reduceOption(_ union _)
-      .fold(earlierPairs)(added => dedupPairs(earlierPairs.union(added)))
+    (inCap ++ salted).reduceOption(_ union _).map(dedupPairs)
+      .getOrElse(none(bands.select(col("id").as("id_a"), col("id").as("id_b"))))
   }
 
   /** Pair dedup partitioned by id_a ONLY: hashpartitioning(id_a) clusters
@@ -207,10 +211,13 @@ object Dedup {
     * path can union its additions BEFORE the single pair-relation dedup
     * ([[candidatePairs]]).
     *
-    * ONE bucket self-join over the gated rows: a new row pairs with the
-    * later new rows of its bucket (`id_a < id_b`), an earlier row (ids
-    * disjoint from the new ones) with every new row. Earlier rows are read
-    * only through the gate probe — a bucket with no new member adds no
+    * ONE bucket self-join over the gated rows: the earlier rows (ids
+    * disjoint from the new ones), flagged, and the new rows pass the gate
+    * probe once, as one relation; its new rows are the join's right side
+    * (the optimizer pushes that side's filter below the probe, so the plan
+    * probes the new rows once more for it, unless they are the only rows).
+    * A new row pairs with the later new rows of its bucket (`id_a < id_b`),
+    * an earlier row with every new row. A bucket with no new member adds no
     * pair. With no earlier rows the union side and the `earlier` flag fold
     * away, and the plan is the plain self-join.
     *
@@ -232,12 +239,12 @@ object Dedup {
       bounded: Boolean): DataFrame = {
     val gate = probeSide(
       census.where(col("bucket_size").between(2, cfg.maxBucket)).select("band_hash"), bounded)
-    val ok = bands.join(gate, "band_hash")
     val earlier = col("earlier")
-    earlierBands.join(gate, "band_hash")
-      .select(col("band_hash"), col("id").as("id_a"), lit(true).as("earlier"))
-      .unionByName(ok.select(col("band_hash"), col("id").as("id_a"), lit(false).as("earlier")))
-      .join(ok.select(col("band_hash"), col("id").as("id_b")), "band_hash")
+    val gated = earlierBands.select(col("band_hash"), col("id"), lit(true).as("earlier"))
+      .unionByName(bands.select(col("band_hash"), col("id"), lit(false).as("earlier")))
+      .join(gate, "band_hash")
+    gated.select(col("band_hash"), col("id").as("id_a"), earlier)
+      .join(gated.where(!earlier).select(col("band_hash"), col("id").as("id_b")), "band_hash")
       .where(earlier || col("id_a") < col("id_b"))
       .select(
         when(earlier, least(col("id_a"), col("id_b"))).otherwise(col("id_a")).as("id_a"),
@@ -372,8 +379,8 @@ object Dedup {
   private[pipeline] def probeSide(keys: DataFrame, provablySmall: Boolean): DataFrame =
     if (provablySmall) broadcast(keys) else keys.hint("shuffle_hash")
 
-  /** Stage VERIFY as the stores run it ([[DedupStages]]: a build's
-    * candidates, or an increment's unadjudicated ones):
+  /** Stage VERIFY as the stores run it ([[DedupStages]]: the candidate
+    * pairs a build or an increment added):
     * exact Jaccard, then the LCS pass for long exact overlaps (north rule),
     * over docs PRUNED to the ids that appear in `pairs`.
     *

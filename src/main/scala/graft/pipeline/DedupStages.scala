@@ -17,10 +17,16 @@ import graft.sources.TableIO
   * stage hashes and the manifest tags.
   *
   * What each stage stores: docs, shingles, signatures and bands hold the
-  * new docs' rows and the census the new docs' bucket counts (counts are
-  * ADDITIVE: a full census is the sum over snapshots); candidates,
-  * verified_pairs and clusters hold the union (O(dup pairs), not
-  * O(corpus text)). Old text is never re-shingled.
+  * new docs' rows, the census the new docs' bucket counts (counts are
+  * ADDITIVE: a full census is the sum over snapshots) and candidates the
+  * pairs no earlier snapshot holds, so the store's candidates are the
+  * union over snapshots ([[IncrementalDedup.readAll]]); verified_pairs and
+  * clusters hold the union (O(dup pairs), not O(corpus text)), since the
+  * CLI and the benchmark read them as the snapshot. A store whose
+  * increments hold full candidate unions (the earlier layout) still takes
+  * increments: its union read holds duplicate pairs, which the one step
+  * that reads them — the salted pairs' anti-join — does not mind. Old
+  * text is never re-shingled.
   *
   * Per stage, what a prior adds:
   *  - docs: a url already stored is a re-crawl of the same document
@@ -38,14 +44,15 @@ import graft.sources.TableIO
   *    extend one side of the new rows' bucket self-join; salted pairs only
   *    when a touched bucket is hot (an untouched hot bucket's window pairs
   *    are already stored), over the touched buckets' full membership from
-  *    the narrow bands/signatures checkpoints; one dedup over prior ∪ new.
-  *    With no touched in-cap or hot bucket the prior's pairs stand, and no
-  *    prior band row is read;
-  *  - verified_pairs: only pairs the prior has not adjudicated (a prior
-  *    candidate has a verdict — kept in `verified_pairs` or failed); prior
-  *    verified pairs are always kept, even when their bucket later crossed
-  *    the cap (MONOTONE: verified knowledge is never un-learned; a
-  *    from-scratch build would drop the over-cap bucket's candidates);
+  *    the narrow bands/signatures checkpoints, less the prior's pairs.
+  *    With no touched in-cap or hot bucket the stage adds no pair, and no
+  *    prior band row or pair is read;
+  *  - verified_pairs: the pairs this snapshot's candidates stage added,
+  *    since every prior candidate has a verdict (kept in `verified_pairs`
+  *    or failed); prior verified pairs are always kept, even when their
+  *    bucket later crossed the cap (MONOTONE: verified knowledge is never
+  *    un-learned; a from-scratch build would drop the over-cap bucket's
+  *    candidates);
   *  - clusters: connected components warm-started from the prior's
   *    clusters when the entry supplies them ([[ConnectedComponents.fromLabels]]).
   *
@@ -85,10 +92,10 @@ private[graft] object DedupStages {
       s -> StageRunner.chainHash(prev, s, salt(s, cfg))
     }.tail
 
-  /** The store as of its latest snapshot: the text-width stages and the
-    * census as base ∪ increments, the pair stages as the latest
-    * snapshot's. `labels` start connected components: the warm-start
-    * `clusters` when given, else every stored doc on its own (cold start).
+  /** The store as of its latest snapshot: the per-snapshot stages as
+    * base ∪ increments, verified pairs as the latest snapshot's. `labels`
+    * start connected components: the warm-start `clusters` when given,
+    * else every stored doc on its own (cold start).
     * Stages are opened when a step first reads them. */
   final class Prior(
       spark: SparkSession, baseDir: String, incs: Seq[(Int, String)],
@@ -98,7 +105,7 @@ private[graft] object DedupStages {
     lazy val signatures: DataFrame = union("signatures")
     lazy val bands: DataFrame = union("bands")
     lazy val census: DataFrame = union("census")
-    lazy val candidates: DataFrame = IncDirs.latest(spark, baseDir, incs, "candidates")
+    lazy val candidates: DataFrame = union("candidates")
     lazy val verified: DataFrame = IncDirs.latest(spark, baseDir, incs, "verified_pairs")
     lazy val labels: DataFrame = clusters.getOrElse(selfLabels(docs)).select("id", "cluster_id")
     /** The cumulative skew stats of the latest census manifest. */
@@ -210,7 +217,7 @@ private[graft] object DedupStages {
     val candidates = stage("candidates", skew) {
       // an increment counted its gate: with no new doc, or no touched
       // in-cap bucket and no touched hot one (an untouched hot bucket's
-      // window pairs are already stored), the prior's pairs stand
+      // window pairs are already stored), no pair is added
       Dedup.candidatePairs(bands.df, touchedCensus, signatures.df, cfg, touchedHot > 0,
         earlier(_.bands, bands.df), earlier(_.signatures, signatures.df),
         earlier(_.candidates, bands.df.select(col("id").as("id_a"), col("id").as("id_b"))),
@@ -218,31 +225,29 @@ private[graft] object DedupStages {
     }
     release()
 
-    // 7. verify: the docs are PRUNED to the pair ids (Dedup.prunedVerify),
-    // so the verify is O(pairs), not O(corpus). A build counts its pairs
-    // from the candidates manifest (no job); an increment's unadjudicated
-    // pairs are cached, since the count materializes them anyway.
+    // 7. verify the pairs the candidates stage added — exactly the ones no
+    // earlier snapshot adjudicated — counted by its manifest. The docs are
+    // PRUNED to the pair ids (Dedup.prunedVerify), so the verify is
+    // O(pairs), not O(corpus). Zero pairs — the common daily case — writes
+    // the earlier verdicts and builds no verify sub-plan (its prune, Jaccard
+    // and LCS joins over an empty pair set) unless a build needs its schema.
+    // The union is disjoint: each earlier verified pair is an earlier
+    // candidate.
     val allDocs = earlier(_.docs, docs.df).unionByName(docs.df)
-    var nPairs = 0L
+    val nPairs = runner.manifest("candidates").map(_.rows).getOrElse(0L)
     var nPrunedDocs = 0L
     val verified = stage("verified_pairs", Map(
         "verifyPruned" -> "true",
         "verifyPairCount" -> nPairs.toString,
         "verifyPrunedDocs" -> nPrunedDocs.toString)) {
-      val pairs = prior.fold(candidates.df) { p =>
-        pin(candidates.df.join(p.candidates.hint("shuffle_hash"), Seq("id_a", "id_b"), "left_anti"))
-      }
-      nPairs = prior.fold(runner.manifest("candidates").map(_.rows).getOrElse(-1L))(_ => pairs.count())
-      // zero unadjudicated pairs — the common daily case — skips the verify
-      // sub-plan (its prune, Jaccard and LCS joins over an empty pair set)
-      prior.filter(_ => nPairs == 0).map(_.verified).getOrElse {
-        val (fresh, prunedDocs) = Dedup.prunedVerify(pairs, nPairs, allDocs, cfg)
+      lazy val fresh = {
+        val (pairs, prunedDocs) = Dedup.prunedVerify(candidates.df, nPairs, allDocs, cfg)
         pinned += prunedDocs
         nPrunedDocs = prunedDocs.count()
-        // disjoint: each prior verified pair is a prior candidate, which
-        // `pairs` excludes
-        earlier(_.verified, fresh).unionByName(fresh)
+        pairs
       }
+      val kept = earlier(_.verified, fresh)
+      if (nPairs == 0) kept else kept.unionByName(fresh)
     }
     release()
 
@@ -253,8 +258,6 @@ private[graft] object DedupStages {
         earlier(_.labels, selfLabels(docs.df)).unionByName(selfLabels(docs.df)),
         verified.df.select("id_a", "id_b"))
     }
-    Added(nNew,
-      runner.manifest("verified_pairs").flatMap(_.extra.get("verifyPairCount")).map(_.toLong)
-        .getOrElse(0L))
+    Added(nNew, nPairs)
   }
 }

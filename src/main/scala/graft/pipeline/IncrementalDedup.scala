@@ -20,7 +20,7 @@ import graft.sources.TableIO
 object IncrementalDedup {
 
   /** @param pairsVerified pairs ADJUDICATED BY THIS INCREMENT (the
-    *        unadjudicated candidate pairs exact-verified this run) — NOT
+    *        candidate pairs it added, exact-verified this run) — NOT
     *        the store's cumulative verified-pair count, which lives in the
     *        increment's verified_pairs manifest (review r5: the cumulative
     *        number was reported here and read as per-increment work). */
@@ -35,8 +35,8 @@ object IncrementalDedup {
     java.lang.Long.toHexString(Rng.hashString(0x494E4352L /* "INCR" */, s"$stage|$salt"))
 
   /** A full relation as of the latest increment: the base stage unioned
-    * with every increment's stage table (for the text-width stages, which
-    * are stored incrementally). */
+    * with every increment's stage table (for the stages stored per
+    * snapshot: docs through census, and candidates). */
   def readAll(spark: SparkSession, baseDir: String, stage: String): DataFrame =
     IncDirs.union(spark, baseDir, IncDirs.committed(baseDir, DedupStages.Names, "increment"), stage)
 
@@ -78,8 +78,10 @@ object IncrementalDedup {
   def readMetricsInc(spark: SparkSession, baseDir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(s"$baseDir/metrics_inc")
 
-  /** The authoritative pair/cluster tables: the LATEST increment's (each
-    * increment writes the full union of these O(pairs)-sized relations). */
+  /** The authoritative verified_pairs and clusters tables: the LATEST
+    * increment's (each increment writes the full union of these
+    * O(pairs)-sized relations). Candidates are stored per snapshot: read
+    * them through [[readAll]]. */
   def latest(spark: SparkSession, baseDir: String, stage: String): DataFrame =
     IncDirs.latest(spark, baseDir, IncDirs.committed(baseDir, DedupStages.Names, "increment"), stage)
 

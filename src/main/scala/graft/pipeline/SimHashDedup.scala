@@ -19,21 +19,22 @@ import graft.functions.CrossEngine
   */
 object SimHashDedup {
 
-  /** (doc_id, fp): the 56-bit fingerprint column, computed by the native
-    * codegen expression. Null-text docs are filtered — the same exclusion as
-    * [[graft.streaming.NearDupStream]]'s, so stream and batch agree on which
-    * documents exist (a null doc must not masquerade as fingerprint 0). */
-  def fingerprints(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.GraftExpressions.register(spark)
+  /** (doc_id, `keep`…, fp): the 56-bit fingerprint column, computed by the
+    * native codegen expression. Null-text docs are filtered, so batch and
+    * stream ([[graft.streaming.NearDupStream]], which keeps `event_time`)
+    * agree on which documents exist (a null doc must not masquerade as
+    * fingerprint 0). */
+  def fingerprints(docs: DataFrame, keep: String*): DataFrame = {
+    graft.functions.GraftExpressions.register(docs.sparkSession)
     docs
       .where(col("text").isNotNull)
-      .select(col("doc_id"), call_function("graft_simhash56", col("text")).as("fp"))
+      .select(("doc_id" +: keep).map(col) :+
+        call_function("graft_simhash56", col("text")).as("fp"): _*)
   }
 
-  /** One row per (doc, chunk position): (doc_id, fp, chunk_idx, chunk). */
+  /** One row per (doc, chunk position): `fps`' columns, chunk_idx, chunk. */
   def chunks(fps: DataFrame): DataFrame =
-    fps.select(col("doc_id"), col("fp"),
+    fps.select(col("*"),
       posexplode(array((0 until CrossEngine.SimHash56.Chunks).map(i =>
         shiftrightunsigned(col("fp"), i * 8).bitwiseAND(lit(255L))): _*))
         .as(Seq("chunk_idx", "chunk")))

@@ -2,10 +2,10 @@ package graft.streaming
 
 import scala.concurrent.duration.FiniteDuration
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.CrossEngine
+import graft.pipeline.SimHashDedup
 
 /** INCREMENTAL near-duplicate detection over a document stream — the
   * streaming counterpart of [[graft.pipeline.SimHashDedup]], built on
@@ -21,10 +21,11 @@ import graft.functions.CrossEngine
   * chunk's state stops growing and the overflow is counted in `dropped`),
   * so a hot bucket costs O(cap) per arrival, never O(n).
   *
-  * Null-text documents are FILTERED here, exactly as the batch path's
-  * [[graft.pipeline.SimHashDedup.fingerprints]] filters them — the two paths
-  * must exclude the same rows or the stream≡batch equivalence breaks (a null
-  * doc must not bucket with genuine near-zero-fingerprint docs).
+  * Fingerprints and chunks come from the batch path's
+  * [[graft.pipeline.SimHashDedup.fingerprints]] and
+  * [[graft.pipeline.SimHashDedup.chunks]], so both paths exclude the same
+  * null-text rows and bucket the same chunks (the stream≡batch
+  * equivalence).
   *
   * A pair sharing several chunks is emitted once per shared chunk
   * (OR-amplification); consumers dedupe downstream — chaining a stateful
@@ -56,28 +57,6 @@ object NearDupStream {
   final case class BucketState(
       ids: List[Long], fps: List[Long], dropped: Long, maxTs: Long = 0L)
   final case class DupPair(doc_a: Long, doc_b: Long, hamming: Int)
-
-  private def chunkColumns(fp: Column): Column =
-    posexplode(array((0 until CrossEngine.SimHash56.Chunks).map(i =>
-      shiftrightunsigned(fp, i * 8).bitwiseAND(lit(255L))): _*))
-
-  private def fingerprinted(docs: DataFrame): DataFrame = {
-    graft.functions.GraftExpressions.register(docs.sparkSession)
-    docs
-      .where(col("text").isNotNull) // same exclusion as SimHashDedup.fingerprints
-      .withColumn("fp", call_function("graft_simhash56", col("text")))
-  }
-
-  /** (doc_id, text) stream → chunk-keyed rows (same derivation as batch). */
-  def chunked(docs: DataFrame): Dataset[DocChunk] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    fingerprinted(docs)
-      .select(col("doc_id"), col("fp"), chunkColumns(col("fp")).as(Seq("chunk_idx", "chunk")))
-      .select(col("chunk_idx").cast("int").as("chunk_idx"), col("chunk"),
-        col("doc_id"), col("fp"))
-      .as[DocChunk]
-  }
 
   /** The per-bucket state transition, extracted so the timeout branch is
     * directly unit-testable (via `TestGroupState`) — a livelocking
@@ -169,7 +148,7 @@ object NearDupStream {
     val timeoutConf =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    chunked(docs)
+    SimHashDedup.chunks(SimHashDedup.fingerprints(docs)).as[DocChunk]
       .groupByKey(r => ChunkKey(r.chunk_idx, r.chunk))
       .flatMapGroupsWithState(OutputMode.Update, timeoutConf) {
         (_: ChunkKey, rows: Iterator[DocChunk], state: GroupState[BucketState]) =>
@@ -205,15 +184,10 @@ object NearDupStream {
     // NOT drop them, and one would NPE the executor at `event_time.getTime`
     // in the state update. A doc with no timestamp has no place on the
     // retention axis — callers who want it paired must assign one upstream.
-    val watermarked = fingerprinted(
+    SimHashDedup.chunks(SimHashDedup.fingerprints(
       docs.where(col("event_time").isNotNull)
-        .withWatermark("event_time", s"${lateness.toMillis} milliseconds"))
-      .select(col("fp"), col("doc_id"), col("event_time"),
-        chunkColumns(col("fp")).as(Seq("chunk_idx", "chunk")))
-      .select(col("chunk_idx").cast("int").as("chunk_idx"), col("chunk"),
-        col("doc_id"), col("fp"), col("event_time"))
+        .withWatermark("event_time", s"${lateness.toMillis} milliseconds"), "event_time"))
       .as[DocChunkT]
-    watermarked
       .groupByKey(r => ChunkKey(r.chunk_idx, r.chunk))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (_: ChunkKey, rows: Iterator[DocChunkT], state: GroupState[BucketState]) =>

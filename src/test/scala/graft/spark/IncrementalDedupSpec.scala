@@ -217,6 +217,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     CheckpointedDedup.run(spark, crawl(0 until 8), hotCfg, dir)
     assert(TableIO.readManifest(s"$dir/census").get.extra("cappedBuckets").toLong > 0)
     val rep = IncrementalDedup.run(spark, crawl(8 until 12), hotCfg, dir)
+    // the increment stores only the pairs it added, and verified exactly those
+    val baseCandidates = TableIO.read(spark, s"$dir/candidates")
+    val incCandidates = TableIO.read(spark, s"${rep.incDir}/candidates")
+    assert(incCandidates.count() > 0)
+    assert(incCandidates.intersect(baseCandidates).isEmpty, "the increment re-stored base candidates")
+    assert(rep.pairsVerified == incCandidates.count())
     // monotone contract: increment pairs ⊇ a from-scratch union run's pairs
     val fromScratch = CheckpointedDedup.run(
       spark, crawl(0 until 12), hotCfg, tmp("graft-inc-hot-full"))
@@ -269,6 +275,39 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(c1 == c2)
   }
 
+  test("a store whose increments hold full candidate unions (the earlier layout) still takes increments") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    // every bucket hot, so the second increment's salted pairs are
+    // anti-joined against the stored candidates, which here hold each base
+    // pair twice: base ∪ an inc-1 that stores the full union
+    val hotCfg = DedupConfig(seed = 42L, maxBucket = 3, saltWindow = 4)
+    val text = (1 to 40).map(i => s"lay$i").mkString(" ")
+    def crawl(ids: Range) = ids.map(i => (s"https://l.example/p$i", text)).toDF("url", "text")
+    val dir = tmp("graft-inc-layout")
+    val ref = tmp("graft-inc-layout-ref")
+    for (d <- Seq(dir, ref)) {
+      CheckpointedDedup.run(spark, crawl(0 until 8), hotCfg, d)
+      IncrementalDedup.run(spark, crawl(8 until 12), hotCfg, d)
+    }
+    val data = Paths.get(s"$dir/inc-1/candidates/data")
+    val union = s"${tmp("graft-inc-layout-union")}/data"
+    IncrementalDedup.readAll(spark, dir, "candidates").write.parquet(union)
+    val walk = Files.walk(data)
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
+    Files.move(Paths.get(union), data)
+
+    val rep = IncrementalDedup.run(spark, crawl(12 until 16), hotCfg, dir)
+    val want = IncrementalDedup.run(spark, crawl(12 until 16), hotCfg, ref)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rep.pairsVerified > 0 && rep.pairsVerified == want.pairsVerified)
+    assert(rows(TableIO.read(spark, s"${rep.incDir}/candidates")) ==
+      rows(TableIO.read(spark, s"${want.incDir}/candidates")))
+    assert(rows(rep.verifiedPairs) == rows(want.verifiedPairs))
+    assert(rows(rep.clusters) == rows(want.clusters))
+  }
+
   test("an all-recrawl increment (zero new docs) commits cleanly and changes nothing") {
     val n = 80L
     val all = PagesGen.pages(spark, n, seed = 37L, partitions = 4)
@@ -307,18 +346,22 @@ class IncrementalDedupSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     val baseCandidates = rows(TableIO.read(spark, s"$dir/candidates"))
     val baseVerified = rows(TableIO.read(spark, s"$dir/verified_pairs"))
-    // the stored band rows are gone (their manifest stays): any step that
-    // reads them fails the increment
+    // the stored band rows are gone and the candidate rows moved away
+    // (their manifests stay): any step that reads them fails the increment
     val walk = Files.walk(Paths.get(s"$dir/bands/data"))
     try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally walk.close()
+    val aside = Paths.get(s"${tmp("graft-inc-nodup-aside")}/data")
+    Files.move(Paths.get(s"$dir/candidates/data"), aside)
     // every word unique to its page: no new page shares a bucket with any
     // other page, so the in-cap gate is empty and no hot bucket is touched
     val fresh = (0 until 20).map(i =>
       (s"https://nodup.example/p$i", (0 until 60).map(j => s"nd${i}w$j").mkString(" ")))
       .toDF("url", "text")
     val rep = IncrementalDedup.run(spark, fresh, cfg, dir)
+    Files.move(aside, Paths.get(s"$dir/candidates/data"))
     assert(rep.newDocs == 20L && rep.pairsVerified == 0L)
-    assert(rows(TableIO.read(spark, s"${rep.incDir}/candidates")) == baseCandidates)
+    assert(TableIO.readManifest(s"${rep.incDir}/candidates").get.rows == 0L)
+    assert(rows(IncrementalDedup.readAll(spark, dir, "candidates")) == baseCandidates)
     assert(rows(rep.verifiedPairs) == baseVerified)
     assert(rep.clusters.count() == 100L)
   }
